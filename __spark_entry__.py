@@ -1880,9 +1880,11 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold is CodegenFallback and ran on the single-task scan (measured
     # 3.2 s at sf0.1, now 0.6 s). Gram equality classes are unchanged
     # (struct equality == token-window equality, hash applied identically
-    # on both join sides); a NULL text keeps its NULL gram (never joins),
-    # as before. The repartition fans the gram build out of the one-task
-    # local scan; a many-split cluster scan would not need it.
+    # on both join sides). Behaviour correction: a NULL text now gets a
+    # NULL gram and never joins; the old fold gave every NULL-text doc the
+    # shared xxhash64 seed gram, so NULL-text docs could flag each other.
+    # The repartition fans the gram build out of the one-task local scan;
+    # a many-split cluster scan would not need it.
     toks_s = "split(lower(trim(`text`)), '\\\\s+')"
     len_s = f"greatest(size({toks_s}) - {n - 1}, 1)"
     zip_s = "arrays_zip(" + ", ".join(

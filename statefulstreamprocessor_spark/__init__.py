@@ -26,4 +26,9 @@ from the reference — semantics were derived from its observable behavior
 and are cited by file:line in docstrings for parity review.
 """
 
+from .shipping import install_lazy_zip_invalidation
+
 __version__ = "0.1.0"
+
+# engine UDFs unpickle through this import in every Spark Python worker
+install_lazy_zip_invalidation()

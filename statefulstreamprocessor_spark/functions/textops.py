@@ -42,7 +42,6 @@ __all__ = [
 
 _SCRIPT_RE = re.compile(rb"<(script|style)\b.*?</\1>", re.S | re.I)
 _TAG_RE = re.compile(rb"<[^>]*>")
-_WS_RE = re.compile(r"\s+")
 
 
 def extract_text(html_bytes: bytes) -> str:
@@ -58,7 +57,7 @@ def extract_text(html_bytes: bytes) -> str:
     no_tags = _TAG_RE.sub(b" ", no_script)
     text = no_tags.decode("utf-8", errors="replace")
     text = _html.unescape(text)
-    return _WS_RE.sub(" ", text).strip()
+    return " ".join(text.split())
 
 
 @F.pandas_udf(StringType())

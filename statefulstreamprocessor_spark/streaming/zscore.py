@@ -108,10 +108,16 @@ def streaming_rolling_zscore(
     # output-name collision guard (same contract as streaming_quota /
     # streaming asof, ADVICE r06): a key or value column named like an
     # output/internal column would silently clobber or duplicate columns
-    reserved = {ts_col, id_col, "n_obs", "z", "is_anomaly", "__bucket"}
+    outputs = {"n_obs", "z", "is_anomaly", "__bucket"}
+    reserved = {ts_col, id_col, *outputs}
     if reserved & set([*keys_l, value_col]):
         raise ValueError(
             f"keys/value_col may not collide with {sorted(reserved)}"
+        )
+    if outputs & {ts_col, id_col} or ts_col == id_col:
+        raise ValueError(
+            f"ts_col/id_col must be distinct and may not collide with "
+            f"{sorted(outputs)}"
         )
     thr = float(threshold)
     w = int(window_rows)

@@ -210,6 +210,15 @@ def test_streaming_zscore_args(spark):
     zdf = df.selectExpr("user_id", "ts", "event_id", "value AS z")
     with pytest.raises(ValueError, match="collide"):
         streaming_rolling_zscore(zdf, "user_id", "ts", "event_id", "z")
+    # ts_col / id_col may take neither an output column's name nor each
+    # other's
+    with pytest.raises(ValueError, match="ts_col/id_col"):
+        streaming_rolling_zscore(df, "user_id", "ts", "ts", "value")
+    for ts, eid in [("n_obs", "event_id"), ("is_anomaly", "event_id"),
+                    ("ts", "z"), ("ts", "__bucket")]:
+        rdf = df.withColumnRenamed("ts", ts).withColumnRenamed("event_id", eid)
+        with pytest.raises(ValueError, match="ts_col/id_col"):
+            streaming_rolling_zscore(rdf, "user_id", ts, eid, "value")
 
 
 def test_streaming_zscore_null_values_match_batch(spark, tmp_path):

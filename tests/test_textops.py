@@ -1,5 +1,8 @@
 """Edge cases for the canonical extractor and text analysis functions."""
 
+import re
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -32,6 +35,20 @@ from statefulstreamprocessor_spark.functions.textops import (
 )
 def test_extract_text_edges(html, want):
     assert extract_text(html) == want
+
+
+def test_whitespace_collapse_matches_regex_on_every_code_point():
+    """extract_text collapses whitespace exactly as the reference
+    ``re.sub(r"\\s+", " ", text).strip()``: checked for every
+    non-surrogate code point (bar the markup characters ``<`` and ``&``),
+    alone between letters and in one contiguous run."""
+    chars = [
+        chr(c) for c in range(sys.maxunicode + 1)
+        if not 0xD800 <= c <= 0xDFFF and chr(c) not in "<&"
+    ]
+    ws = re.compile(r"\s+")
+    for text in ("a".join(chars), "".join(chars), " " + "".join(chars) + " "):
+        assert extract_text(text.encode()) == ws.sub(" ", text).strip()
 
 
 def test_extract_text_nested_script_not_greedy():
