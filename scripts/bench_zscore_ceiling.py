@@ -1,65 +1,50 @@
 #!/usr/bin/env python3
 """Rows/s ceiling of the streaming rolling z-score's per-row Python
-scoring loop (VERDICT r06 "what's wrong" #3 / next-round #5).
+scoring loop.
 
 Drives the REAL streaming operator (availableNow, parquet source/sink)
 over N synthetic rows at two sizes and reports end-to-end rows/s plus the
 marginal rows/s between the two sizes (fixed pipeline overhead cancels),
-and a pure-Python measurement of the loop body alone (the Decimal
-HALF_UP micro-unit rounding + int-arithmetic frame update) on one core.
+and the operator's own sealed-prefix ``step`` alone (Decimal HALF_UP
+micro-unit rounding + int-arithmetic frame update) over one series on one
+core, without Spark.
 
 Usage: python scripts/bench_zscore_ceiling.py [n_rows]
 """
 from __future__ import annotations
 
-import math
 import os
 import shutil
 import sys
 import tempfile
 import time
-from decimal import ROUND_HALF_UP, Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
 
 
-def pure_loop_rows_per_sec(n: int, w: int = 20) -> float:
-    """The scoring loop body alone (one series, one core)."""
-    import random
+def step_rows_per_sec(n: int, w: int = 20) -> float:
+    """The operator's ``step`` over one sealed series (one core)."""
+    import numpy as np
+    import pandas as pd
 
-    rng = random.Random(1)
-    vals = [rng.uniform(-5, 5) * (10 ** rng.randint(0, 4)) for _ in range(n)]
-    frame: list[tuple[int, int, int | None]] = []
-    s_run = 0
-    q_run = 0
-    min_obs, thr = 5, 3.0
+    from statefulstreamprocessor_spark.streaming.zscore import zscore_spec
+
+    rng = np.random.default_rng(1)
+    sealed = pd.DataFrame(
+        {
+            "__ts": np.arange(n, dtype=np.int64) * 1_000_000,
+            "user_id": np.zeros(n, dtype=np.int64),
+            "event_id": np.arange(n, dtype=np.int64),
+            "value": rng.uniform(-5, 5, n) * 10.0 ** rng.integers(0, 5, n),
+        }
+    )
+    spec = zscore_spec(
+        ["user_id"], "ts", "event_id", "value", w, 5, 3.0, None
+    )
     t0 = time.perf_counter()
-    for i, v in enumerate(vals):
-        y = (
-            None
-            if math.isnan(v)
-            else int(
-                Decimal(repr(v * 1e6)).quantize(
-                    Decimal(1), rounding=ROUND_HALF_UP
-                )
-            )
-        )
-        n_f = len(frame)
-        den2 = n_f * q_run - s_run * s_run
-        if y is not None and n_f >= min_obs and den2 > 0:
-            z = (n_f * y - s_run) / math.sqrt(den2)
-            _ = abs(z) >= thr
-        frame.append((i, i, y))
-        if y is not None:
-            s_run += y
-            q_run += y * y
-        if len(frame) > w:
-            _, _, y0 = frame.pop(0)
-            if y0 is not None:
-                s_run -= y0
-                q_run -= y0 * y0
+    spec.step(sealed, None, n * 1_000_000)
     return n / (time.perf_counter() - t0)
 
 
@@ -134,8 +119,8 @@ def streaming_rows_per_sec(n: int, cores: int = 8) -> float:
 
 
 if __name__ == "__main__":
-    pure = pure_loop_rows_per_sec(min(N, 400_000))
-    print(f"pure python scoring loop (1 core): {pure:,.0f} rows/s")
+    step = step_rows_per_sec(min(N, 400_000))
+    print(f"operator step, no Spark (1 core): {step:,.0f} rows/s")
     small = streaming_rows_per_sec(N // 4)
     big = streaming_rows_per_sec(N)
     marginal = (N - N // 4) / (N / big - (N // 4) / small)

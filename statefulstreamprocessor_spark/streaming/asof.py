@@ -5,28 +5,23 @@ right event on the same key (backward as-of, ties inclusive) where
 ``streaming_enrich`` covers only the stream-static case. Spark's built-in
 stream-stream joins need a bounded time-range condition; the reference's
 gap-record enrichment (``local_stream_buffer.py:280-308``) has no such
-bound — an arbitrary stateful operator, built here on the
-:mod:`sessionize` state discipline:
+bound — an arbitrary stateful operator, built on the sealed-prefix
+skeleton (:mod:`.sealed`: late and seal boundaries, state codec,
+timeouts, bucketing):
 
 * one merged input stream with a side column (``'r'`` = enrichment
-  source, ``'l'`` = rows to enrich), hash-bucketed state groups;
-* rows buffer until the watermark passes their event time (keep
-  ``ts >= wm``, seal strictly below — the engine-wide boundary), then
-  the sealed prefix is walked in (ts, side) order per key: every sealed
+  source, ``'l'`` = rows to enrich; any other value fails the query);
+* the sealed prefix is walked in (ts, side) order per key: every sealed
   left row is emitted exactly once with the latest right row at-or-before
   it, continuing across triggers and restarts via a per-key summary that
   holds ONLY the latest sealed right row (ts + right payload);
-* correctness of the carry: newly sealed rows all have event time at or
-  above every previously sealed row (sealing is watermark-monotonic), so
-  the summary's single row per key IS the complete history a new left
-  row can reach back to;
+* correctness of the carry: sealing is monotone, so the summary's single
+  row per key IS the complete history a new left row can reach back to;
 * ``state_ttl`` (seconds) bounds the summary under key churn exactly as
   in :func:`~.sessionize.streaming_sessionize`: a key idle past the TTL
   forgets its predecessor — a left row arriving after that long a
   silence enriches to NULL (trade-off documented on the batch banded
-  join too);
-* state round-trips as Arrow IPC typed frames; event time lives in the
-  state only as integer microseconds.
+  join too).
 
 Ties among right rows at one timestamp resolve deterministically to the
 row with the MAX right payload (columns compared in ``right_cols``
@@ -46,18 +41,103 @@ merge promoted int64 through float64 and silently corrupted values
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
-from .sessionize import _de_frame, _ser_frame
+from .sealed import Sealed, resolve, sealed_stream, upsert
 
 __all__ = ["streaming_asof_enrich"]
+
+
+def _to_obj(series: pd.Series) -> pd.Series:
+    """Numeric/any series → object dtype with None for missing.
+
+    The carry columns live in object space end to end: pandas merge and
+    np.where never see an int64 column they could promote to float64, so
+    bigint payloads ≥ 2⁵³ survive exactly."""
+    return series.astype(object).where(pd.notna(series), None)
+
+
+def asof_spec(
+    keys: list[str],
+    ts_col: str,
+    left_cols: list[str],
+    right_cols: list[str],
+    right_prefix: str,
+    ttl_us: int | None,
+) -> Sealed:
+    """The sealed-prefix spec of :func:`streaming_asof_enrich`; rows carry
+    ``__side`` (int8: 0 = right, 1 = left, so right sorts first at equal
+    ts — the inclusive tie) and the union of both sides' payloads."""
+    carry = ["__s_ts", *[f"__s_{c}" for c in right_cols]]
+
+    def step(sealed: pd.DataFrame, summ: pd.DataFrame | None, wm_us: int):
+        if summ is None:
+            summ = pd.DataFrame(columns=[*keys, *carry])
+        for c in carry:
+            # Arrow round-trips object int columns back as int64: re-enter
+            # object space before the merge can promote them
+            summ[c] = _to_obj(summ[c])
+        merged = sealed.merge(summ, on=keys, how="left")
+        for c in carry:
+            # merge fills unmatched keys with NaN even in object columns
+            merged[c] = _to_obj(merged[c])
+        side = merged["__side"].to_numpy()
+        n = len(merged)
+        run = (
+            pd.Series(np.where(side == 0, np.arange(n), -1))
+            .groupby([merged[k].to_numpy() for k in keys], sort=False, dropna=False)
+            .cummax()
+            .to_numpy()
+        )
+        is_left = side == 1
+        hi = (run >= 0)[is_left]
+        safe = np.clip(run, 0, None)
+        out = merged.loc[is_left, keys].copy()
+        out[ts_col] = merged.loc[is_left, "__ts"].to_numpy().astype("datetime64[us]")
+        for c in left_cols:
+            out[c] = merged.loc[is_left, c].to_numpy()
+        # the in-batch/carry pick stays in object space end to end —
+        # np.where over object arrays never promotes
+        rts = np.where(
+            hi,
+            merged["__ts"].to_numpy()[safe][is_left].astype(object),
+            merged["__s_ts"].to_numpy()[is_left],
+        )
+        out[f"{right_prefix}{ts_col}"] = pd.to_datetime(
+            pd.Series(rts, dtype=object), unit="us"
+        ).to_numpy()
+        for c in right_cols:
+            v_in = merged[c].to_numpy()[safe][is_left]
+            v_carry = merged[f"__s_{c}"].to_numpy()[is_left]
+            out[f"{right_prefix}{c}"] = np.where(hi, v_in, v_carry)
+        # the batch's last right row per key supersedes the carried one
+        # (newly sealed rows are never older than previously sealed ones)
+        last_rows = merged.loc[side == 0].drop_duplicates(subset=keys, keep="last")
+        if len(last_rows):
+            upd = last_rows[keys].copy()
+            upd["__s_ts"] = last_rows["__ts"].to_numpy().astype(object)
+            for c in right_cols:
+                upd[f"__s_{c}"] = _to_obj(last_rows[c])
+            summ = upsert(summ, upd, keys)
+        return out, summ
+
+    expires_at = None
+    if ttl_us is not None:
+        def expires_at(summ: pd.DataFrame):
+            return pd.to_numeric(summ["__s_ts"]).to_numpy() + (ttl_us + 1)
+
+    payload = list(dict.fromkeys([*left_cols, *right_cols]))
+    # (ts, side, right payload) order: among equal-ts right rows the
+    # payload-MAX sorts last, so both the per-row cummax pick and the
+    # summary's keep="last" adopt the batch asof_join's deterministic tie
+    # rule; a NULL payload field ranks lowest (Spark's asc null ordering)
+    return Sealed(
+        keys, ts_col, ["__side", *payload], ["__side", *right_cols], step, expires_at
+    )
 
 
 def streaming_asof_enrich(
@@ -81,267 +161,35 @@ def streaming_asof_enrich(
     ``<right_prefix><c>`` for each right payload column — identical row
     set to ``asof_join(direction="backward")`` over the same data.
     """
-    if isinstance(keys, str):
-        keys = [keys]
-    reserved = {*keys, ts_col, side_col}
-    bad = reserved & {*left_cols, *right_cols}
+    right_out = [f"{right_prefix}{c}" for c in [ts_col, *right_cols]]
+    keys, n_buckets, ttl_us = resolve(
+        df, keys, n_buckets, state_ttl, [ts_col, *left_cols, *right_out]
+    )
+    bad = {*keys, ts_col, side_col} & {*left_cols, *right_cols}
     if bad:
         raise ValueError(
             f"left_cols/right_cols must be payload columns, not keys/"
             f"ts/side: {sorted(bad)}"
         )
-    # output-name collision guard (ADVICE round-5): a left payload column
-    # literally named like a prefixed right column would be silently
-    # overwritten in the emitted frame and duplicate the output schema
-    out_names = [*keys, ts_col, *left_cols,
-                 f"{right_prefix}{ts_col}",
-                 *[f"{right_prefix}{c}" for c in right_cols]]
-    dups = {n for n in out_names if out_names.count(n) > 1}
-    if dups:
-        raise ValueError(
-            f"output column name collision (left_cols vs "
-            f"{right_prefix!r}-prefixed right columns): {sorted(dups)}"
-        )
-    from ..shipping import ensure_package_shipped
-    from .timebase import session_tz, watermark_to_naive_us
-
-    ensure_package_shipped(df.sparkSession)
-    tz_name = session_tz(df.sparkSession)
-    if n_buckets is None:
-        n_buckets = max(df.sparkSession.sparkContext.defaultParallelism * 8, 16)
-    ttl_us = None if state_ttl is None else int(float(state_ttl) * 1_000_000)
-    keys_l = list(keys)
-    left_l = list(left_cols)
-    right_l = list(right_cols)
-    payload = list(dict.fromkeys([*left_l, *right_l]))
-
     out_schema = StructType(
-        [df.schema[k] for k in keys_l]
+        [df.schema[k] for k in keys]
         + [df.schema[ts_col]]
-        + [df.schema[c] for c in left_l]
+        + [df.schema[c] for c in left_cols]
+        + [StructField(right_out[0], df.schema[ts_col].dataType, True)]
         + [
-            StructField(
-                f"{right_prefix}{ts_col}", df.schema[ts_col].dataType, True
-            )
-        ]
-        + [
-            StructField(f"{right_prefix}{c}", df.schema[c].dataType, True)
-            for c in right_l
+            StructField(name, df.schema[c].dataType, True)
+            for name, c in zip(right_out[1:], right_cols)
         ]
     )
-    state_schema = StructType(
-        [
-            StructField("buf", BinaryType(), True),
-            StructField("summ", BinaryType(), True),
-        ]
+    side = F.col(side_col)
+    with_side = df.withColumn(
+        "__side",
+        F.when(side == "r", F.lit(0).cast("tinyint"))
+        .when(side == "l", F.lit(1).cast("tinyint"))
+        .otherwise(F.raise_error(F.concat(
+            F.lit(f"streaming_asof_enrich: {side_col!r} must be 'l'/'r'; got "),
+            F.coalesce(side.cast("string"), F.lit("NULL")),
+        ))),
     )
-    out_cols = [f.name for f in out_schema.fields]
-    carry_cols = ["__s_ts", *[f"__s_{c}" for c in right_l]]
-
-    def _to_obj(series: pd.Series) -> pd.Series:
-        """Numeric/any series → object dtype with None for missing.
-
-        The carry columns live in object space end to end: pandas merge
-        and np.where never see an int64 column they could promote to
-        float64, so bigint payloads ≥ 2⁵³ survive exactly (ADVICE
-        round-5 medium)."""
-        return series.astype(object).where(pd.notna(series), None)
-
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buf_b, summ_b = state.get
-            buf = _de_frame(buf_b)
-            summ = _de_frame(summ_b)
-            if summ is not None:
-                # Arrow round-trips object int columns back as int64
-                # (nulls → object via integer_object_nulls); re-enter
-                # object space before any merge can promote
-                for c in carry_cols:
-                    summ[c] = _to_obj(summ[c])
-        else:
-            buf, summ = None, None
-
-        # watermark in the delivered rows' naive basis (timebase module)
-        wm_us = watermark_to_naive_us(
-            int(state.getCurrentWatermarkMs()), tz_name
-        )
-        new = [p for p in pdf_iter if len(p)]
-        if new:
-            np_new = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
-            ts_new = (
-                np_new[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
-            )
-            if wm_us > 0:
-                keep = ts_new >= wm_us
-                np_new = np_new.loc[keep].reset_index(drop=True)
-                ts_new = ts_new[keep]
-            if len(np_new):
-                side_vals = np_new[side_col].to_numpy()
-                bad = ~np.isin(side_vals, ("l", "r"))
-                if bad.any():
-                    raise ValueError(
-                        f"streaming_asof_enrich: {side_col!r} must be "
-                        f"'l'/'r'; got "
-                        f"{sorted(set(map(str, side_vals[bad])))[:5]}"
-                    )
-                add = pd.DataFrame(
-                    {
-                        "__ts": ts_new,
-                        # right sorts BEFORE left at equal ts (inclusive tie)
-                        "__side": np.where(side_vals == "r", 0, 1).astype(
-                            np.int8
-                        ),
-                    }
-                )
-                for c in keys_l:
-                    add[c] = np_new[c].to_numpy()
-                for c in payload:
-                    # payload columns buffer in object space so a later
-                    # pd.concat with a differently-delivered batch (int64
-                    # vs float64-with-NaN) can never promote them
-                    add[c] = _to_obj(np_new[c])
-                buf = add if buf is None else pd.concat(
-                    [buf, add], ignore_index=True
-                )
-
-        out = None
-        if buf is not None and len(buf):
-            sealed_mask = buf["__ts"].to_numpy() < wm_us
-            if sealed_mask.any():
-                # (ts, side, right payload) order: among equal-ts right
-                # rows the payload-MAX sorts last, so both the per-row
-                # cummax pick and the summary's keep="last" adopt the
-                # batch asof_join's deterministic tie rule.
-                # na_position="first" ranks a NULL payload field lowest —
-                # Spark's asc null ordering (left rows hold all-None
-                # right columns but sit in their own __side stratum, so
-                # their arrival order is untouched).
-                sealed = (
-                    buf.loc[sealed_mask]
-                    .sort_values(
-                        ["__ts", "__side", *right_l],
-                        kind="mergesort",
-                        na_position="first",
-                    )
-                    .sort_values(keys_l, kind="mergesort")
-                    .reset_index(drop=True)
-                )
-                buf = buf.loc[~sealed_mask].reset_index(drop=True)
-                if summ is not None:
-                    merged = sealed.merge(summ, on=keys_l, how="left")
-                    # merge fills unmatched keys with float NaN even in
-                    # object columns — normalize back to None
-                    for c in carry_cols:
-                        merged[c] = _to_obj(merged[c])
-                else:
-                    merged = sealed.copy()
-                    for c in carry_cols:
-                        merged[c] = None
-                side = merged["__side"].to_numpy()
-                n = len(merged)
-                ridx = np.where(side == 0, np.arange(n), -1)
-                run = (
-                    pd.Series(ridx)
-                    .groupby(
-                        [merged[k].to_numpy() for k in keys_l],
-                        sort=False,
-                        dropna=False,
-                    )
-                    .cummax()
-                    .to_numpy()
-                )
-                is_left = side == 1
-                has_in = (run >= 0) & is_left
-                safe = np.clip(run, 0, None)
-                ts_all = merged["__ts"].to_numpy()
-                out = merged.loc[is_left, keys_l].copy()
-                out[ts_col] = (
-                    merged.loc[is_left, "__ts"]
-                    .to_numpy()
-                    .astype("datetime64[us]")
-                )
-                for c in left_l:
-                    out[c] = merged.loc[is_left, c].to_numpy()
-                hi = has_in[is_left]
-                # the in-batch/carry pick stays in object space end to
-                # end — np.where over object arrays never promotes
-                rts = np.where(
-                    hi,
-                    ts_all[safe][is_left].astype(object),
-                    merged["__s_ts"].to_numpy()[is_left],
-                )
-                out[f"{right_prefix}{ts_col}"] = pd.to_datetime(
-                    pd.Series(rts, dtype=object), unit="us"
-                ).to_numpy()
-                for c in right_l:
-                    v_in = merged[c].to_numpy()[safe][is_left]
-                    v_carry = merged[f"__s_{c}"].to_numpy()[is_left]
-                    out[f"{right_prefix}{c}"] = np.where(hi, v_in, v_carry)
-                # roll the per-key summary forward: the batch's last right
-                # row per key supersedes the carried one (newly sealed
-                # rows are never older than previously sealed ones)
-                rights = merged.loc[side == 0]
-                if len(rights):
-                    last_rows = rights.drop_duplicates(
-                        subset=keys_l, keep="last"
-                    )
-                    upd = last_rows[keys_l].copy()
-                    upd["__s_ts"] = last_rows["__ts"].to_numpy().astype(
-                        object
-                    )
-                    for c in right_l:
-                        upd[f"__s_{c}"] = _to_obj(last_rows[c])
-                    if summ is None or not len(summ):
-                        summ = upd.reset_index(drop=True)
-                    else:
-                        untouched = (
-                            summ.merge(
-                                upd[keys_l], on=keys_l, how="left",
-                                indicator=True,
-                            )
-                            .query("_merge == 'left_only'")
-                            .drop(columns="_merge")
-                        )
-                        summ = pd.concat(
-                            [untouched, upd], ignore_index=True
-                        )
-
-        if ttl_us is not None and wm_us > 0 and summ is not None and len(summ):
-            live = (
-                pd.to_numeric(summ["__s_ts"]).to_numpy() >= wm_us - ttl_us
-            )
-            if not live.all():
-                summ = summ.loc[live].reset_index(drop=True)
-
-        if (buf is None or not len(buf)) and (summ is None or not len(summ)):
-            # fully drained bucket group (e.g. every key TTL-evicted):
-            # drop the state row entirely instead of parking an empty
-            # (b'', b'') pair — idle groups then carry zero state rows
-            if state.exists:
-                state.remove()
-        else:
-            state.update((_ser_frame(buf), _ser_frame(summ)))
-            wm_ms = int(state.getCurrentWatermarkMs())
-            if buf is not None and len(buf):
-                state.setTimeoutTimestamp(max(wm_ms + 1, 1))
-            elif ttl_us is not None:
-                # summaries only: re-fire at the earliest TTL-eviction
-                # instant so idle predecessors are dropped on schedule
-                # even if the bucket never sees data again (see
-                # sessionize.py for the naive→epoch offset note)
-                min_s = int(pd.to_numeric(summ["__s_ts"]).min())
-                off_us = wm_us - wm_ms * 1000 if wm_ms > 0 else 0
-                fire_ms = (min_s + ttl_us - off_us) // 1000 + 1
-                state.setTimeoutTimestamp(max(fire_ms, wm_ms + 1, 1))
-        if out is not None and len(out):
-            yield out[out_cols]
-
-    bucketed = df.withColumn(
-        "__bucket",
-        F.pmod(F.xxhash64(*[F.col(k) for k in keys_l]), F.lit(n_buckets)),
-    )
-    return bucketed.groupBy("__bucket").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    spec = asof_spec(keys, ts_col, list(left_cols), list(right_cols), right_prefix, ttl_us)
+    return sealed_stream(with_side, spec, n_buckets, out_schema)

@@ -15,9 +15,10 @@ TIME, not arrival — rank rows of a (key, window) by ``(ts, id)`` and
 admit the first ``quota``. A row's flag is therefore final exactly when
 the watermark passes its event time (every smaller-(ts,id) row of the
 window has arrived, by the watermark's own guarantee), which is when it
-emits — the same watermark-sealed prefix emission the sessionize op
-uses (streaming/sessionize.py). Arrival order, batch boundaries and
-shuffle nondeterminism cannot change a flag.
+emits — the watermark-sealed prefix emission of the shared skeleton
+(streaming/sealed.py, which also owns the state codec, timeouts and
+bucketing). Arrival order, batch boundaries and shuffle nondeterminism
+cannot change a flag.
 
 State = ONE (window_start, count) row per key per UNSEALED window —
 and a window's counter is dropped the moment the watermark passes its
@@ -28,13 +29,9 @@ summaries (which must survive gaps) — the natural bound a rate limiter
 has and a sessionizer lacks. In-flight unsealed rows buffer exactly as
 long as the watermark delay, also self-bounded.
 
-Scale shape: one state exchange per micro-batch on the bucketed key
-hash (``n_buckets`` groups, hot keys share nothing across buckets but a
-single key's rows meet in one group — the quota NEEDS a total per-key
-count, so that meeting point is irreducible; the counter itself is
-O(1) per window). All math in integer microseconds; state rides Arrow
-IPC typed frames; watermark basis converted via streaming/timebase.py
-(non-UTC sessions — the round-5 class of bug).
+Scale shape: a single key's rows meet in one state group — the quota
+NEEDS a total per-key count, so that meeting point is irreducible; the
+counter itself is O(1) per window. All math in integer microseconds.
 
 Reference: the reference engine routes records by payload predicates
 (``03_Stream_Connector``); this is the budget/fairness generalization a
@@ -43,23 +40,50 @@ webtext ingest needs, built alongside SURVEY.md §2's streaming surface.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BooleanType, StructField, StructType
 
-from .sessionize import _de_frame, _ser_frame
+from .sealed import Sealed, resolve, sealed_stream, upsert
 
 __all__ = ["streaming_quota"]
+
+
+def quota_spec(
+    keys: list[str], ts_col: str, id_col: str, win_us: int, quota: int
+) -> Sealed:
+    """The sealed-prefix spec of :func:`streaming_quota`."""
+    gcols = [*keys, "__win"]
+
+    def step(sealed: pd.DataFrame, summ: pd.DataFrame | None, wm_us: int):
+        sealed["__win"] = (sealed["__ts"].to_numpy() // win_us) * win_us
+        if summ is None:
+            summ = pd.DataFrame(columns=gcols + ["__cnt"]).astype(
+                {"__win": "int64", "__cnt": "int64"}
+            )
+        merged = sealed.merge(summ, on=gcols, how="left")
+        # rank within (key, window) continues from the carried count:
+        # sealed rows arrive in (ts, id) order across batches by the
+        # watermark guarantee, so carried count + in-batch position IS the
+        # global (ts, id) rank
+        pos = merged.groupby(gcols, sort=False, dropna=False).cumcount()
+        rank = merged["__cnt"].fillna(0).astype("int64") + pos
+        out = merged[keys].copy()
+        out[ts_col] = merged["__ts"].to_numpy().astype("datetime64[us]")
+        out[id_col] = merged[id_col].to_numpy()
+        out["window_start"] = merged["__win"].to_numpy().astype("datetime64[us]")
+        out["admitted"] = (rank < quota).to_numpy()
+        upd = merged.groupby(gcols, sort=False, dropna=False, as_index=False).agg(
+            __n=("__ts", "size"), __old=("__cnt", "first")
+        )
+        upd["__cnt"] = upd["__old"].fillna(0).astype("int64") + upd["__n"]
+        return out, upsert(summ, upd[[*gcols, "__cnt"]], gcols)
+
+    def expires_at(summ: pd.DataFrame):
+        # no on-time row can land in a window the watermark has passed
+        return summ["__win"].to_numpy() + win_us
+
+    return Sealed(keys, ts_col, [id_col], [id_col], step, expires_at)
 
 
 def streaming_quota(
@@ -83,183 +107,21 @@ def streaming_quota(
     ``row_number() OVER (PARTITION BY keys, window ORDER BY ts, id)
     <= quota`` over the same data.
     """
-    if isinstance(keys, str):
-        keys = [keys]
     if quota < 1:
         raise ValueError(f"quota must be >= 1, got {quota}")
     win_us = int(float(window_seconds) * 1_000_000)
     if win_us <= 0:
-        raise ValueError(
-            f"window_seconds must be > 0, got {window_seconds}"
-        )
-    from ..shipping import ensure_package_shipped
-    from .timebase import session_tz, watermark_to_naive_us
-
-    ensure_package_shipped(df.sparkSession)
-    tz_name = session_tz(df.sparkSession)
-    if n_buckets is None:
-        n_buckets = max(
-            df.sparkSession.sparkContext.defaultParallelism * 8, 16
-        )
-    keys_l = list(keys)
-    reserved = {ts_col, id_col, "window_start", "admitted", "__bucket"}
-    if reserved & set(keys_l):
-        raise ValueError(
-            f"keys may not collide with {sorted(reserved)}"
-        )
-
+        raise ValueError(f"window_seconds must be > 0, got {window_seconds}")
+    keys, n_buckets, _ = resolve(
+        df, keys, n_buckets, None, [ts_col, id_col, "window_start", "admitted"]
+    )
     out_schema = StructType(
-        [df.schema[k] for k in keys_l]
+        [df.schema[k] for k in keys]
         + [df.schema[ts_col], df.schema[id_col]]
         + [
             StructField("window_start", df.schema[ts_col].dataType, True),
             StructField("admitted", BooleanType(), True),
         ]
     )
-    state_schema = StructType(
-        [
-            StructField("buf", BinaryType(), True),
-            StructField("summ", BinaryType(), True),
-        ]
-    )
-    out_cols = [*keys_l, ts_col, id_col, "window_start", "admitted"]
-    q = int(quota)
-
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buf_b, summ_b = state.get
-            buf = _de_frame(buf_b)
-            summ = _de_frame(summ_b)
-        else:
-            buf, summ = None, None
-
-        wm_us = watermark_to_naive_us(
-            int(state.getCurrentWatermarkMs()), tz_name
-        )
-        new = [p for p in pdf_iter if len(p)]
-        if new:
-            np_new = (
-                pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
-            )
-            ts_new = (
-                np_new[ts_col]
-                .to_numpy()
-                .astype("datetime64[us]")
-                .astype(np.int64)
-            )
-            if wm_us > 0:
-                # same late-row boundary as sessionize: strictly-below
-                # drops, AT-watermark keeps (sealing below is
-                # strictly-below too)
-                keep = ts_new >= wm_us
-                np_new = np_new.loc[keep].reset_index(drop=True)
-                ts_new = ts_new[keep]
-            if len(np_new):
-                add = pd.DataFrame({"__ts": ts_new})
-                for c in keys_l:
-                    add[c] = np_new[c].to_numpy()
-                add[id_col] = np_new[id_col].to_numpy()
-                buf = (
-                    add
-                    if buf is None
-                    else pd.concat([buf, add], ignore_index=True)
-                )
-
-        out = None
-        if buf is not None and len(buf):
-            sealed_mask = buf["__ts"].to_numpy() < wm_us
-            if sealed_mask.any():
-                sealed = (
-                    buf.loc[sealed_mask]
-                    .sort_values(["__ts", id_col], kind="mergesort")
-                    .sort_values(keys_l, kind="mergesort")
-                    .reset_index(drop=True)
-                )
-                buf = buf.loc[~sealed_mask].reset_index(drop=True)
-                sealed["__win"] = (
-                    sealed["__ts"].to_numpy() // win_us
-                ) * win_us
-                if summ is None:
-                    summ = pd.DataFrame(
-                        columns=[*keys_l, "__win", "__cnt"]
-                    ).astype({"__win": "int64", "__cnt": "int64"})
-                gcols = [*keys_l, "__win"]
-                merged = sealed.merge(summ, on=gcols, how="left")
-                # rank within (key, window) continues from the carried
-                # count: sealed rows arrive in (ts, id) order across
-                # batches by the watermark guarantee, so carried-count +
-                # in-batch position IS the global (ts, id) rank
-                pos = merged.groupby(
-                    gcols, sort=False, dropna=False
-                ).cumcount()
-                cnt0 = merged["__cnt"].fillna(0).astype("int64")
-                rank = cnt0 + pos
-                out = merged[keys_l].copy()
-                out[ts_col] = (
-                    merged["__ts"].to_numpy().astype("datetime64[us]")
-                )
-                out[id_col] = merged[id_col].to_numpy()
-                out["window_start"] = (
-                    merged["__win"].to_numpy().astype("datetime64[us]")
-                )
-                out["admitted"] = (rank < q).to_numpy()
-                upd = merged.groupby(
-                    gcols, sort=False, dropna=False, as_index=False
-                ).agg(__n=("__ts", "size"), __old=("__cnt", "first"))
-                upd["__cnt"] = (
-                    upd["__old"].fillna(0).astype("int64")
-                    + upd["__n"].astype("int64")
-                )
-                upd = upd[[*gcols, "__cnt"]]
-                untouched = (
-                    summ.merge(
-                        upd[gcols], on=gcols, how="left", indicator=True
-                    )
-                    .query("_merge == 'left_only'")
-                    .drop(columns="_merge")
-                )
-                summ = pd.concat([untouched, upd], ignore_index=True)
-
-        if summ is not None and len(summ) and wm_us > 0:
-            # a window whose END the watermark passed can receive no
-            # on-time row — its counter self-prunes (the rate limiter's
-            # natural bound; no TTL knob)
-            live = (summ["__win"].to_numpy() + win_us) > wm_us
-            if not live.all():
-                summ = summ.loc[live].reset_index(drop=True)
-
-        if (buf is None or not len(buf)) and (
-            summ is None or not len(summ)
-        ):
-            if state.exists:
-                state.remove()
-        else:
-            state.update((_ser_frame(buf), _ser_frame(summ)))
-            wm_ms = int(state.getCurrentWatermarkMs())
-            if buf is not None and len(buf):
-                # unsealed rows wait on the watermark, not on data
-                state.setTimeoutTimestamp(max(wm_ms + 1, 1))
-            else:
-                # counters only: fire when the earliest window seals so
-                # an idle group still prunes to zero state rows (same
-                # naive→epoch offset reuse as sessionize's TTL firing)
-                min_win = int(pd.to_numeric(summ["__win"]).min())
-                off_us = wm_us - wm_ms * 1000 if wm_ms > 0 else 0
-                fire_ms = (min_win + win_us - off_us) // 1000 + 1
-                state.setTimeoutTimestamp(max(fire_ms, wm_ms + 1, 1))
-        if out is not None and len(out):
-            yield out[out_cols]
-
-    bucketed = df.withColumn(
-        "__bucket",
-        F.pmod(F.xxhash64(*[F.col(k) for k in keys_l]), F.lit(n_buckets)),
-    )
-    return bucketed.groupBy("__bucket").applyInPandasWithState(
-        fn,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    spec = quota_spec(keys, ts_col, id_col, win_us, int(quota))
+    return sealed_stream(df, spec, n_buckets, out_schema)

@@ -8,36 +8,18 @@ operator. Semantics are pinned to the batch
 per key, order rows by (ts, id), a new session starts after a gap of
 MORE than ``gap_seconds``, 0-based running index.
 
-Mechanics (the :mod:`stateful_join` discipline):
-
-* state groups are hash buckets over the key (``n_buckets``), amortizing
-  the per-trigger Arrow + state-store round trip over many keys;
-* rows buffer until the watermark passes their event time — then no
-  earlier row can arrive (late rows strictly below the watermark are
-  dropped explicitly, the same boundary Spark's own late-event filter
-  uses: rows AT the watermark are kept and stay buffered until the
-  watermark advances past them, so equal timestamps straddling a
-  chunk/batch boundary are never lost) and the sealed prefix of each
-  key's (ts, id) order gets its final session indices, continuing from
-  the per-key running state;
-* retained state is (a) the UNSEALED row buffer — watermark-bounded,
-  O(in-flight rows) — and (b) one (last_ts, n_breaks) summary row per
-  key seen so far. The summary is NOT watermark-bounded by itself: on
-  an endless high-cardinality key stream it grows with the number of
-  distinct keys ever seen. ``state_ttl`` bounds it: a key idle longer
-  than the TTL (watermark passed its last sealed event by more than
-  ``state_ttl`` seconds) has its summary dropped, and if it reappears
-  its session index restarts at 0 — the same trade-off
-  :func:`~.stateful_join.streaming_nn_join` documents for its
-  ``state_ttl``. The TTL must exceed ``gap_seconds`` (an evicted key
-  would otherwise split a live session);
-* state round-trips as Arrow IPC stream bytes (typed columnar frames),
-  not pickle — deserialization is zero-parse per value and the cost per
-  trigger is proportional to the frames' size, which the TTL keeps
-  bounded;
-* a group holding unsealed rows arms an event-time timeout so the
-  watermark advancing re-fires it even when no new data arrives for the
-  bucket (availableNow replays complete).
+Built on the sealed-prefix skeleton (:mod:`.sealed`: late and seal
+boundaries, state codec, timeouts, bucketing). Once the watermark passes
+a row, the sealed prefix of its key's (ts, id) order gets its final
+session indices, continuing from a per-key (last_ts, n_breaks) summary.
+The summary is NOT watermark-bounded: on an endless high-cardinality key
+stream it grows with the number of distinct keys ever seen.
+``state_ttl`` bounds it: a key idle longer than the TTL (watermark past
+its last sealed event by more than ``state_ttl`` seconds) has its
+summary dropped, and if it reappears its session index restarts at 0 —
+the same trade-off :func:`~.stateful_join.streaming_nn_join` documents
+for its ``state_ttl``. The TTL must exceed ``gap_seconds`` (an evicted
+key would otherwise split a live session).
 
 All gap math runs in integer microseconds (session-timezone-proof,
 rounding-free — the engine-wide discipline).
@@ -45,45 +27,53 @@ rounding-free — the engine-wide discipline).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
+
+from .sealed import Sealed, resolve, sealed_stream, upsert
 
 __all__ = ["streaming_sessionize"]
 
 
-def _ser_frame(pdf: pd.DataFrame | None) -> bytes:
-    """pandas frame → Arrow IPC stream bytes (b'' encodes None/empty)."""
-    if pdf is None or len(pdf) == 0:
-        return b""
-    table = pa.Table.from_pandas(pdf, preserve_index=False)
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, table.schema) as w:
-        w.write_table(table)
-    return sink.getvalue().to_pybytes()
+def sessionize_spec(
+    keys: list[str], ts_col: str, id_col: str, gap_us: int, ttl_us: int | None
+) -> Sealed:
+    """The sealed-prefix spec of :func:`streaming_sessionize`."""
 
+    def step(sealed: pd.DataFrame, summ: pd.DataFrame | None, wm_us: int):
+        if summ is None:
+            summ = pd.DataFrame(columns=[*keys, "__last_ts", "__cum"]).astype(
+                {"__last_ts": "float64", "__cum": "int64"}
+            )
+        merged = sealed.merge(summ, on=keys, how="left")
+        # the first sealed row of each key continues from the summary's
+        # last sealed timestamp (NaN = key never sealed before)
+        prev = merged.groupby(keys, sort=False, dropna=False)["__ts"].shift(1)
+        prev = prev.fillna(merged["__last_ts"])
+        brk = (prev.isna() | (merged["__ts"] - prev > gap_us)).astype("int64")
+        cum0 = merged["__cum"].fillna(0).astype("int64")
+        idx = cum0 + brk.groupby(
+            [merged[k] for k in keys], sort=False, dropna=False
+        ).cumsum() - 1
+        out = merged[keys].copy()
+        out[ts_col] = merged["__ts"].to_numpy().astype("datetime64[us]")
+        out[id_col] = merged[id_col].to_numpy()
+        out["session_idx"] = idx.to_numpy()
+        upd = merged.assign(__brk=brk).groupby(
+            keys, sort=False, dropna=False, as_index=False
+        ).agg(__new_last=("__ts", "max"), __nbrk=("__brk", "sum"),
+              __old_cum=("__cum", "first"))
+        upd["__last_ts"] = upd["__new_last"].astype("float64")
+        upd["__cum"] = upd["__old_cum"].fillna(0).astype("int64") + upd["__nbrk"]
+        return out, upsert(summ, upd[[*keys, "__last_ts", "__cum"]], keys)
 
-def _de_frame(b: bytes | None) -> pd.DataFrame | None:
-    """Arrow IPC bytes → pandas frame (None for b'').
+    expires_at = None
+    if ttl_us is not None:
+        def expires_at(summ: pd.DataFrame):
+            return summ["__last_ts"].to_numpy() + (ttl_us + 1)
 
-    ``integer_object_nulls=True``: an integer column that acquired nulls
-    (e.g. a carried right payload with no predecessor) comes back as an
-    OBJECT column of python ints / None instead of float64-with-NaN —
-    bigints ≥ 2⁵³ survive the state round-trip exactly (ADVICE round-5).
-    Null-free integer columns still deserialize as int64."""
-    if not b:
-        return None
-    return (
-        pa.ipc.open_stream(pa.py_buffer(b))
-        .read_all()
-        .to_pandas(integer_object_nulls=True)
-    )
+    return Sealed(keys, ts_col, [id_col], [id_col], step, expires_at)
 
 
 def streaming_sessionize(
@@ -110,171 +100,19 @@ def streaming_sessionize(
     restarts its session index at 0. ``None`` keeps summaries forever
     (exact parity with batch, state O(distinct keys ever seen)).
     """
-    if isinstance(keys, str):
-        keys = [keys]
-    from ..shipping import ensure_package_shipped
-    from .timebase import session_tz, watermark_to_naive_us
-
-    ensure_package_shipped(df.sparkSession)
-    tz_name = session_tz(df.sparkSession)
-    if n_buckets is None:
-        n_buckets = max(df.sparkSession.sparkContext.defaultParallelism * 8, 16)
+    keys, n_buckets, ttl_us = resolve(
+        df, keys, n_buckets, state_ttl, [ts_col, id_col, "session_idx"]
+    )
     gap_us = int(float(gap_seconds) * 1_000_000)
-    if state_ttl is not None:
-        ttl_us = int(float(state_ttl) * 1_000_000)
-        if ttl_us <= gap_us:
-            raise ValueError(
-                "state_ttl must exceed gap_seconds: an evicted key would "
-                "split a session still inside its gap window"
-            )
-    else:
-        ttl_us = None
-    keys_l = list(keys)
-
+    if ttl_us is not None and ttl_us <= gap_us:
+        raise ValueError(
+            "state_ttl must exceed gap_seconds: an evicted key would "
+            "split a session still inside its gap window"
+        )
     out_schema = StructType(
-        [df.schema[k] for k in keys_l]
+        [df.schema[k] for k in keys]
         + [df.schema[ts_col], df.schema[id_col]]
         + [StructField("session_idx", LongType(), True)]
     )
-    state_schema = StructType(
-        [
-            StructField("buf", BinaryType(), True),
-            StructField("summ", BinaryType(), True),
-        ]
-    )
-    out_cols = [*keys_l, ts_col, id_col, "session_idx"]
-
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buf_b, summ_b = state.get
-            buf = _de_frame(buf_b)
-            summ = _de_frame(summ_b)
-        else:
-            buf, summ = None, None
-
-        # the watermark converted to the delivered rows' naive basis
-        # (identity under UTC; see streaming/timebase.py)
-        wm_us = watermark_to_naive_us(
-            int(state.getCurrentWatermarkMs()), tz_name
-        )
-        new = [p for p in pdf_iter if len(p)]
-        if new:
-            np_new = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
-            ts_new = (
-                np_new[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
-            )
-            if wm_us > 0:
-                # late-row discipline: drop strictly-below-watermark rows
-                # (Spark's own boundary); a row AT the watermark is kept —
-                # sealing below is strictly-below too, so equal timestamps
-                # straddling a batch boundary are ordered, never lost
-                keep = ts_new >= wm_us
-                np_new = np_new.loc[keep].reset_index(drop=True)
-                ts_new = ts_new[keep]
-            if len(np_new):
-                # the buffer holds event time ONLY as integer µs — the
-                # timestamp column is reconstructed at emit, so Arrow
-                # round-trips never juggle datetime units
-                add = pd.DataFrame({"__ts": ts_new})
-                for c in keys_l:
-                    add[c] = np_new[c].to_numpy()
-                add[id_col] = np_new[id_col].to_numpy()
-                buf = add if buf is None else pd.concat(
-                    [buf, add], ignore_index=True
-                )
-
-        out = None
-        if buf is not None and len(buf):
-            sealed_mask = buf["__ts"].to_numpy() < wm_us
-            if sealed_mask.any():
-                sealed = (
-                    buf.loc[sealed_mask]
-                    .sort_values(["__ts", id_col], kind="mergesort")
-                    .sort_values(keys_l, kind="mergesort")
-                    .reset_index(drop=True)
-                )
-                buf = buf.loc[~sealed_mask].reset_index(drop=True)
-                if summ is None:
-                    summ = pd.DataFrame(
-                        columns=[*keys_l, "__last_ts", "__cum"]
-                    ).astype({"__last_ts": "float64", "__cum": "int64"})
-                merged = sealed.merge(summ, on=keys_l, how="left")
-                g = merged.groupby(keys_l, sort=False, dropna=False)
-                prev = g["__ts"].shift(1)
-                # first sealed row of each key continues from the state's
-                # last sealed timestamp (NaN = key never sealed before)
-                prev = prev.fillna(merged["__last_ts"])
-                gap = merged["__ts"] - prev
-                brk = (prev.isna() | (gap > gap_us)).astype("int64")
-                cum0 = merged["__cum"].fillna(0).astype("int64")
-                idx = cum0 + brk.groupby(
-                    [merged[k] for k in keys_l], sort=False, dropna=False
-                ).cumsum() - 1
-                out = merged[keys_l].copy()
-                out[ts_col] = merged["__ts"].to_numpy().astype("datetime64[us]")
-                out[id_col] = merged[id_col].to_numpy()
-                out["session_idx"] = idx.to_numpy()
-                # roll the per-key summary forward
-                upd = merged.assign(__brk=brk).groupby(
-                    keys_l, sort=False, dropna=False, as_index=False
-                ).agg(__new_last=("__ts", "max"), __nbrk=("__brk", "sum"),
-                      __old_cum=("__cum", "first"))
-                upd["__last_ts"] = upd["__new_last"].astype("float64")
-                upd["__cum"] = upd["__old_cum"].fillna(0).astype("int64") + upd[
-                    "__nbrk"
-                ].astype("int64")
-                upd = upd[[*keys_l, "__last_ts", "__cum"]]
-                untouched = (
-                    summ.merge(upd[keys_l], on=keys_l, how="left", indicator=True)
-                    .query("_merge == 'left_only'")
-                    .drop(columns="_merge")
-                )
-                summ = pd.concat([untouched, upd], ignore_index=True)
-
-        if ttl_us is not None and wm_us > 0 and summ is not None and len(summ):
-            # idle-key eviction: the summary of a key whose last sealed
-            # event the watermark has passed by more than the TTL is
-            # dropped (its index restarts at 0 if the key reappears)
-            live = summ["__last_ts"].to_numpy() >= float(wm_us - ttl_us)
-            if not live.all():
-                summ = summ.loc[live].reset_index(drop=True)
-
-        if (buf is None or not len(buf)) and (summ is None or not len(summ)):
-            # fully drained bucket group (every key TTL-evicted, nothing
-            # buffered): remove the state row instead of parking an
-            # empty (b'', b'') pair — idle groups carry zero state rows
-            if state.exists:
-                state.remove()
-        else:
-            state.update((_ser_frame(buf), _ser_frame(summ)))
-            wm_ms = int(state.getCurrentWatermarkMs())
-            if buf is not None and len(buf):
-                # unsealed rows wait on the WATERMARK, not on data —
-                # re-fire the group when it advances
-                state.setTimeoutTimestamp(max(wm_ms + 1, 1))
-            elif ttl_us is not None:
-                # summaries only: without a timeout an idle group would
-                # never re-fire and its TTL-expired summaries would
-                # outlive the TTL until new data happened to hit the
-                # bucket. Fire at the EARLIEST eviction instant. The
-                # naive→epoch conversion reuses the offset observed at
-                # the current watermark (exact under any fixed offset;
-                # off by ≤ the DST shift across a transition, which only
-                # re-fires the group early/late — eviction itself
-                # re-checks against the then-current watermark).
-                min_s = int(pd.to_numeric(summ["__last_ts"]).min())
-                off_us = wm_us - wm_ms * 1000 if wm_ms > 0 else 0
-                fire_ms = (min_s + ttl_us - off_us) // 1000 + 1
-                state.setTimeoutTimestamp(max(fire_ms, wm_ms + 1, 1))
-        if out is not None and len(out):
-            yield out[out_cols]
-
-    bucketed = df.withColumn(
-        "__bucket",
-        F.pmod(F.xxhash64(*[F.col(k) for k in keys_l]), F.lit(n_buckets)),
-    )
-    return bucketed.groupBy("__bucket").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    spec = sessionize_spec(keys, ts_col, id_col, gap_us, ttl_us)
+    return sealed_stream(df, spec, n_buckets, out_schema)

@@ -38,15 +38,16 @@ event time ≤ watermark — every lookup a future decision needs survives.
 
 from __future__ import annotations
 
-import pickle
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.streaming.state import GroupState
+from pyspark.sql.types import StructField, StructType
+
+from .sealed import arm_expiry, bucketed_apply, de_frame, empty, resolve, ser_frame
+from .timebase import session_tz, watermark_to_naive_us
 
 __all__ = ["streaming_nn_join"]
 
@@ -435,16 +436,23 @@ def streaming_nn_join(
     unbounded key churn — rows and pending pairs older than
     ``watermark − ttl`` are dropped even though the closure would keep a
     series' last rows forever (the reference keeps its buffers forever
-    too). Trade-off: a pair bridging a silence longer than the TTL is not
-    emitted. Without it, state holds O(1) rows per ever-seen series.
+    too). Eviction runs on schedule: a row leaves at the end of the first
+    trigger whose watermark is more than the TTL past it — a group
+    re-fires at its earliest eviction instant even when no data arrives
+    for it — and a group left empty removes its state row. Trade-off: a
+    pair that would need an evicted row later (one bridging a silence
+    longer than the TTL) is not emitted. Without it, state holds O(1) rows
+    per ever-seen series.
 
     Watermark boundary contract: arrivals with event time strictly below
     the current watermark are dropped, and decisions treat the at-or-below
     region as final — so a row whose event time EQUALS the watermark must
     arrive in the same micro-batch that advanced it (the staging writers
     guarantee this with µs-unique timestamps per chunk; see
-    ``streaming/sessionize.py`` for the keep-at-watermark variant of the
-    boundary).
+    ``streaming/sealed.py`` for the keep-at-watermark variant of the
+    boundary the other stateful operators use). State shares their
+    ``(buf, summ)`` Arrow IPC codec (``summ`` holds the pending pairs),
+    bucketing and wiring.
 
     ``assume_in_order``: adopt the reference's per-stream in-order arrival
     contract (README:220-230) — decisions finalize on data arrival instead
@@ -454,48 +462,26 @@ def streaming_nn_join(
     side)'s event times arrive non-decreasing (e.g. log replay, per-key
     Kafka partitions). Default off = watermark-general semantics.
     """
-    if isinstance(keys, str):
-        keys = [keys]
-    from ..shipping import ensure_package_shipped
-    from .timebase import session_tz, watermark_to_naive_us
-
-    ensure_package_shipped(df.sparkSession)
-    tz_name = session_tz(df.sparkSession)
-    if n_buckets is None:
-        n_buckets = max(df.sparkSession.sparkContext.defaultParallelism * 8, 16)
-    payload_cols = [c for c in df.columns if c not in [*keys, ts_col, side_col]]
-    ts_field = df.schema[ts_col]
-
-    out_schema = StructType(
-        [df.schema[k] for k in keys]
-        + [StructField(f"r_{ts_col}", ts_field.dataType, True)]
-        + [StructField(f"r_{c}", df.schema[c].dataType, True) for c in payload_cols]
-        + [StructField(f"s_{ts_col}", ts_field.dataType, True)]
-        + [StructField(f"s_{c}", df.schema[c].dataType, True) for c in payload_cols]
+    keys_l = [keys] if isinstance(keys, str) else list(keys)
+    payload_cols = [c for c in df.columns if c not in [*keys_l, ts_col, side_col]]
+    proj = [
+        (f"{p}_{c}", c, p) for p in ("r", "s") for c in [ts_col, *payload_cols]
+    ]
+    keys_l, n_buckets, ttl_us = resolve(
+        df, keys_l, n_buckets, state_ttl, [name for name, _, _ in proj]
     )
-    state_schema = StructType(
-        [StructField("buf", BinaryType(), True), StructField("pend", BinaryType(), True)]
+    tz_name = session_tz(df.sparkSession)
+    out_schema = StructType(
+        [df.schema[k] for k in keys_l]
+        + [StructField(name, df.schema[c].dataType, True) for name, c, _ in proj]
     )
     delta_us = None if delta is None else float(delta) * 1e6
-    ttl_us = None if state_ttl is None else int(float(state_ttl) * 1e6)
     out_cols = [f.name for f in out_schema.fields]
-    proj = (
-        [(f"r_{ts_col}", ts_col, "r")]
-        + [(f"r_{c}", c, "r") for c in payload_cols]
-        + [(f"s_{ts_col}", ts_col, "s")]
-        + [(f"s_{c}", c, "s") for c in payload_cols]
-    )
-    keys_l = list(keys)
 
     def fn(
         key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buf_b, pend_b = state.get
-            buf = pickle.loads(buf_b)
-            pend = pickle.loads(pend_b)
-        else:
-            buf, pend = None, None
+        buf, pend = map(de_frame, state.get) if state.exists else (None, None)
 
         # watermark in the delivered rows' naive basis: pandas receives
         # session-LOCAL naive event times while getCurrentWatermarkMs is
@@ -563,30 +549,30 @@ def streaming_nn_join(
             buf, pend, wm_us, delta_us, keys_l, proj, in_order=assume_in_order
         )
         if ttl_us is not None and wm_us > 0:
+            # rows and pending pairs expire once the watermark is more than
+            # the TTL past them, decided or not: a row still waiting for a
+            # partner could only pair across that long a silence
             cut = wm_us - ttl_us
-            if len(buf):
-                decided = (buf["__alpha"] & buf["__beta"]).to_numpy()
-                stale = (buf["__ts"].to_numpy() < cut) & decided
-                if stale.any():
-                    buf = buf.loc[~stale].reset_index(drop=True)
-            if pend is not None and len(pend):
-                pend = pend.loc[pend["__thresh"].to_numpy() >= cut].reset_index(
-                    drop=True
-                )
-                if len(pend) == 0:
-                    pend = None
-        state.update((pickle.dumps(buf), pickle.dumps(pend)))
-        if wm_blocked:
-            state.setTimeoutTimestamp(max(int(state.getCurrentWatermarkMs()) + 1, 1))
+            buf = buf.loc[buf["__ts"].to_numpy() >= cut].reset_index(drop=True)
+            if not empty(pend):
+                pend = pend.loc[pend["__thresh"].to_numpy() >= cut].reset_index(drop=True)
+        if not len(buf) and empty(pend):
+            # drained (everything TTL-evicted): idle groups keep no state rows
+            if state.exists:
+                state.remove()
+        else:
+            state.update((ser_frame(buf), ser_frame(pend)))
+            if wm_blocked:
+                state.setTimeoutTimestamp(max(int(state.getCurrentWatermarkMs()) + 1, 1))
+            elif ttl_us is not None:
+                # re-fire at the earliest eviction even if no data arrives
+                oldest = [buf["__ts"].min()] if len(buf) else []
+                if not empty(pend):
+                    oldest.append(pend["__thresh"].min())
+                arm_expiry(state, wm_us, min(oldest) + ttl_us + 1)
         if out is not None and len(out):
             yield out[out_cols]
 
-    bucketed = df.withColumn(
-        "__bucket", F.pmod(F.xxhash64(*[F.col(k) for k in keys_l]), F.lit(n_buckets))
-    )
-    return (
-        bucketed.groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    return bucketed_apply(
+        df, keys_l, [ts_col, side_col, *payload_cols], n_buckets, fn, out_schema
     )

@@ -1255,6 +1255,110 @@ def test_streaming_sessionize_full_eviction_removes_state_rows(spark, tmp_path):
     )
 
 
+def test_streaming_sessionize_rejects_reserved_names(spark):
+    """A key named like an output column, or equal to ts_col/id_col, would
+    duplicate an output column: rejected when the query is built."""
+    from statefulstreamprocessor_spark.streaming.sessionize import (
+        streaming_sessionize,
+    )
+
+    df = (
+        spark.readStream.format("rate").load()
+        .selectExpr("value % 7 AS user_id", "timestamp AS ts",
+                    "value AS event_id", "value AS session_idx")
+        .withWatermark("ts", "0 seconds")
+    )
+    for keys in (["session_idx"], ["user_id", "ts"], ["event_id"]):
+        with pytest.raises(ValueError, match="collide"):
+            streaming_sessionize(df, keys, "ts", "event_id", gap_seconds=60.0)
+    with pytest.raises(ValueError, match="n_buckets"):
+        streaming_sessionize(
+            df, ["user_id"], "ts", "event_id", gap_seconds=60.0, n_buckets=0
+        )
+
+
+def test_streaming_join_ttl_eviction_removes_state_rows(spark, tmp_path):
+    """With ``state_ttl`` the join evicts on schedule: a bucket group whose
+    series all went silent longer than the TTL re-fires at its eviction
+    instant without new data and calls state.remove(), so only the filler
+    key's group (whose last row still waits for a partner) keeps a state
+    row. Ten keys sit on distinct buckets."""
+    import datetime
+
+    from statefulstreamprocessor_spark.streaming.stateful_join import (
+        streaming_nn_join,
+    )
+
+    n_buckets = 16
+
+    def bucket(k):
+        return spark.createDataFrame([(k,)], "user_id bigint").select(
+            F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)).alias("b")
+        ).first()["b"]
+
+    used = {bucket(k) for k in range(1, 11)}
+    filler = next(k for k in range(100, 200) if bucket(k) not in used)
+
+    t0 = datetime.datetime(2024, 7, 1)
+    rows = []
+    for k in range(1, 11):
+        rows.append((k, t0 + datetime.timedelta(seconds=k), "r", 1000 + k))
+        rows.append((k, t0 + datetime.timedelta(seconds=k + 0.5), "s", 2000 + k))
+    # the filler advances the watermark to t0+3600 — far past every key's
+    # rows + TTL
+    rows += [
+        (filler, t0 + datetime.timedelta(seconds=s), "rs"[i % 2], 3000 + i)
+        for i, s in enumerate(range(0, 3601, 300))
+    ]
+    pdf = pd.DataFrame(
+        rows, columns=["user_id", "ts", "side", "event_id"]
+    ).sort_values("ts", kind="mergesort")
+    in_dir = str(tmp_path / "input")
+    os.makedirs(in_dir)
+    step = (len(pdf) + 4) // 5
+    for i in range(5):
+        pdf.iloc[i * step: (i + 1) * step].to_parquet(
+            os.path.join(in_dir, f"part-{i:03d}.parquet"),
+            index=False, coerce_timestamps="us",
+        )
+    raw = (
+        spark.readStream.schema(
+            "user_id bigint, ts timestamp_ntz, side string, event_id bigint"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    stream = raw.select(
+        "user_id", F.col("ts").cast("timestamp").alias("ts"), "side",
+        "event_id",
+    ).withWatermark("ts", "0 seconds")
+    q = (
+        streaming_nn_join(
+            stream, ["user_id"], "ts", "side", n_buckets=n_buckets,
+            state_ttl=600.0,
+        )
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    state_rows = [
+        p["stateOperators"][0]["numRowsTotal"]
+        for p in q.recentProgress
+        if p.get("stateOperators")
+    ]
+    assert state_rows and state_rows[-1] == 1, (
+        f"expected only the filler group to keep state, got "
+        f"{state_rows[-1]} rows (history {state_rows})"
+    )
+    # the keys' (r, s) pairs were decided before eviction
+    got = spark.read.parquet(str(tmp_path / "out"))
+    assert got.filter(F.col("user_id") <= 10).count() == 10
+
+
 def test_upsert_table_sink_latest_wins_and_replay_identity(spark, tmp_path):
     """Round-6 UpsertTableSink (conditional MERGE as streaming sink):
     per-batch hot-key pre-reduce, cross-batch latest-wins by

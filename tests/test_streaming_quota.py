@@ -189,6 +189,11 @@ def test_quota_validation(spark, tmp_path):
         streaming_quota(stream, ["user_id"], "ts", "event_id", 0.0, 3)
     with pytest.raises(ValueError, match="collide"):
         streaming_quota(stream, ["admitted"], "ts", "event_id", 600.0, 3)
+    # pmod(x, 0) would otherwise fail mid-query under ANSI mode
+    with pytest.raises(ValueError, match="n_buckets"):
+        streaming_quota(
+            stream, ["user_id"], "ts", "event_id", 600.0, 3, n_buckets=0
+        )
 
 
 def test_quota_non_utc_session_timezone(spark, tmp_path):

@@ -219,6 +219,16 @@ def test_streaming_zscore_args(spark):
         rdf = df.withColumnRenamed("ts", ts).withColumnRenamed("event_id", eid)
         with pytest.raises(ValueError, match="ts_col/id_col"):
             streaming_rolling_zscore(rdf, "user_id", ts, eid, "value")
+    with pytest.raises(ValueError, match="n_buckets"):
+        streaming_rolling_zscore(
+            df, "user_id", "ts", "event_id", "value", n_buckets=0
+        )
+    # a non-positive TTL would evict every tail on every trigger
+    for ttl in (0, -60.0):
+        with pytest.raises(ValueError, match="state_ttl"):
+            streaming_rolling_zscore(
+                df, "user_id", "ts", "event_id", "value", state_ttl=ttl
+            )
 
 
 def test_streaming_zscore_null_values_match_batch(spark, tmp_path):
