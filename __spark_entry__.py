@@ -78,6 +78,31 @@ def _us_sql(expr: str) -> str:
     return f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '{_NTZ_EPOCH}', {expr})"
 
 
+def _event_time(stream: DataFrame, ts: str = "ts") -> DataFrame:
+    """A replayed stream's NTZ event time as TIMESTAMP under a 0-second
+    watermark (replay contract: ``sources/staging.py``)."""
+    return stream.withColumn(ts, F.col(ts).cast("timestamp")).withWatermark(
+        ts, "0 seconds"
+    )
+
+
+def _window_starts_by(max_ts) -> F.Column:
+    """``window.start <= max_ts``, compared as NTZ wall time on both sides:
+    a naive-datetime ``F.lit()`` would localize via the DRIVER tz while the
+    NTZ cast renders via the SESSION tz (round-5 NY-tz cross-check catch)."""
+    start = F.col("window.start").cast("timestamp_ntz")
+    return start <= F.lit(str(max_ts)).cast("timestamp_ntz")
+
+
+def _count_and_sum(value: str, n: str, total: str) -> list[F.Column]:
+    """Row count + exact decimal sum emitted as double (byte-stable against
+    the DuckDB oracle, as in q_tumbling_hourly)."""
+    return [
+        F.count(F.lit(1)).alias(n),
+        F.sum(F.col(value).cast("decimal(18,2)")).cast("double").alias(total),
+    ]
+
+
 # ---------------------------------------------------------------- queries
 
 def q_nn_pair_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -741,17 +766,10 @@ def q_streaming_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator (streaming/zscore.py — applyInPandasWithState, bucketed key
     groups, watermark-sealed in-order scoring, per-key trailing-window
     tail state), pinned to the SAME DuckDB oracle as the batch
-    q_rolling_zscore. The punctuation row (user -1, +2 h) advances the
-    watermark so every real row seals; the 90-day TTL keeps the eviction
-    path ON while leaving the output exactly the batch oracle's."""
-    import datetime
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    q_rolling_zscore. The punctuation row is user -1; the 90-day TTL
+    keeps the eviction path ON while leaving the output exactly the batch
+    oracle's."""
+    from statefulstreamprocessor_spark.sources import staging
     from statefulstreamprocessor_spark.streaming.zscore import (
         streaming_rolling_zscore,
     )
@@ -761,42 +779,15 @@ def q_streaming_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_type") == "click")
         .select("user_id", "ts", "event_id", "value")
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_strz_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(ev, in_dir, n_files=3, ts_col="ts")
-    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [(-1, mx + datetime.timedelta(hours=2), -1, 0.0)],
-        "user_id bigint, ts timestamp_ntz, event_id bigint, value double",
+    r = staging.replay_stream(
+        ev, "ts", punctuation={"user_id": -1, "event_id": -1, "value": 0.0}
     )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp_ntz, event_id bigint, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    stream = raw.select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"),
-        "event_id", "value",
-    ).withWatermark("ts", "0 seconds")
     out = streaming_rolling_zscore(
-        stream, ["user_id"], "ts", "event_id", "value",
+        _event_time(r.stream), ["user_id"], "ts", "event_id", "value",
         window_rows=20, min_obs=5, threshold=2.5,
         n_buckets=32, state_ttl=90 * 86400.0,
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
+    res = staging.drain_to_parquet(out, r.tmp)
     return res.filter(F.col("user_id") >= 0).select(
         F.col("user_id").alias("key"),
         F.col("ts").cast("timestamp_ntz").alias("ts"),
@@ -992,50 +983,15 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, not racy. State is keyed by event_id and evicted by the
     watermark (bounded at any corpus size); append mode emits rows
     immediately (no window to close, no punctuation row needed)."""
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        write_time_ordered_chunks,
-    )
+    from statefulstreamprocessor_spark.sources import staging
 
     ev = _load(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
     dups = ev.filter(F.col("event_id") % 10 == 0)
-    staged = ev.unionByName(dups)
-    tmp = tempfile.mkdtemp(prefix="ssp_dedup_gate_")
-    in_dir = os.path.join(tmp, "input")
-    write_time_ordered_chunks(staged, in_dir, n_files=3, ts_col="ts")
-    raw = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp_ntz, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    deduped = (
-        raw.select(
-            "event_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_type",
-            "value",
-        )
-        .withWatermark("ts", "0 seconds")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
-    return res.select(
+    r = staging.replay_stream(ev.unionByName(dups), "ts")
+    deduped = _event_time(r.stream).dropDuplicatesWithinWatermark(["event_id"])
+    return staging.drain_to_parquet(deduped, r.tmp).select(
         "event_id",
         _us(F.col("ts").cast("timestamp_ntz")).alias("ts_us"),
         "event_type",
@@ -1053,59 +1009,22 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     node even though its key (-1) never matches the dimension — the
     watermark is computed before the join — so the final window closes
     without a sentinel leaking into the result."""
-    import datetime
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    from statefulstreamprocessor_spark.sources import staging
 
     ev = _load(spark, sf_dir, "events").select("user_id", "ts", "value")
     dim = _load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_nationkey"
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_enrich_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(ev, in_dir, n_files=3, ts_col="ts")
-    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [(-1, mx + datetime.timedelta(hours=2), 0.0)],
-        "user_id bigint, ts timestamp_ntz, value double",
-    )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema("user_id bigint, ts timestamp_ntz, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    r = staging.replay_stream(
+        ev, "ts", punctuation={"user_id": -1, "value": 0.0}
     )
     agg = (
-        raw.select(
-            "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-        )
-        .withWatermark("ts", "0 seconds")
+        _event_time(r.stream)
         .join(F.broadcast(dim), "user_id")
         .groupBy(F.window("ts", "1 hour"), "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
+        .agg(*_count_and_sum("value", "n", "sum_value"))
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
-    return res.select(
+    return staging.drain_to_parquet(agg, r.tmp).select(
         _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
         "c_mktsegment",
         "n",
@@ -1127,71 +1046,25 @@ def q_stream_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the RESULT — filtering it pre-agg would land below the watermark
     node and stall the final window (Catalyst pushes filters below
     EventTimeWatermark)."""
-    import datetime
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    from statefulstreamprocessor_spark.sources import staging
 
     ev = _load(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
     dups = ev.filter(F.col("event_id") % 10 == 0)
-    staged = ev.unionByName(dups)
-    tmp = tempfile.mkdtemp(prefix="ssp_dedup_rollup_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(staged, in_dir, n_files=3, ts_col="ts")
-    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [
-            (
-                -1,
-                mx + datetime.timedelta(hours=2),
-                "__punctuation__",
-                0.0,
-            )
-        ],
-        "event_id bigint, ts timestamp_ntz, event_type string, value double",
-    )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp_ntz, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    r = staging.replay_stream(
+        ev.unionByName(dups), "ts",
+        punctuation={
+            "event_id": -1, "event_type": "__punctuation__", "value": 0.0
+        },
     )
     agg = (
-        raw.select(
-            "event_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_type",
-            "value",
-        )
-        .withWatermark("ts", "0 seconds")
+        _event_time(r.stream)
         .dropDuplicatesWithinWatermark(["event_id"])
         .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
+        .agg(*_count_and_sum("value", "n", "sum_value"))
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
+    res = staging.drain_to_parquet(agg, r.tmp)
     return res.filter(F.col("event_type") != "__punctuation__").select(
         _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
         "event_type",
@@ -1628,54 +1501,21 @@ def q_streaming_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     are arrival-order-independent and the gate pins the stream to a
     plain SQL row_number() oracle. State is one counter per live
     (user, window), self-pruned by the watermark (no TTL knob). The
-    punctuation row (+2 h) seals every real row; it never emits."""
-    import datetime
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    punctuation row (user -1) never emits."""
+    from statefulstreamprocessor_spark.sources import staging
     from statefulstreamprocessor_spark.streaming.quota import (
         streaming_quota,
     )
 
     ev = _load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    tmp = tempfile.mkdtemp(prefix="ssp_quota_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(ev, in_dir, n_files=3, ts_col="ts")
-    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [(-1, mx + datetime.timedelta(hours=2), -1)],
-        "user_id bigint, ts timestamp_ntz, event_id bigint",
+    r = staging.replay_stream(
+        ev, "ts", punctuation={"user_id": -1, "event_id": -1}
     )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp_ntz, event_id bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    stream = raw.select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "event_id"
-    ).withWatermark("ts", "0 seconds")
     out = streaming_quota(
-        stream, ["user_id"], "ts", "event_id",
+        _event_time(r.stream), ["user_id"], "ts", "event_id",
         window_seconds=3600.0, quota=5, n_buckets=32,
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
+    res = staging.drain_to_parquet(out, r.tmp)
     # cast the sink's with-tz timestamps back to NTZ (identity on the
     # wall-time under any session tz): raw TIMESTAMP columns render via
     # the DRIVER tz at collect, not the session tz — the round-5 basis
@@ -1979,13 +1819,8 @@ def q_streaming_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce the batch sweep's pair set exactly — including the
     smallest-ids bucket truncation, which under id-ordered arrival is the
     same set as "first arrivals"."""
-    import os
-    import tempfile
-
     from statefulstreamprocessor_spark.shipping import ensure_package_shipped
-    from statefulstreamprocessor_spark.sources.staging import (
-        write_time_ordered_chunks,
-    )
+    from statefulstreamprocessor_spark.sources import staging
     from statefulstreamprocessor_spark.streaming.neardup import (
         streaming_minhash_pairs,
     )
@@ -1994,26 +1829,9 @@ def q_streaming_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents").filter(
         F.length("text") >= 5
     ).select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="ssp_strmh_gate_")
-    in_dir = os.path.join(tmp, "input")
-    write_time_ordered_chunks(docs, in_dir, n_files=3, ts_col="doc_id")
-    raw = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    pairs = streaming_minhash_pairs(raw, "text", "doc_id")
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cands = spark.read.parquet(out_dir).distinct()
+    r = staging.replay_stream(docs, "doc_id")
+    pairs = streaming_minhash_pairs(r.stream, "text", "doc_id")
+    cands = staging.drain_to_parquet(pairs, r.tmp).distinct()
     grams = docs.select(
         F.col("doc_id"), _char_gram_set(F.col("text")).alias("g")
     )
@@ -2470,24 +2288,16 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_streaming_nn_join(spark: SparkSession, sf_dir: str):
-    """Shared streaming-join stage for the streaming gate queries.
-
-    Stages the events table as event-time-ordered parquet chunks (the
-    Kafka stand-in) with a fully DISTRIBUTED write (repartitionByRange +
-    sortWithinPartitions — no driver-side toPandas, VERDICT r2 item #5),
-    consumes them with maxFilesPerTrigger=1 + a 0-second watermark through
-    the applyInPandasWithState operator, and commits via the exactly-once
-    epoch sink. Returns the sink (read it back as a batch DataFrame).
+    """Shared streaming-join stage for the streaming gate queries: the
+    click/view events replay (ordered by ts, then side) through the
+    applyInPandasWithState closure join into the exactly-once epoch sink.
+    Returns the sink (read it back as a batch DataFrame). The punctuation
+    row is a lone one-sided row for an unused user, so it emits no pairs.
     """
-    import datetime
     import os
-    import tempfile
 
     from statefulstreamprocessor_spark.shipping import ensure_package_shipped
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    from statefulstreamprocessor_spark.sources import staging
     from statefulstreamprocessor_spark.streaming.sink import IdempotentBatchSink
     from statefulstreamprocessor_spark.streaming.stateful_join import (
         streaming_nn_join,
@@ -2507,48 +2317,17 @@ def _run_streaming_nn_join(spark: SparkSession, sf_dir: str):
             "value",
         )
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_stream_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(
-        ev, in_dir, n_files=4, ts_col="ts", tiebreak_cols=["side"]
+    r = staging.replay_stream(
+        ev, "ts",
+        punctuation={"user_id": -1, "side": "r", "event_id": -1, "value": 0.0},
+        n_files=4, tiebreak_cols=["side"],
     )
-    # punctuation record: Spark's watermark is millisecond-truncated, so a
-    # µs-precision final event time is never sealed by wm == max - 0s; one
-    # sentinel row for an unused key pushes the watermark past everything
-    # (a lone one-sided row emits no pairs)
-    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [(-1, mx + datetime.timedelta(hours=1), "r", -1, 0.0)],
-        "user_id bigint, ts timestamp_ntz, side string, "
-        "event_id bigint, value double",
-    )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp_ntz, side string, "
-            "event_id bigint, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    stream = raw.select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "side",
-        "event_id",
-        "value",
-    ).withWatermark("ts", "0 seconds")
     joined = streaming_nn_join(
-        stream, keys=["user_id"], ts_col="ts", side_col="side", n_buckets=32
+        _event_time(r.stream), keys=["user_id"], ts_col="ts", side_col="side",
+        n_buckets=32,
     )
-    sink = IdempotentBatchSink(os.path.join(tmp, "out"))
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink = IdempotentBatchSink(os.path.join(r.tmp, "out"))
+    staging.drain_foreach_batch(joined, sink, r.tmp)
     return sink
 
 
@@ -2578,77 +2357,28 @@ def q_stream_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     06_DB_Connector/db_connector.py:21-66), pinned to a DuckDB oracle
     computed off the same closure-pair SQL as the batch join.
 
-    Stage 2 restages the sink output as event-time-ordered chunks (the
-    intermediate topic stand-in) and runs Spark's built-in streaming
-    windowed aggregation over them; the punctuation row (2 h past the
-    last pair) flushes the final window and lands in its own window,
+    Stage 2 replays the sink output (the intermediate topic stand-in)
+    through Spark's built-in streaming windowed aggregation; the
+    punctuation row flushes the final window and lands in its own window,
     filtered out of the RESULT — a pre-aggregation filter is unsafe here
     because Catalyst pushes it below the EventTimeWatermark node, so the
     sentinel would never advance the watermark.
     """
-    import datetime
-    import os
-    import tempfile
+    from statefulstreamprocessor_spark.sources import staging
 
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
+    pairs = _run_streaming_nn_join(spark, sf_dir).read(spark).select(
+        F.col("r_ts").cast("timestamp_ntz").alias("r_ts"), "r_value"
     )
-
-    sink = _run_streaming_nn_join(spark, sf_dir)
-    pairs = sink.read(spark).select(
-        F.col("r_ts").cast("timestamp_ntz").alias("r_ts"),
-        "r_value",
-    )
-    tmp = tempfile.mkdtemp(prefix="ssp_rollup_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(pairs, in_dir, n_files=3, ts_col="r_ts")
-    mx = pairs.agg(F.max("r_ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [(mx + datetime.timedelta(hours=2), 0.0)],
-        "r_ts timestamp_ntz, r_value double",
-    )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema("r_ts timestamp_ntz, r_value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    r = staging.replay_stream(pairs, "r_ts", punctuation={"r_value": 0.0})
     agg = (
-        raw.select(F.col("r_ts").cast("timestamp").alias("r_ts"), "r_value")
-        .withWatermark("r_ts", "0 seconds")
+        _event_time(r.stream, "r_ts")
         .groupBy(F.window("r_ts", "1 hour"))
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(F.col("r_value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_r_value"),
-        )
+        .agg(*_count_and_sum("r_value", "n_pairs", "sum_r_value"))
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
+    res = staging.drain_to_parquet(agg, r.tmp)
     # every real window starts at or before the max pair timestamp; the
-    # punctuation's window starts ≥ 1 h past it — filter it from the
-    # result. The comparison runs in pure integer µs on BOTH sides: a
-    # naive-datetime F.lit() builds its TIMESTAMP literal via the DRIVER
-    # process's timezone while the NTZ cast renders via the SESSION
-    # timezone, so the mixed comparison is wrong by the session offset
-    # whenever the two differ (round-5 NY-tz cross-check catch)
-    mx_us = (mx - datetime.datetime(1970, 1, 1)) // datetime.timedelta(
-        microseconds=1
-    )
-    return res.filter(
-        _us(F.col("window.start").cast("timestamp_ntz")) <= F.lit(mx_us)
-    ).select(
+    # punctuation's window starts ≥ 1 h past it
+    return res.filter(_window_starts_by(r.max_ts)).select(
         _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
         "n_pairs",
         "sum_r_value",
@@ -2664,19 +2394,14 @@ def q_stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     destination, re-aggregated across epochs, must equal the plain batch
     GROUP BY oracle."""
     import os
-    import tempfile
 
-    from statefulstreamprocessor_spark.sources.staging import (
-        write_time_ordered_chunks,
-    )
+    from statefulstreamprocessor_spark.sources import staging
     from statefulstreamprocessor_spark.streaming.sink import FanoutSink
 
     ev = _load(spark, sf_dir, "events").select("event_type", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="ssp_fanout_gate_")
-    in_dir = os.path.join(tmp, "input")
-    write_time_ordered_chunks(ev, in_dir, n_files=3, ts_col="ts")
+    r = staging.replay_stream(ev, "ts")
     sink = FanoutSink(
-        os.path.join(tmp, "out"),
+        os.path.join(r.tmp, "out"),
         {
             "rows": lambda df: df,
             "rollup": lambda df: df.groupBy("event_type").agg(
@@ -2684,20 +2409,7 @@ def q_stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         },
     )
-    raw = (
-        spark.readStream.schema(
-            "event_type string, ts timestamp_ntz, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    staging.drain_foreach_batch(r.stream, sink, r.tmp)
     n_rows = sink.read(spark, "rows").count()
     return (
         sink.read(spark, "rollup")
@@ -2719,24 +2431,19 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the gate pins the full chain: per-batch hot-key-safe pre-reduce,
     conditional file-level copy-on-write merge, epoch ledger."""
     import os
-    import tempfile
 
     from statefulstreamprocessor_spark.operators.sessions import _us
-    from statefulstreamprocessor_spark.sources.staging import (
-        write_time_ordered_chunks,
-    )
+    from statefulstreamprocessor_spark.sources import staging
     from statefulstreamprocessor_spark.sources.tables import create_table
     from statefulstreamprocessor_spark.streaming.sink import UpsertTableSink
 
     ev = _load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_upsert_gate_")
-    in_dir = os.path.join(tmp, "input")
-    write_time_ordered_chunks(ev, in_dir, n_files=3, ts_col="ts")
+    r = staging.replay_stream(ev, "ts")
     table = create_table(
         spark,
-        os.path.join(tmp, "t"),
+        os.path.join(r.tmp, "t"),
         "user_id bigint, ts_us bigint, event_id bigint, "
         "event_type string, value double",
         partition_by=["event_type"],
@@ -2747,28 +2454,14 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = UpsertTableSink(
         table, keys=["user_id"], order_cols=["ts_us", "event_id"]
     )
-    raw = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp_ntz, user_id bigint, "
-            "event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    shaped = raw.select(
+    shaped = r.stream.select(
         "user_id",
         _us(F.col("ts")).alias("ts_us"),
         "event_id",
         "event_type",
         "value",
     )
-    q = (
-        shaped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    staging.drain_foreach_batch(shaped, sink, r.tmp)
     return sink.read()
 
 
@@ -2797,57 +2490,21 @@ def q_tumbling_hourly_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1 h aggregation in STREAMING mode (availableNow + 0 s
     watermark + append output), pinned to the same DuckDB oracle as the
     batch q_tumbling_hourly. Uses Spark's built-in windowed aggregation
-    state; a punctuation row (dummy event_type, max ts + 2 h) closes the
-    final window, and its own window is filtered out of the result. Input
-    chunks are staged by the distributed writer (no driver toPandas)."""
-    import datetime
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    state; the punctuation row (dummy event_type) lands in its own window,
+    which is filtered from the RESULT (a pre-agg filter would be pushed
+    below the watermark node and stall it)."""
+    from statefulstreamprocessor_spark.sources import staging
 
     ev = _load(spark, sf_dir, "events").select("event_type", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="ssp_tumbling_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(ev, in_dir, n_files=3, ts_col="ts")
-    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [("__punctuation__", mx + datetime.timedelta(hours=2), 0.0)],
-        "event_type string, ts timestamp_ntz, value double",
-    )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema("event_type string, ts timestamp_ntz, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    r = staging.replay_stream(
+        ev, "ts", punctuation={"event_type": "__punctuation__", "value": 0.0}
     )
     agg = (
-        raw.select(
-            "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
-        )
-        .withWatermark("ts", "0 seconds")
+        _event_time(r.stream)
         .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
+        .agg(*_count_and_sum("value", "n", "sum_value"))
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
+    res = staging.drain_to_parquet(agg, r.tmp)
     return res.filter(F.col("event_type") != "__punctuation__").select(
         _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
         "event_type",
@@ -2862,59 +2519,25 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups, watermark-sealed prefix emission, per-key running-state
     carry): every event comes back out with its session index, pinned to
     the SAME DuckDB oracle as the batch q_sessionize. The punctuation
-    row (unused user, +2 h) advances the watermark so every real row
-    seals; its own row never seals and is filtered regardless."""
-    import datetime
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    row (unused user) never seals and is filtered regardless."""
+    from statefulstreamprocessor_spark.sources import staging
     from statefulstreamprocessor_spark.streaming.sessionize import (
         streaming_sessionize,
     )
 
     ev = _load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    tmp = tempfile.mkdtemp(prefix="ssp_strsess_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(ev, in_dir, n_files=3, ts_col="ts")
-    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [(-1, mx + datetime.timedelta(hours=2), -1)],
-        "user_id bigint, ts timestamp_ntz, event_id bigint",
+    r = staging.replay_stream(
+        ev, "ts", punctuation={"user_id": -1, "event_id": -1}
     )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp_ntz, event_id bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    stream = raw.select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "event_id"
-    ).withWatermark("ts", "0 seconds")
     out = streaming_sessionize(
-        stream, ["user_id"], "ts", "event_id", gap_seconds=1800.0,
-        n_buckets=32,
+        _event_time(r.stream), ["user_id"], "ts", "event_id",
+        gap_seconds=1800.0, n_buckets=32,
         # 90-day idle TTL: far beyond the dataset's span, so the summary
         # eviction path runs under the gate while the output stays exactly
         # the batch-sessionize oracle (round-5: bounded summary state)
         state_ttl=90 * 86400.0,
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
+    res = staging.drain_to_parquet(out, r.tmp)
     return res.filter(F.col("user_id") >= 0).select(
         "user_id",
         _us(F.col("ts").cast("timestamp_ntz")).alias("ts_us"),
@@ -2932,20 +2555,12 @@ def q_streaming_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned to the SAME DuckDB oracle as the batch q_asof_backward. The
     per-key latest-click summary state is TTL-bounded (90 d here, far
     beyond the dataset span — eviction path on, output unchanged)."""
-    import datetime
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    from statefulstreamprocessor_spark.sources import staging
     from statefulstreamprocessor_spark.streaming.asof import (
         streaming_asof_enrich,
     )
 
-    ev = _load(spark, sf_dir, "events")
-    merged = ev.filter(
+    merged = _load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click")
     ).select(
         "user_id",
@@ -2956,44 +2571,16 @@ def q_streaming_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("r")
         .alias("side"),
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_strasof_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(merged, in_dir, n_files=3, ts_col="ts")
-    mx = merged.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [(-1, mx + datetime.timedelta(hours=2), -1, 0.0, "r")],
-        "user_id bigint, ts timestamp_ntz, event_id bigint, value double, "
-        "side string",
+    r = staging.replay_stream(
+        merged, "ts",
+        punctuation={"user_id": -1, "event_id": -1, "value": 0.0, "side": "r"},
     )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp_ntz, event_id bigint, "
-            "value double, side string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    stream = raw.select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"),
-        "event_id", "value", "side",
-    ).withWatermark("ts", "0 seconds")
     out = streaming_asof_enrich(
-        stream, ["user_id"], "ts", "side",
+        _event_time(r.stream), ["user_id"], "ts", "side",
         left_cols=["event_id", "value"], right_cols=["event_id"],
         n_buckets=32, state_ttl=90 * 86400.0,
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
+    res = staging.drain_to_parquet(out, r.tmp)
     return res.filter(F.col("user_id") >= 0).select(
         "user_id",
         _us(F.col("ts").cast("timestamp_ntz")).alias("ts_us"),
@@ -3008,62 +2595,25 @@ def q_sliding_1h_15m_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1 h / 15 min window counts in STREAMING mode (availableNow
     + 0 s watermark + append output), pinned to the same DuckDB oracle as
     the batch q_sliding_1h_15m — completing the streaming trio
-    (tumbling/session/sliding). The punctuation row (2 h past max ts)
-    closes every real window; all four of its own overlapping windows
-    start strictly after the last real timestamp and are filtered from
-    the RESULT (a pre-agg filter would be pushed below the watermark
-    node and stall it — see q_tumbling_hourly_streaming)."""
-    import datetime
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    (tumbling/session/sliding). All four of the punctuation row's own
+    overlapping windows start strictly after the last real timestamp and
+    are filtered from the RESULT (a pre-agg filter would be pushed below
+    the watermark node and stall it)."""
+    from statefulstreamprocessor_spark.sources import staging
 
     ev = _load(spark, sf_dir, "events").select("event_type", "ts")
-    tmp = tempfile.mkdtemp(prefix="ssp_sliding_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(ev, in_dir, n_files=3, ts_col="ts")
-    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [("__punctuation__", mx + datetime.timedelta(hours=2))],
-        "event_type string, ts timestamp_ntz",
-    )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema("event_type string, ts timestamp_ntz")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    r = staging.replay_stream(
+        ev, "ts", punctuation={"event_type": "__punctuation__"}
     )
     agg = (
-        raw.select("event_type", F.col("ts").cast("timestamp").alias("ts"))
-        .withWatermark("ts", "0 seconds")
+        _event_time(r.stream)
         .groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
-    # integer-µs comparison on both sides — a naive-datetime F.lit()
-    # localizes via the DRIVER tz while the NTZ cast renders via the
-    # SESSION tz (round-5 NY-tz cross-check catch; see
-    # q_stream_join_rollup)
-    mx_us = (mx - datetime.datetime(1970, 1, 1)) // datetime.timedelta(
-        microseconds=1
-    )
+    res = staging.drain_to_parquet(agg, r.tmp)
     return res.filter(
         (F.col("event_type") != "__punctuation__")
-        & (_us(F.col("window.start").cast("timestamp_ntz")) <= F.lit(mx_us))
+        & _window_starts_by(r.max_ts)
     ).select(
         _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
         "event_type",
@@ -3074,51 +2624,18 @@ def q_sliding_1h_15m_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_session_30m_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30 min gap, per user) in STREAMING mode — Spark's
     session_window state merged incrementally across availableNow
-    micro-batches, pinned to the batch q_session_30m oracle. A punctuation
-    row for an unused user closes every real session at end-of-stream.
-    Input chunks are staged by the distributed writer (no driver
-    toPandas)."""
-    import datetime
-    import os
-    import tempfile
-
-    from statefulstreamprocessor_spark.sources.staging import (
-        append_flush_file,
-        write_time_ordered_chunks,
-    )
+    micro-batches, pinned to the batch q_session_30m oracle. The
+    punctuation row is an unused user, filtered from the result."""
+    from statefulstreamprocessor_spark.sources import staging
 
     ev = _load(spark, sf_dir, "events").select("user_id", "ts")
-    tmp = tempfile.mkdtemp(prefix="ssp_session_gate_")
-    in_dir = os.path.join(tmp, "input")
-    idx = write_time_ordered_chunks(ev, in_dir, n_files=3, ts_col="ts")
-    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-    flush = spark.createDataFrame(
-        [(-1, mx + datetime.timedelta(hours=2))],
-        "user_id bigint, ts timestamp_ntz",
-    )
-    append_flush_file(flush, in_dir, idx)
-    raw = (
-        spark.readStream.schema("user_id bigint, ts timestamp_ntz")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    r = staging.replay_stream(ev, "ts", punctuation={"user_id": -1})
     agg = (
-        raw.select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-        .withWatermark("ts", "0 seconds")
+        _event_time(r.stream)
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out_dir = os.path.join(tmp, "out")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir)
+    res = staging.drain_to_parquet(agg, r.tmp)
     return res.filter(F.col("user_id") >= 0).select(
         "user_id",
         _us(F.col("session_window.start").cast("timestamp_ntz")).alias("ss_us"),
@@ -3147,11 +2664,8 @@ def _tune_session(spark: SparkSession) -> None:
 
     Mutation scope (ADVICE round-4): a session whose LAUNCH config set
     the value explicitly — even to 200 — is never touched (detected via
-    the SparkContext conf, which only carries builder-time settings),
-    and the pre-tune value is stashed under
-    ``spark.statefulstreamprocessor.prev_shuffle_partitions`` so a
-    caller can restore it after materializing its query. A runtime
-    ``conf.set(..., "200")`` is indistinguishable from the stock
+    the SparkContext conf, which only carries builder-time settings). A
+    runtime ``conf.set(..., "200")`` is indistinguishable from the stock
     default and is still treated as untuned — documented limitation."""
     try:
         if spark.sparkContext.getConf().contains(
@@ -3160,10 +2674,6 @@ def _tune_session(spark: SparkSession) -> None:
             return  # explicit launch-time choice — user intent, keep it
         if spark.conf.get("spark.sql.shuffle.partitions") == "200":
             cores = spark.sparkContext.defaultParallelism
-            spark.conf.set(
-                "spark.statefulstreamprocessor.prev_shuffle_partitions",
-                "200",
-            )
             spark.conf.set(
                 "spark.sql.shuffle.partitions", str(min(max(8, cores), 64))
             )

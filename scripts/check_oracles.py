@@ -14,12 +14,15 @@ import hashlib
 import math
 import os
 import sys
+import time
 
 import duckdb
 
 # override with e.g. SSP_ORACLE_SF_DIR=/root/testdata/sf0.1 for a
 # larger-scale cross-check (the driver gate itself runs sf0.01)
 SF_DIR = os.environ.get("SSP_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+# the checkout this script lives in — a copy of the repo gates itself
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def canon(v) -> str:
@@ -56,7 +59,7 @@ def pandas_canon_digest(pdf) -> str:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import __spark_entry__ as entry_mod
     from statefulstreamprocessor_spark.session import get_spark
 
@@ -77,10 +80,12 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
+            t0 = time.perf_counter()
             sdf = fn(spark, SF_DIR)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
             spdf = sdf.toPandas()
+            wall = time.perf_counter() - t0
         except Exception as e:
             print(f"{name}: SPARK ERROR {type(e).__name__}: {str(e)[:300]}")
             failures += 1
@@ -90,7 +95,10 @@ def main() -> int:
             # canonicalization — an unhashable column crashes the gate
             try:
                 pandas_canon_digest(spdf)
-                print(f"{name}: rows={len(srows)} (rows-only, no oracle)")
+                print(
+                    f"{name}: rows={len(srows)} (rows-only, no oracle) "
+                    f"wall {wall:.2f}s"
+                )
             except Exception as e:
                 print(f"{name}: CANON ERROR {type(e).__name__}: {str(e)[:200]}")
                 failures += 1
@@ -103,18 +111,6 @@ def main() -> int:
             print(f"{name}: DUCKDB ERROR {type(e).__name__}: {str(e)[:300]}")
             failures += 1
             continue
-        # normalize duckdb values to match Spark python types
-        import datetime
-        import decimal
-
-        def norm(v):
-            if isinstance(v, decimal.Decimal):
-                return v
-            if isinstance(v, datetime.datetime):
-                return v
-            return v
-
-        drows = [tuple(norm(v) for v in r) for r in drows]
         sh, sn = digest(scols, srows)
         dh, dn = digest(dcols, drows)
         schema_ok = sorted(scols) == sorted(dcols)
@@ -130,7 +126,8 @@ def main() -> int:
         print(
             f"{name}: {'OK' if ok else 'MISMATCH'} rows {sn}/{dn} "
             f"schema {'ok' if schema_ok else f'{sorted(scols)} vs {sorted(dcols)}'} "
-            f"hash {sh}/{dh} pandas {'ok' if pandas_ok else 'FAIL'}"
+            f"hash {sh}/{dh} pandas {'ok' if pandas_ok else 'FAIL'} "
+            f"wall {wall:.2f}s"
         )
         if not ok:
             failures += 1

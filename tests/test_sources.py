@@ -117,6 +117,60 @@ def test_rate_replay_emits_table_rows(spark, tmp_path):
         q.stop()
 
 
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_replay_stream_stages_punctuates_and_drains(spark, tz):
+    import datetime
+    import os
+
+    import pyarrow.parquet as pq
+
+    from statefulstreamprocessor_spark.sources import staging
+
+    # µs-precision times across the New York spring-forward gap
+    base = datetime.datetime(2024, 3, 10, 1, 0, 0, 123457)
+    rows = [
+        (i % 5, base + datetime.timedelta(minutes=7 * i, microseconds=i), i / 4)
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "k bigint, ts timestamp_ntz, v double")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        r = staging.replay_stream(df, "ts", punctuation={"k": -1, "v": 0.0})
+        assert r.max_ts == df.agg(F.max("ts")).first()[0]
+        assert r.stream.schema == df.schema
+
+        in_dir = os.path.join(r.tmp, "input")
+        parts = sorted(
+            f for f in os.listdir(in_dir) if f.startswith("part-")
+        ) + ["zz-flush.parquet"]
+        assert len(parts) == 4
+        mtimes = [os.stat(os.path.join(in_dir, f)).st_mtime for f in parts]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
+        ts = [
+            pq.read_table(os.path.join(in_dir, f)).column("ts").to_pylist()
+            for f in parts
+        ]
+        assert all(max(a) <= min(b) for a, b in zip(ts, ts[1:]))
+        assert ts[-1] == [r.max_ts + staging.PUNCTUATION_OFFSET]
+
+        got = staging.drain_to_parquet(r.stream, r.tmp).collect()
+        assert sorted(tuple(x) for x in got) == sorted(
+            rows + [(-1, r.max_ts + staging.PUNCTUATION_OFFSET, 0.0)]
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_replay_stream_needs_footer_statistics(spark):
+    from statefulstreamprocessor_spark.sources import staging
+
+    # a with-tz TIMESTAMP is written as INT96, whose footer has no min/max
+    df = spark.sql("select timestamp'2024-01-01 00:00:00' as ts, 1 as v")
+    with pytest.raises(ValueError, match="no min/max statistics"):
+        staging.replay_stream(df, "ts", punctuation={"v": 0})
+
+
 def test_machine_code_and_prefilter(spark):
     from statefulstreamprocessor_spark.functions.records import (
         machine_code,
