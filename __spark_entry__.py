@@ -809,8 +809,8 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse(serialize(x)) == x, including Content-Length audit
     (length_ok) and interior newlines in payloads."""
     import os
-    import tempfile
 
+    from statefulstreamprocessor_spark.sources.staging import staging_dir
     from statefulstreamprocessor_spark.sources.wet import (
         read_wet,
         wet_record_col,
@@ -831,7 +831,7 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rec = F.concat(
         F.lit("WARC/1.0\r\n"), wet_record_col(url, date, F.col("text"))
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_wet_gate_")
+    tmp = staging_dir("ssp_wet_gate_")
     out_dir = os.path.join(tmp, "wet")
     docs.select(rec.alias("value")).write.mode("overwrite").text(out_dir)
     return read_wet(spark, out_dir)
@@ -1406,14 +1406,14 @@ def q_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     union, committed by the same atomic snapshot swap every maintenance
     action uses (sources/tables.py:merge_into)."""
     import os
-    import tempfile
 
+    from statefulstreamprocessor_spark.sources.staging import staging_dir
     from statefulstreamprocessor_spark.sources.tables import create_table
 
     docs = _load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_merge_gate_")
+    tmp = staging_dir("ssp_merge_gate_")
     t = create_table(
         spark,
         os.path.join(tmp, "t"),
@@ -1444,14 +1444,14 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup from the replayed FINAL base state — incremental == recompute
     is exactly the invariant the operator exists to provide."""
     import os
-    import tempfile
 
+    from statefulstreamprocessor_spark.sources.staging import staging_dir
     from statefulstreamprocessor_spark.sources.tables import create_table
 
     docs = _load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_rollup_gate_")
+    tmp = staging_dir("ssp_rollup_gate_")
     base = create_table(
         spark,
         os.path.join(tmp, "b"),
@@ -1539,14 +1539,14 @@ def q_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimization). The open-fewer-files proof is pytest-side
     (tests/test_admin.py); the oracle pins the row contract."""
     import os
-    import tempfile
 
+    from statefulstreamprocessor_spark.sources.staging import staging_dir
     from statefulstreamprocessor_spark.sources.tables import create_table
 
     ev = _load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_cluster_gate_")
+    tmp = staging_dir("ssp_cluster_gate_")
     t = create_table(
         spark,
         os.path.join(tmp, "t"),
@@ -1602,11 +1602,10 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     run aggregation. The oracle replays the snapshots declaratively and
     runs the same gaps-and-islands in SQL (lag + IS DISTINCT FROM +
     running break sum)."""
-    import tempfile
-
     from statefulstreamprocessor_spark.operators.scd2 import scd2_history
+    from statefulstreamprocessor_spark.sources.staging import staging_dir
 
-    tmp = tempfile.mkdtemp(prefix="ssp_scd2_gate_")
+    tmp = staging_dir("ssp_scd2_gate_")
     t = _scd2_gate_table(spark, sf_dir, tmp)
     return scd2_history(t.history(), ["doc_id"], current_version=2)
 
@@ -1619,14 +1618,13 @@ def q_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle needs no islands at all: the attributes valid at version v
     ARE the replayed snapshot v, so a plain LEFT JOIN on
     (key, version) is the independent ground truth."""
-    import tempfile
-
     from statefulstreamprocessor_spark.operators.scd2 import (
         scd2_enrich,
         scd2_history,
     )
+    from statefulstreamprocessor_spark.sources.staging import staging_dir
 
-    tmp = tempfile.mkdtemp(prefix="ssp_scd2e_gate_")
+    tmp = staging_dir("ssp_scd2e_gate_")
     t = _scd2_gate_table(spark, sf_dir, tmp)
     hist = scd2_history(t.history(), ["doc_id"], current_version=2)
     facts = _load(spark, sf_dir, "documents").select(
@@ -1645,9 +1643,9 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges are file-level copy-on-write, so v2 shares untouched files
     with v1 and v0 by reference (hard links) — the read-back equality
     proves the carried files are intact."""
-    import tempfile
+    from statefulstreamprocessor_spark.sources.staging import staging_dir
 
-    tmp = tempfile.mkdtemp(prefix="ssp_travel_gate_")
+    tmp = staging_dir("ssp_travel_gate_")
     t = _scd2_gate_table(spark, sf_dir, tmp)
     out = None
     for v in (0, 1, 2):
@@ -1667,14 +1665,14 @@ def q_compact_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining columns in declared order; the oracle replays the same
     struct-max in DuckDB."""
     import os
-    import tempfile
 
+    from statefulstreamprocessor_spark.sources.staging import staging_dir
     from statefulstreamprocessor_spark.sources.tables import create_table
 
     ev = _load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="ssp_compact_gate_")
+    tmp = staging_dir("ssp_compact_gate_")
     t = create_table(
         spark,
         os.path.join(tmp, "t"),
@@ -2713,7 +2711,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # leads (VERDICT r06 "What's wrong" #1 — its banding was refactored in
     # round 6 without a fresh driver row), then every query whose CODE
     # PATH this optimization round touched (nn_join's array_compact +
-    # local struct types, the batch as-of _merge_sides struct types, the
+    # local struct types, the batch as-of merge's struct types, the
     # numpy cosine_topk scorer, the lambda-free ngram grams feeding
     # ngram_jaccard/dedup_clusters/split_leakage_safe and
     # doc_ngram_repetition, windowed_latest_pair's prefilter, the

@@ -12,14 +12,15 @@ broadcast, no range explosion, skew-tolerant (per-key cost linear).
 
 from __future__ import annotations
 
-import re
+from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .sqlident import null_struct_sql, quote_ident, struct_sql
 
 __all__ = ["asof_join", "asof_join_banded"]
-
-_PLAIN_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def _orderable(dtype) -> bool:
@@ -40,42 +41,59 @@ def _orderable(dtype) -> bool:
     return True
 
 
-def _merge_sides(
-    df_left: DataFrame,
-    df_right: DataFrame,
-    keys: list[str],
-    ts_col: str,
-) -> tuple[DataFrame, list[str], list[str]]:
-    """Union the two sides into one keyed stream: ``__ts`` | ``__side``
-    (0 = right, sorts first at equal ts so ties stay inclusive) | ``__lp``
-    / ``__rp`` payload structs."""
-    left_payload = [c for c in df_left.columns if c not in keys]
-    right_payload = [c for c in df_right.columns if c not in keys]
-    from pyspark.sql.types import StructType
+class _Merged:
+    """The two sides unioned into one keyed stream: keys | ``__ts`` |
+    ``__side`` (0 = right, sorts first at equal ts so ties stay inclusive)
+    | ``__lp`` / ``__rp`` payload structs, each side's struct in its own
+    slot and a typed NULL in the other's. The struct types come from the
+    input schemas directly (no per-side analysis round-trip)."""
 
-    # local struct types — no per-side analysis round-trip (see nn_join)
-    lp_type = StructType([df_left.schema[c] for c in left_payload])
-    rp_type = StructType([df_right.schema[c] for c in right_payload])
-    merged = df_right.select(
-        *keys,
-        F.col(ts_col).alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(lp_type).alias("__lp"),
-        F.struct(*right_payload).alias("__rp"),
-    ).unionByName(
-        df_left.select(
-            *keys,
-            F.col(ts_col).alias("__ts"),
-            F.lit(1).alias("__side"),
-            F.struct(*left_payload).alias("__lp"),
-            F.lit(None).cast(rp_type).alias("__rp"),
+    def __init__(
+        self, df_left: DataFrame, df_right: DataFrame, keys: list[str], ts_col: str
+    ):
+        self.keys, self.ts_col = keys, ts_col
+        self.ts_dtype = df_left.schema[ts_col].dataType.simpleString()
+        self.left_payload = [c for c in df_left.columns if c not in keys]
+        self.right_payload = [c for c in df_right.columns if c not in keys]
+        lp_type = StructType([df_left.schema[c] for c in self.left_payload])
+        rp_type = StructType([df_right.schema[c] for c in self.right_payload])
+        self.rp_orderable = _orderable(rp_type)
+
+        def tag(df: DataFrame, side: int, lp: str, rp: str) -> DataFrame:
+            return df.selectExpr(
+                *map(quote_ident, keys),
+                f"{quote_ident(ts_col)} AS __ts",
+                f"{side} AS __side",
+                f"{lp} AS __lp",
+                f"{rp} AS __rp",
+            )
+
+        self.df = tag(
+            df_right, 0, null_struct_sql(lp_type), struct_sql(self.right_payload)
+        ).unionByName(
+            tag(df_left, 1, struct_sql(self.left_payload), null_struct_sql(rp_type))
         )
-    )
-    return merged, left_payload, right_payload
+
+    def project(
+        self, ann: DataFrame, right_prefix: str, cand: str = "__cand"
+    ) -> DataFrame:
+        """Left-outer output: keys, the left payload, then the ``cand``
+        right struct's ts and payload under ``right_prefix``."""
+        q, ts_col = quote_ident, self.ts_col
+        return ann.selectExpr(
+            *map(q, self.keys),
+            *[f"__lp.{q(c)} AS {q(c)}" for c in self.left_payload],
+            f"{cand}.t AS {q(right_prefix + ts_col)}",
+            *[
+                f"{cand}.p.{q(c)} AS {q(right_prefix + c)}"
+                for c in self.right_payload
+                if c != ts_col
+            ],
+        )
 
 
-def _time_units_fn(ts_dtype: str):
-    """(to_units, units_per_second) for tolerance/band math.
+def _time_units_fn(ts_dtype: str) -> tuple[Callable[[str], str], int]:
+    """(to_units SQL, units_per_second) for tolerance/band math.
 
     TIMESTAMP_NTZ stays in EXACT integer microseconds via timestamp_diff
     from the NTZ epoch — session-tz-proof (no DST-shifted cast) AND free
@@ -84,29 +102,30 @@ def _time_units_fn(ts_dtype: str):
     integer-µs discipline the oracles use). Every other type (tz-aware
     timestamp, numeric seconds) compares in double seconds."""
     if ts_dtype == "timestamp_ntz":
-        epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
+        epoch = "CAST('1970-01-01 00:00:00' AS TIMESTAMP_NTZ)"
+        return (lambda c: f"timestampdiff(MICROSECOND, {epoch}, {c})"), 1_000_000
+    return (lambda c: f"CAST({c} AS DOUBLE)"), 1
 
-        def to_units(c):
-            return F.timestamp_diff("MICROSECOND", epoch, c)
 
-        return to_units, 1_000_000
-    return (lambda c: c.cast("double")), 1
+def _units_sql(seconds: float, ups: int) -> str:
+    """``seconds`` as a literal in the units of :func:`_time_units_fn`:
+    exact integer µs, or a double."""
+    if ups != 1:
+        return str(int(round(float(seconds) * ups)))
+    return f"CAST('{float(seconds)!r}' AS DOUBLE)"
 
 
 def _asof_core(
+    m: _Merged,
     merged: DataFrame,
     part_cols: list[str],
-    keys: list[str],
-    ts_col: str,
     direction: str,
-    tolerance: float | None,
-    ts_dtype: str,
-    left_payload: list[str],
-    right_payload: list[str],
-    right_prefix: str,
+    tolerance: float | None = None,
+    cand: str = "__cand",
 ) -> DataFrame:
-    """Shared window core: running nearest-in-direction right candidate per
-    partition, tolerance cut, left-outer projection.
+    """Shared window core: the running nearest-in-direction right
+    candidate ``cand`` per ``part_cols`` partition on every left row,
+    NULLed where it lies beyond ``tolerance``.
 
     Duplicate right timestamps on one key resolve deterministically by
     the right payload struct — max for backward, min for forward, the
@@ -114,127 +133,40 @@ def _asof_core(
     ``streaming_asof_enrich`` (round-6 alignment) — whenever that struct
     is orderable; a map-typed right payload falls back to the
     engine-arbitrary pick (documented on :func:`asof_join`)."""
-    rp_orderable = _orderable(
-        merged.schema["__rp"].dataType
-    )
     if direction == "backward":
         # asc traversal: the right row (side 0) precedes an equal-ts left
         # row, so right.ts <= left.ts is inclusive; __rp asc puts the
         # payload-MAX right row last among equal-ts rights, and the
         # running `last` picks it
-        order = [F.col("__ts").asc(), F.col("__side").asc()]
-        if rp_orderable:
-            order.append(F.col("__rp").asc())
+        order = ["__ts ASC", "__side ASC", "__rp ASC"]
     else:
         # desc traversal must ALSO put the right row first at equal ts —
         # side ASC (0 before 1), not desc — so right.ts >= left.ts is
         # inclusive as documented; __rp desc makes the payload-MIN right
         # row the last-seen among equal-ts rights
-        order = [F.col("__ts").desc(), F.col("__side").asc()]
-        if rp_orderable:
-            order.append(F.col("__rp").desc())
+        order = ["__ts DESC", "__side ASC", "__rp DESC"]
+    if not m.rp_orderable:
+        order.pop()
     w = (
-        Window.partitionBy(*part_cols)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cand = F.last(
-        F.when(
-            F.col("__side") == 0,
-            F.struct(F.col("__ts").alias("t"), F.col("__rp").alias("p")),
-        ),
-        ignorenulls=True,
-    ).over(w)
-
-    ann = merged.withColumn("__cand", cand).filter(F.col("__side") == 1)
-    if tolerance is not None:
-        to_units, ups = _time_units_fn(ts_dtype)
-        tol_units = (
-            int(round(float(tolerance) * ups)) if ups != 1 else float(tolerance)
-        )
-        in_tol = (
-            F.abs(to_units(F.col("__cand.t")) - to_units(F.col("__ts")))
-            <= F.lit(tol_units)
-        )
-        ann = ann.withColumn("__cand", F.when(in_tol, F.col("__cand")))
-
-    out = (
-        [F.col(k) for k in keys]
-        + [F.col(f"__lp.{c}").alias(c) for c in left_payload]
-        + [F.col("__cand.t").alias(f"{right_prefix}{ts_col}")]
-        + [
-            F.col(f"__cand.p.{c}").alias(f"{right_prefix}{c}")
-            for c in right_payload
-            if c != ts_col
-        ]
-    )
-    return ann.select(*out)
-
-
-def _asof_sql_fast(
-    df_left: DataFrame,
-    df_right: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    direction: str,
-    right_prefix: str,
-) -> DataFrame:
-    """SQL-string form of the tolerance-free ``asof_join`` — the same
-    logical plan as ``_merge_sides`` + ``_asof_core`` (payload-struct
-    tie-break included) parsed JVM-side in four selects instead of
-    hundreds of per-Column py4j round-trips (see ``nn_join._nn_pairs_sql``
-    for the measured rationale). Callers guarantee every involved
-    identifier is a plain SQL name and the right payload is orderable."""
-    left_payload = [c for c in df_left.columns if c not in keys]
-    right_payload = [c for c in df_right.columns if c not in keys]
-    from pyspark.sql.types import StructType
-
-    lp_t = StructType([df_left.schema[c] for c in left_payload]).simpleString()
-    rp_t = StructType([df_right.schema[c] for c in right_payload]).simpleString()
-    kq = [f"`{k}`" for k in keys]
-
-    def struct_of(cols: list[str]) -> str:
-        return "struct(" + ", ".join(f"`{c}` AS `{c}`" for c in cols) + ")"
-
-    merged = df_right.selectExpr(
-        *kq,
-        f"`{ts_col}` AS __ts",
-        "0 AS __side",
-        f"CAST(NULL AS {lp_t}) AS __lp",
-        f"{struct_of(right_payload)} AS __rp",
-    ).unionByName(
-        df_left.selectExpr(
-            *kq,
-            f"`{ts_col}` AS __ts",
-            "1 AS __side",
-            f"{struct_of(left_payload)} AS __lp",
-            f"CAST(NULL AS {rp_t}) AS __rp",
-        )
-    )
-    order = (
-        "__ts ASC, __side ASC, __rp ASC"
-        if direction == "backward"
-        else "__ts DESC, __side ASC, __rp DESC"
-    )
-    w = (
-        f"OVER (PARTITION BY {', '.join(kq)} ORDER BY {order} "
+        f"OVER (PARTITION BY {', '.join(map(quote_ident, part_cols))} "
+        f"ORDER BY {', '.join(order)} "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
     )
     ann = merged.selectExpr(
         "*",
         "last(CASE WHEN __side = 0 THEN struct(__ts AS t, __rp AS p) END, "
-        f"true) {w} AS __cand",
+        f"true) {w} AS {cand}",
     ).filter("__side = 1")
-    return ann.selectExpr(
-        *kq,
-        *[f"__lp.`{c}` AS `{c}`" for c in left_payload],
-        f"__cand.t AS `{right_prefix}{ts_col}`",
-        *[
-            f"__cand.p.`{c}` AS `{right_prefix}{c}`"
-            for c in right_payload
-            if c != ts_col
-        ],
-    )
+    if tolerance is not None:
+        to_units, ups = _time_units_fn(m.ts_dtype)
+        dt = f"abs({to_units(cand + '.t')} - {to_units('__ts')})"
+        ann = ann.withColumn(
+            cand,
+            F.expr(
+                f"CASE WHEN {dt} <= {_units_sql(tolerance, ups)} THEN {cand} END"
+            ),
+        )
+    return ann
 
 
 def asof_join(
@@ -265,55 +197,12 @@ def asof_join(
         keys = [keys]
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    if tolerance is None:
-        # SQL-string fast path (same logical plan, one parse RPC per
-        # select): applicable when every identifier is a plain SQL name
-        # and the right payload struct is orderable (the tie-break rule
-        # needs it in the ORDER BY)
-        names = [
-            *keys, ts_col, right_prefix,
-            *df_left.columns, *df_right.columns,
-        ]
-        from pyspark.sql.types import StructType
-
-        rp_orderable = _orderable(
-            StructType(
-                [df_right.schema[c] for c in df_right.columns if c not in keys]
-            )
-        )
-        if rp_orderable and all(_PLAIN_IDENT.match(c) for c in names):
-            return _asof_sql_fast(
-                df_left, df_right, keys, ts_col, direction, right_prefix
-            )
-    # at equal ts the right row must be visible to the left row, so right
-    # sorts first in backward mode and last-reversed in forward mode
-    merged, left_payload, right_payload = _merge_sides(
-        df_left, df_right, keys, ts_col
-    )
-    return _asof_core(
-        merged,
-        keys,
-        keys,
-        ts_col,
-        direction,
-        tolerance,
-        df_left.schema[ts_col].dataType.simpleString(),
-        left_payload,
-        right_payload,
-        right_prefix,
-    )
+    m = _Merged(df_left, df_right, keys, ts_col)
+    return m.project(_asof_core(m, m.df, keys, direction, tolerance), right_prefix)
 
 
 def _asof_banded_carry(
-    merged: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    direction: str,
-    ts_dtype: str,
-    left_payload: list[str],
-    right_payload: list[str],
-    right_prefix: str,
-    width: float,
+    m: _Merged, direction: str, right_prefix: str, width: float
 ) -> DataFrame:
     """Tolerance-FREE banded as-of: band-level predecessor carry.
 
@@ -331,64 +220,32 @@ def _asof_banded_carry(
     pick is deterministic — which requires the right payload struct to
     be orderable (atomic columns; same caveat as any struct sort key).
     """
-    to_units, ups = _time_units_fn(ts_dtype)
-    width_units = int(round(width * ups)) if ups != 1 else width
-    banded = merged.withColumn(
-        "__bucket",
-        F.floor(to_units(F.col("__ts")) / F.lit(width_units)).cast("long"),
+    to_units, ups = _time_units_fn(m.ts_dtype)
+    banded = m.df.selectExpr(
+        "*",
+        f"CAST(floor({to_units('__ts')} / {_units_sql(width, ups)}) AS BIGINT) "
+        "AS __bucket",
     )
-    right_struct = F.when(
-        F.col("__side") == 0,
-        F.struct(F.col("__ts").alias("t"), F.col("__rp").alias("p")),
-    )
-    if direction == "backward":
-        order = [
-            F.col("__ts").asc(), F.col("__side").asc(), F.col("__rp").asc()
-        ]
-        band_order = F.col("__bucket").asc()
-        band_best = F.max(right_struct)
-    else:
-        order = [
-            F.col("__ts").desc(), F.col("__side").asc(), F.col("__rp").desc()
-        ]
-        band_order = F.col("__bucket").desc()
-        band_best = F.min(right_struct)
-    w = (
-        Window.partitionBy(*keys, "__bucket")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cand_intra = F.last(right_struct, ignorenulls=True).over(w)
-    ann = banded.withColumn("__cand0", cand_intra).filter(F.col("__side") == 1)
+    ann = _asof_core(m, banded, [*m.keys, "__bucket"], direction, cand="__cand0")
+    best, band_order = ("max", "ASC") if direction == "backward" else ("min", "DESC")
     # band-level rows: the groupBy reuses the (key, band) partitioning the
     # window just established; the carry window runs over ≤ span/width
     # rows per key — tiny by construction
-    bands = banded.groupBy(*keys, "__bucket").agg(
-        band_best.alias("__band_best")
+    bands = banded.groupBy(*map(quote_ident, m.keys), "__bucket").agg(
+        F.expr(
+            f"{best}(CASE WHEN __side = 0 THEN struct(__ts AS t, __rp AS p) END) "
+            "AS __band_best"
+        )
     )
-    wband = (
-        Window.partitionBy(*keys)
-        .orderBy(band_order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = bands.select(
-        *keys,
+    carry = bands.selectExpr(
+        *map(quote_ident, m.keys),
         "__bucket",
-        F.last("__band_best", ignorenulls=True).over(wband).alias("__carry"),
+        "last(__band_best, true) OVER (PARTITION BY "
+        f"{', '.join(map(quote_ident, m.keys))} ORDER BY __bucket {band_order} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS __carry",
     )
-    joined = ann.join(carry, [*keys, "__bucket"])
-    cand = F.coalesce(F.col("__cand0"), F.col("__carry"))
-    out = (
-        [F.col(k) for k in keys]
-        + [F.col(f"__lp.{c}").alias(c) for c in left_payload]
-        + [cand.getField("t").alias(f"{right_prefix}{ts_col}")]
-        + [
-            cand.getField("p").getField(c).alias(f"{right_prefix}{c}")
-            for c in right_payload
-            if c != ts_col
-        ]
-    )
-    return joined.select(*out)
+    joined = ann.join(carry, [*m.keys, "__bucket"])
+    return m.project(joined, right_prefix, cand="coalesce(__cand0, __carry)")
 
 
 def asof_join_banded(
@@ -451,20 +308,8 @@ def asof_join_banded(
         width = float(band_seconds)
         if width <= 0:
             raise ValueError("band_seconds must be positive")
-        merged, left_payload, right_payload = _merge_sides(
-            df_left, df_right, keys, ts_col
-        )
-        return _asof_banded_carry(
-            merged,
-            keys,
-            ts_col,
-            direction,
-            df_left.schema[ts_col].dataType.simpleString(),
-            left_payload,
-            right_payload,
-            right_prefix,
-            width,
-        )
+        m = _Merged(df_left, df_right, keys, ts_col)
+        return _asof_banded_carry(m, direction, right_prefix, width)
     if tolerance <= 0:
         raise ValueError("asof_join_banded requires a positive tolerance")
     # `is None`, not falsy-or: an explicit band_seconds=0 must hit the
@@ -473,32 +318,14 @@ def asof_join_banded(
     if width < tolerance:
         raise ValueError("band_seconds must be >= tolerance")
 
-    ts_dtype = df_left.schema[ts_col].dataType.simpleString()
-    to_units, ups = _time_units_fn(ts_dtype)
-    width_units = int(round(width * ups)) if ups != 1 else width
-
-    merged, left_payload, right_payload = _merge_sides(
-        df_left, df_right, keys, ts_col
-    )
-    bucket = F.floor(to_units(F.col("__ts")) / F.lit(width_units)).cast("long")
-    neighbor = bucket + (1 if direction == "backward" else -1)
-    banded = merged.select(
+    m = _Merged(df_left, df_right, keys, ts_col)
+    to_units, ups = _time_units_fn(m.ts_dtype)
+    bucket = f"CAST(floor({to_units('__ts')} / {_units_sql(width, ups)}) AS BIGINT)"
+    neighbor = f"{bucket} {'+' if direction == 'backward' else '-'} 1"
+    banded = m.df.selectExpr(
         "*",
-        F.explode(
-            F.when(F.col("__side") == 0, F.array(bucket, neighbor)).otherwise(
-                F.array(bucket)
-            )
-        ).alias("__bucket"),
+        f"explode(CASE WHEN __side = 0 THEN array({bucket}, {neighbor}) "
+        f"ELSE array({bucket}) END) AS __bucket",
     )
-    return _asof_core(
-        banded,
-        [*keys, "__bucket"],
-        keys,
-        ts_col,
-        direction,
-        tolerance,
-        ts_dtype,
-        left_payload,
-        right_payload,
-        right_prefix,
-    )
+    ann = _asof_core(m, banded, [*keys, "__bucket"], direction, tolerance)
+    return m.project(ann, right_prefix)

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from .sqlident import quote_ident
+
 __all__ = [
     "exact_dedup",
     "minhash_signature_udf",
@@ -43,12 +45,6 @@ __all__ = [
 
 _MERSENNE = (1 << 61) - 1
 _N_PERM = 64
-
-# plain SQL identifier — names outside this fall back to the Column path
-import re as _re
-
-_SQL_IDENT = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
 
 def _perm_params(n_perm: int = _N_PERM, seed: int = 1234) -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.Generator(np.random.PCG64(seed))
@@ -430,37 +426,49 @@ def ngram_jaccard_pairs(
     # branch those docs would share a gram-IS-NULL bucket with
     # n_grams = size(NULL) = -1 and survive only by the Jaccard going
     # negative — exclude them explicitly instead (ADVICE round-2 fix)
-    df = df.filter(F.col(text_col).isNotNull())
+    df = df.filter(f"{quote_ident(text_col)} IS NOT NULL")
     if min_input_partitions is not None:
         df = df.repartition(min_input_partitions)
-    # SQL-string fast path (optimization round 7, guide §1.2 step 2): the
-    # per-Column construction of this plan costs ~900 py4j socket
-    # round-trips (~0.2 s of driver time per build, measured with cProfile
-    # — paid on every invocation). The same logical expressions built as
-    # SQL strings parse JVM-side in one RPC per select. Expressions are
-    # one-to-one with the Column form below; Catalyst's structural
-    # equality makes the repeated `split(...)` subtrees CSE exactly as the
-    # reused Column object does, so the physical plan is identical
-    # (plan- and oracle-verified).
-    if (
-        max_df is not None
-        and _SQL_IDENT.match(text_col)
-        and _SQL_IDENT.match(id_col)
-    ):
-        toks_s = f"split(lower(trim(`{text_col}`)), '\\\\s+')"
-        len_s = f"greatest(size({toks_s}) - {n - 1}, 1)"
-        zip_s = "arrays_zip(" + ", ".join(
-            f"slice({toks_s}, {i + 1}, {len_s})" for i in range(n)
-        ) + ")"
-        g = (
-            df.selectExpr(
-                f"`{id_col}` AS id", f"array_distinct({zip_s}) AS __dz"
-            )
-            .selectExpr(
-                "id", "size(__dz) AS n_grams", "explode_outer(__dz) AS __gs"
-            )
-            .selectExpr("id", "n_grams", "xxhash64(__gs) AS gram")
+    # Built as SQL strings (optimization round 7, guide §1.2 step 2): the
+    # per-Column construction of this plan cost ~900 py4j socket
+    # round-trips (~0.2 s of driver time per build, measured with
+    # cProfile); SQL strings parse JVM-side in one RPC per select.
+    # Catalyst's structural equality makes the repeated `split(...)`
+    # subtrees CSE exactly as a reused Column object does.
+    #
+    # Lambda-free gram construction: the transform(sequence,
+    # xxhash64(slice)) higher-order form is CodegenFallback — every gram
+    # evaluated interpreted, measured 2.0 s vs 0.8 s at sf1.0 for this
+    # stage. arrays_zip of n shifted slices builds the same token windows
+    # as native (codegen'd) collection ops: element i of the zip is
+    # (tok[i], tok[i+1], …, tok[i+n-1]) with NULL padding past the end —
+    # and since split() never yields NULL tokens, NULL marks "past end"
+    # uniquely, so struct equality == token-window equality including the
+    # short-document (< n tokens) single-gram case. array_distinct runs on
+    # the structs (collision-free, exactly the string semantics the oracle
+    # computes) and each distinct gram is hashed AFTER the explode — one
+    # codegen'd xxhash64 per row. Hash equality classes are unchanged
+    # (xxhash64 chains per field with the running hash as seed, exactly as
+    # it chains array elements).
+    toks = f"split(lower(trim({quote_ident(text_col)})), '\\\\s+')"
+    n_win = f"greatest(size({toks}) - {n - 1}, 1)"
+    zips = "arrays_zip(" + ", ".join(
+        f"slice({toks}, {i + 1}, {n_win})" for i in range(n)
+    ) + ")"
+    # explode_outer, NOT explode: explode makes the optimizer infer a
+    # size(grams) > 0 filter and push it below the repartition exchange,
+    # re-evaluating the whole gram expression serially on the scan task —
+    # measured 3.5 s of single-task CPU at sf0.1. With NULL text filtered
+    # above, the gram array is non-null and never empty (n_win >= 1), so
+    # the null row of explode_outer cannot occur.
+    g = (
+        df.selectExpr(
+            f"{quote_ident(id_col)} AS id", f"array_distinct({zips}) AS __dz"
         )
+        .selectExpr("id", "size(__dz) AS n_grams", "explode_outer(__dz) AS __gs")
+        .selectExpr("id", "n_grams", "xxhash64(__gs) AS gram")
+    )
+    if max_df is not None:
         grouped = g.groupBy("gram").agg(
             F.expr("collect_list(struct(id, n_grams))").alias("ds")
         )
@@ -470,96 +478,29 @@ def ngram_jaccard_pairs(
                 "ngram_capped_grams"
             ),
         ).filter(f"size(ds) <= {max_df} AND size(ds) >= 2")
+        # ordered pairs within the gram's (bounded) doc list — two chained
+        # explodes of plain columns (whole-stage-codegen'd; a higher-order
+        # flatten/transform here runs interpreted, ~10× slower per pair)
         pairs = (
             grouped.selectExpr("ds", "explode(ds) AS a")
             .selectExpr("a", "explode(ds) AS b")
             .filter("a.id < b.id")
         )
-        inter = pairs.groupBy(
-            F.expr("a.id").alias("id_a"),
-            F.expr("b.id").alias("id_b"),
-            F.expr("a.n_grams").alias("na"),
-            F.expr("b.n_grams").alias("nb"),
-        ).agg(F.expr("count(1)").alias("n_inter"))
-        return inter.selectExpr(
-            "id_a",
-            "id_b",
-            "round(n_inter / (na + nb - n_inter), 6) AS jaccard",
-        ).filter(f"jaccard >= CAST('{float(threshold)!r}' AS DOUBLE)")
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    # Lambda-free gram construction (optimization round 7): the previous
-    # transform(sequence, xxhash64(slice)) higher-order form is
-    # CodegenFallback — every gram evaluated interpreted, measured 2.0 s
-    # vs 0.8 s at sf1.0 for this stage. arrays_zip of n shifted slices
-    # builds the same token windows as native (codegen'd) collection ops:
-    # element i of the zip is (tok[i], tok[i+1], …, tok[i+n-1]) with NULL
-    # padding past the end — and since split() never yields NULL tokens,
-    # NULL marks "past end" uniquely, so struct equality == token-window
-    # equality including the short-document (< n tokens) single-gram case.
-    # array_distinct runs on the structs (collision-free, exactly the
-    # string semantics the oracle computes; the old form deduped on the
-    # 64-bit hash) and each distinct gram is hashed AFTER the explode —
-    # one codegen'd xxhash64 per row. Hash equality classes are unchanged
-    # (xxhash64 chains per field with the running hash as seed, exactly as
-    # it chains array elements).
-    L = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    zips = F.arrays_zip(*[F.slice(toks, i + 1, L) for i in range(n)])
-    dz = F.array_distinct(zips)
-    # explode_outer, NOT explode: explode makes the optimizer infer a
-    # size(grams) > 0 filter and push it below the repartition exchange,
-    # re-evaluating the whole gram expression serially on the scan task —
-    # measured 3.5 s of single-task CPU at sf0.1. With NULL text filtered
-    # above, the gram array is non-null and never empty (L >= 1), so the
-    # null row of explode_outer cannot occur.
-    g = df.select(F.col(id_col).alias("id"), dz.alias("__dz")).select(
-        "id",
-        F.size("__dz").alias("n_grams"),
-        F.explode_outer("__dz").alias("__gs"),
-    ).select("id", "n_grams", F.xxhash64("__gs").alias("gram"))
-    if max_df is not None:
-        grouped = g.groupBy("gram").agg(
-            F.collect_list(F.struct(F.col("id"), F.col("n_grams"))).alias("ds")
-        )
-        grouped = grouped.observe(
-            f"ngram_df_cap_{threshold}_{max_df}",
-            F.count(F.when(F.size("ds") > max_df, 1)).alias(
-                "ngram_capped_grams"
-            ),
-        ).filter((F.size("ds") <= max_df) & (F.size("ds") >= 2))
-        # ordered pairs within the gram's (bounded) doc list — two chained
-        # explodes of plain columns (whole-stage-codegen'd; a higher-order
-        # flatten/transform here runs interpreted, ~10× slower per pair)
-        pairs = (
-            grouped.select("ds", F.explode("ds").alias("a"))
-            .select("a", F.explode("ds").alias("b"))
-            .filter(F.col("a.id") < F.col("b.id"))
-        )
-        inter = pairs.groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.n_grams").alias("na"),
-            F.col("b.n_grams").alias("nb"),
-        ).agg(F.count(F.lit(1)).alias("n_inter"))
     else:
-        a, b = g.alias("a"), g.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.gram") == F.col("b.gram"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.n_grams").alias("na"),
-                F.col("b.n_grams").alias("nb"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_inter"))
+        pairs = g.alias("a").join(
+            g.alias("b"), F.expr("a.gram = b.gram AND a.id < b.id")
         )
-    jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
-    return inter.select(
-        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    inter = pairs.groupBy(
+        F.expr("a.id").alias("id_a"),
+        F.expr("b.id").alias("id_b"),
+        F.expr("a.n_grams").alias("na"),
+        F.expr("b.n_grams").alias("nb"),
+    ).agg(F.expr("count(1)").alias("n_inter"))
+    return inter.selectExpr(
+        "id_a",
+        "id_b",
+        "round(n_inter / (na + nb - n_inter), 6) AS jaccard",
+    ).filter(f"jaccard >= CAST('{float(threshold)!r}' AS DOUBLE)")
 
 
 def winnow_shared_pairs(

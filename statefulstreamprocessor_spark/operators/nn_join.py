@@ -23,10 +23,13 @@ Physical plan (scale notes):
 
 from __future__ import annotations
 
-import re
+from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .sqlident import null_struct_sql, quote_ident, struct_sql
 
 __all__ = [
     "nn_join",
@@ -39,10 +42,47 @@ __all__ = [
 PAIR_LEFT_PREFIX = "r_"
 PAIR_RIGHT_PREFIX = "s_"
 
+# nearest other-side (t, p) struct at-or-before / at-or-after the row
+_PREV_OTHER = "(CASE WHEN __side = 0 THEN __prev_s ELSE __prev_r END)"
+_NEXT_OTHER = "(CASE WHEN __side = 0 THEN __next_s ELSE __next_r END)"
 
-def _side_struct(df: DataFrame, keys: list[str], ts_col: str) -> Column:
-    payload = [c for c in df.columns if c not in keys]
-    return F.struct(*[F.col(c) for c in payload])
+
+def _dbl(x: float) -> str:
+    return f"CAST({float(x)!r} AS DOUBLE)"
+
+
+def _secs(df: DataFrame, ts_col: str) -> Callable[[str], str]:
+    """SQL for a ``ts_col`` value in double seconds. TIMESTAMP_NTZ has no
+    direct double cast, so timestamps go via TIMESTAMP (session tz)."""
+    if df.schema[ts_col].dataType.simpleString().startswith("timestamp"):
+        return lambda c: f"CAST(CAST({c} AS TIMESTAMP) AS DOUBLE)"
+    return lambda c: f"CAST({c} AS DOUBLE)"
+
+
+def _sides(
+    df_r: DataFrame, df_s: DataFrame, keys: list[str], ts_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Both sides as merged-stream rows: keys | ``__ts`` | ``__side`` (0 = R)
+    | ``__rp`` | ``__sp``, each side's payload struct in its own slot and
+    a typed NULL in the other's. The NULL types come from the input
+    schemas directly: a ``df.select(struct(...)).schema`` probe costs a
+    full analysis round-trip per side on the driver (~0.1 s each on deep
+    inputs), paid at every plan construction."""
+
+    def tag(df: DataFrame, side: int, other: DataFrame) -> DataFrame:
+        own = struct_sql([c for c in df.columns if c not in keys])
+        null = null_struct_sql(
+            StructType([other.schema[c] for c in other.columns if c not in keys])
+        )
+        return df.selectExpr(
+            *map(quote_ident, keys),
+            f"{quote_ident(ts_col)} AS __ts",
+            f"{side} AS __side",
+            f"{null if side else own} AS __rp",
+            f"{own if side else null} AS __sp",
+        )
+
+    return tag(df_r, 0, df_s), tag(df_s, 1, df_r)
 
 
 def nn_join(
@@ -51,7 +91,6 @@ def nn_join(
     keys: list[str] | str,
     ts_col: str,
     delta: float | None = None,
-    tiebreak: str | None = None,
 ) -> DataFrame:
     """Closure nearest-neighbor join of two event streams/tables.
 
@@ -63,211 +102,26 @@ def nn_join(
         reference's ``thing.quantity`` Kafka key, simulatorToKafka.py:66).
     delta : optional max |t_r - t_s| in seconds (reference's delta_time band,
         local_stream_buffer.py:117-118). None = unbounded.
-    tiebreak : optional column name present in both inputs used to total-order
-        records with equal (ts, side); defaults to ts-only ordering (ties
-        between sides order R before S).
+
+    Records with equal (ts, side) are totally ordered by their payload
+    structs, so the pair set does not depend on partitioning or arrival.
 
     Returns columns: keys + ``r_<col>`` for every non-key column of df_r +
     ``s_<col>`` for every non-key column of df_s.
     """
     if isinstance(keys, str):
         keys = [keys]
-    r_payload = [c for c in df_r.columns if c not in keys]
-    s_payload = [c for c in df_s.columns if c not in keys]
-
-    # build the NULL-struct literal types from the input schemas directly:
-    # a df.select(F.struct(...)).schema probe costs a full analysis
-    # round-trip per side on the driver (~0.1 s each on deep inputs),
-    # paid at every plan construction
-    from pyspark.sql.types import StructType
-
-    r_struct_t = StructType([df_r.schema[c] for c in r_payload])
-    s_struct_t = StructType([df_s.schema[c] for c in s_payload])
-
-    merged = df_r.select(
-        *keys,
-        F.col(ts_col).alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.struct(*[F.col(c) for c in r_payload]).alias("__rp"),
-        F.lit(None).cast(s_struct_t).alias("__sp"),
-    ).unionByName(
-        df_s.select(
-            *keys,
-            F.col(ts_col).alias("__ts"),
-            F.lit(1).alias("__side"),
-            F.lit(None).cast(r_struct_t).alias("__rp"),
-            F.struct(*[F.col(c) for c in s_payload]).alias("__sp"),
-        )
+    r, s = _sides(df_r, df_s, keys, ts_col)
+    pairs = _nn_pairs_sql(_nn_annotate(r.unionByName(s), keys), keys)
+    return _nn_project_out(
+        pairs,
+        keys,
+        ts_col,
+        [c for c in df_r.columns if c not in keys],
+        [c for c in df_s.columns if c not in keys],
+        _secs(df_r, ts_col),
+        delta,
     )
-
-    if tiebreak is None:
-        # Fast path (optimization round 7): the annotation windows and
-        # pair expressions are built as SQL strings — ONE parse RPC per
-        # select instead of ~870 per-Column py4j round-trips (measured
-        # 0.32 s → 0.12 s per plan construction, paid on every timed
-        # pass). Same logical expressions, same physical plan (the
-        # existing 1-exchange / 2-sort plan guard pins it); output
-        # verified row-identical to the Column form and to the closure
-        # kernel. The Column path below remains for the tiebreak form.
-        pairs = _nn_pairs_sql(merged, keys)
-        return _nn_project_out(
-            pairs, keys, ts_col, r_payload, s_payload, df_r, delta
-        )
-
-    # Same-side same-ts rows are ordered by the tiebreak column if given,
-    # else by the payload struct — any deterministic total order works; the
-    # cross-side comparisons below are ts-INCLUSIVE (the kernel's
-    # searchsorted semantics: an equal-ts other-side row is "at-or-after"
-    # AND "at-or-before"), matching closure_pairs and the reference's
-    # `s_j.time >= r_t0.time` joins (local_stream_buffer.py:302-306).
-    if tiebreak is not None:
-        merged = merged.withColumn(
-            "__tb", F.coalesce(F.col(f"__rp.{tiebreak}"), F.col(f"__sp.{tiebreak}"))
-        )
-
-    def side_struct(payload_col: str) -> Column:
-        fields = [F.col("__ts").alias("t")]
-        if tiebreak is not None:
-            fields.append(F.col("__tb").alias("tb"))
-        fields.append(F.col(payload_col).alias("p"))
-        return F.struct(*fields)
-
-    # ts-only ordering so RANGE frames treat all equal-ts rows (either
-    # side) as peers of the current row — inclusive nearest lookups.
-    # Both frames end at CURRENT ROW (one asc, one desc): Spark evaluates
-    # unbounded-preceding frames incrementally (O(n) per key); a frame
-    # extending to unboundedFollowing would re-aggregate per row (O(n²))
-    w_before = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__ts").asc())
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_after = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__ts").desc())
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # total order for same-side neighbor lookups (group-position tests);
-    # the asc sort also satisfies w_before's ts-prefix requirement
-    rows_order = [F.col("__ts"), F.col("__side")]
-    if tiebreak is not None:
-        rows_order.append(F.col("__tb"))
-    rows_order += [F.col("__rp"), F.col("__sp")]
-    w_rows_before = (
-        Window.partitionBy(*keys)
-        .orderBy(*[c.asc() for c in rows_order])
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_rows_after = (
-        Window.partitionBy(*keys)
-        .orderBy(*[c.desc() for c in rows_order])
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-
-    is_r = F.col("__side") == 0
-    self_r = side_struct("__rp")
-    self_s = side_struct("__sp")
-
-    # Two chained selects per sort direction: the rows-frame window sorts by
-    # the FULL total order and the range-frame window then only requires its
-    # (ts) prefix — Spark's sort-order satisfaction elides the extra sort,
-    # so the whole operator is one exchange + two sorts (asc + desc).
-    ann = merged.select(
-        "*",
-        # same-side strict neighbors (dedup predicates only need their ts)
-        F.last(F.when(is_r, F.col("__ts")), ignorenulls=True)
-        .over(w_rows_before)
-        .alias("__psame_r_t"),
-        F.last(F.when(~is_r, F.col("__ts")), ignorenulls=True)
-        .over(w_rows_before)
-        .alias("__psame_s_t"),
-    ).select(
-        "*",
-        # nearest other-side rows at-or-before, ts-inclusive (RANGE peers);
-        # max of (t, [tb], p) structs = latest with a deterministic order
-        F.max(F.when(is_r, self_r)).over(w_before).alias("__prev_r"),
-        F.max(F.when(~is_r, self_s)).over(w_before).alias("__prev_s"),
-    ).select(
-        "*",
-        # strict same-side successor = last same-side row seen in the
-        # REVERSED total order before the current row (running frame)
-        F.last(F.when(is_r, F.col("__ts")), ignorenulls=True)
-        .over(w_rows_after)
-        .alias("__nsame_r_t"),
-        F.last(F.when(~is_r, F.col("__ts")), ignorenulls=True)
-        .over(w_rows_after)
-        .alias("__nsame_s_t"),
-    ).select(
-        "*",
-        F.min(F.when(is_r, self_r)).over(w_after).alias("__next_r"),
-        F.min(F.when(~is_r, self_s)).over(w_after).alias("__next_s"),
-    )
-
-    prev_other = F.when(is_r, F.col("__prev_s")).otherwise(F.col("__prev_r"))
-    next_other = F.when(is_r, F.col("__next_s")).otherwise(F.col("__next_r"))
-    prev_same_t = F.when(is_r, F.col("__psame_r_t")).otherwise(F.col("__psame_s_t"))
-    next_same_t = F.when(is_r, F.col("__nsame_r_t")).otherwise(F.col("__nsame_s_t"))
-    fo_t = F.when(is_r, F.col("__next_s.t")).otherwise(F.col("__next_r.t"))
-    lo_t = F.when(is_r, F.col("__prev_s.t")).otherwise(F.col("__prev_r.t"))
-
-    # pair struct normalized so the R-side record is always left (reference's
-    # role normalization, local_stream_buffer.py:369-376)
-    def pair(r_t: Column, r_p: Column, s_t: Column, s_p: Column) -> Column:
-        return F.struct(
-            r_t.alias("r_t"), r_p.alias("r_p"), s_t.alias("s_t"), s_p.alias("s_p")
-        )
-
-    # Construction-based dedup (no extra shuffle): the emitted bag equals
-    # the kernel's SET of pairs. Derivation (each pair-equality case):
-    #  * two alphas collide only at mutual-first ties — the S row skips;
-    #  * beta(e) == alpha(LO(e)) iff e is the first own-side row at-or-after
-    #    LO(e), i.e. prevSame(e) is absent or strictly before LO(e);
-    #  * beta(e) == alpha(e) iff FO(e) == LO(e) (single equal-ts partner);
-    #  * two betas collide only at mutual-last ties — the S row skips.
-    first_in_group = prev_same_t.isNull() | (prev_same_t < F.col("__ts"))
-    last_in_group = next_same_t.isNull() | (next_same_t > F.col("__ts"))
-    dup_self = F.when(
-        is_r, F.col("__next_s").eqNullSafe(F.col("__prev_s"))
-    ).otherwise(F.col("__next_r").eqNullSafe(F.col("__prev_r")))
-
-    # alpha: (self, earliest other-side at-or-after self)
-    alpha = F.when(
-        next_other.isNotNull()
-        & (is_r | ~((fo_t == F.col("__ts")) & first_in_group)),
-        F.when(
-            is_r,
-            pair(F.col("__ts"), F.col("__rp"), next_other["t"], next_other["p"]),
-        ).otherwise(
-            pair(next_other["t"], next_other["p"], F.col("__ts"), F.col("__sp"))
-        ),
-    )
-    # beta: (latest other-side at-or-before self, self), confirmed by the
-    # existence of a forward other-side partner, minus the dedup skips above
-    beta = F.when(
-        prev_other.isNotNull()
-        & next_other.isNotNull()
-        & prev_same_t.isNotNull()
-        & (prev_same_t >= lo_t)
-        & ~dup_self
-        & ~(~is_r & (lo_t == F.col("__ts")) & last_in_group),
-        F.when(
-            is_r,
-            pair(F.col("__ts"), F.col("__rp"), prev_other["t"], prev_other["p"]),
-        ).otherwise(
-            pair(prev_other["t"], prev_other["p"], F.col("__ts"), F.col("__sp"))
-        ),
-    )
-
-    pairs = ann.select(
-        *keys,
-        F.explode(
-            F.array_compact(F.array(alpha, beta))
-        ).alias("__pair"),
-    )
-    return _nn_project_out(pairs, keys, ts_col, r_payload, s_payload, df_r, delta)
-
-
-_PLAIN_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def nn_join_one_source(
@@ -298,26 +152,23 @@ def nn_join_one_source(
     if isinstance(keys, str):
         keys = [keys]
     payload = [c for c in df.columns if c not in keys and c != side_col]
-    ident_ok = all(
-        _PLAIN_IDENT.match(c) for c in [*keys, ts_col, side_col, *payload]
-    ) and "'" not in f"{left_value}{right_value}"
-    if not ident_ok:  # pragma: no cover - defensive fallback
-        r = df.filter(F.col(side_col) == left_value).drop(side_col)
-        s = df.filter(F.col(side_col) == right_value).drop(side_col)
-        return nn_join(r, s, keys, ts_col, delta)
-    pstruct = "struct(" + ", ".join(f"`{c}` AS `{c}`" for c in payload) + ")"
-    merged = df.filter(
-        F.col(side_col).isin(left_value, right_value)
-    ).selectExpr(
-        *[f"`{k}`" for k in keys],
-        f"`{ts_col}` AS __ts",
-        f"CAST(`{side_col}` = '{right_value}' AS INT) AS __side",
-        f"CASE WHEN `{side_col}` = '{left_value}' THEN {pstruct} END AS __rp",
-        f"CASE WHEN `{side_col}` = '{right_value}' THEN {pstruct} END AS __sp",
+    # the side values enter as literal columns, never as SQL text; the
+    # optimizer folds them back into the comparisons
+    sq, own = quote_ident(side_col), struct_sql(payload)
+    merged = (
+        df.withColumns({"__l": F.lit(left_value), "__r": F.lit(right_value)})
+        .filter(f"{sq} IN (__l, __r)")
+        .selectExpr(
+            *map(quote_ident, keys),
+            f"{quote_ident(ts_col)} AS __ts",
+            f"CAST({sq} = __r AS INT) AS __side",
+            f"CASE WHEN {sq} = __l THEN {own} END AS __rp",
+            f"CASE WHEN {sq} = __r THEN {own} END AS __sp",
+        )
     )
-    pairs = _nn_pairs_sql(merged, keys)
+    pairs = _nn_pairs_sql(_nn_annotate(merged, keys), keys)
     return _nn_project_out(
-        pairs, keys, ts_col, payload, payload, df, delta
+        pairs, keys, ts_col, payload, payload, _secs(df, ts_col), delta
     )
 
 
@@ -327,105 +178,74 @@ def _nn_project_out(
     ts_col: str,
     r_payload: list[str],
     s_payload: list[str],
-    df_r: DataFrame,
+    secs: Callable[[str], str],
     delta: float | None,
 ) -> DataFrame:
     """Shared tail: optional Δ-band filter + r_/s_-prefixed projection."""
-    names = [*keys, ts_col, *r_payload, *s_payload]
-    if all(_PLAIN_IDENT.match(c) for c in names):
-        # SQL-string fast path: one parse RPC per select/filter instead of
-        # ~2 py4j round-trips per output column (see _nn_pairs_sql)
-        if delta is not None:
-            ts_type = df_r.schema[ts_col].dataType.simpleString()
-            if ts_type.startswith("timestamp"):
-                dt = (
-                    "CAST(CAST(__pair.r_t AS TIMESTAMP) AS DOUBLE) - "
-                    "CAST(CAST(__pair.s_t AS TIMESTAMP) AS DOUBLE)"
-                )
-            else:
-                dt = "CAST(__pair.r_t AS DOUBLE) - CAST(__pair.s_t AS DOUBLE)"
-            pairs = pairs.filter(
-                f"abs({dt}) <= CAST({float(delta)!r} AS DOUBLE)"
-            )
-        return pairs.selectExpr(
-            *[f"`{k}`" for k in keys],
-            f"__pair.r_t AS `{PAIR_LEFT_PREFIX}{ts_col}`",
-            *[
-                f"__pair.r_p.`{c}` AS `{PAIR_LEFT_PREFIX}{c}`"
-                for c in r_payload
-                if c != ts_col
-            ],
-            f"__pair.s_t AS `{PAIR_RIGHT_PREFIX}{ts_col}`",
-            *[
-                f"__pair.s_p.`{c}` AS `{PAIR_RIGHT_PREFIX}{c}`"
-                for c in s_payload
-                if c != ts_col
-            ],
-        )
     if delta is not None:
-        ts_type = df_r.schema[ts_col].dataType.simpleString()
-        if ts_type.startswith("timestamp"):
-            # TIMESTAMP_NTZ has no direct double cast; go via TIMESTAMP (UTC session)
-            def secs(c: Column) -> Column:
-                return c.cast("timestamp").cast("double")
-        else:
-            def secs(c: Column) -> Column:
-                return c.cast("double")
+        pairs = pairs.filter(
+            f"abs({secs('__pair.r_t')} - {secs('__pair.s_t')}) <= {_dbl(delta)}"
+        )
 
-        dt = secs(F.col("__pair.r_t")) - secs(F.col("__pair.s_t"))
-        pairs = pairs.filter(F.abs(dt) <= F.lit(float(delta)))
+    def side_out(slot: str, prefix: str, payload: list[str]) -> list[str]:
+        return [
+            f"__pair.{slot}_t AS {quote_ident(prefix + ts_col)}",
+            *[
+                f"__pair.{slot}_p.{quote_ident(c)} AS {quote_ident(prefix + c)}"
+                for c in payload
+                if c != ts_col
+            ],
+        ]
 
-    out_cols = (
-        [F.col(k) for k in keys]
-        + [F.col("__pair.r_t").alias(f"{PAIR_LEFT_PREFIX}{ts_col}")]
-        + [
-            F.col(f"__pair.r_p.{c}").alias(f"{PAIR_LEFT_PREFIX}{c}")
-            for c in r_payload
-            if c != ts_col
-        ]
-        + [F.col("__pair.s_t").alias(f"{PAIR_RIGHT_PREFIX}{ts_col}")]
-        + [
-            F.col(f"__pair.s_p.{c}").alias(f"{PAIR_RIGHT_PREFIX}{c}")
-            for c in s_payload
-            if c != ts_col
-        ]
+    return pairs.selectExpr(
+        *map(quote_ident, keys),
+        *side_out("r", PAIR_LEFT_PREFIX, r_payload),
+        *side_out("s", PAIR_RIGHT_PREFIX, s_payload),
     )
-    return pairs.select(*out_cols)
 
 
-def _nn_pairs_sql(merged: DataFrame, keys: list[str]) -> DataFrame:
-    """SQL-string form of the annotation windows + alpha/beta pair
-    emission — the same logical expressions as the Column form in
-    :func:`nn_join` (ts-only tiebreak), parsed JVM-side in five selects
-    instead of hundreds of per-Column py4j round-trips. Every predicate
-    mirrors the Column path one-to-one (see the derivation comments
-    there); `<=>` is eqNullSafe, `last(x, true)` ignores nulls."""
-    kq = ", ".join(f"`{k}`" for k in keys)
+def _nn_annotate(merged: DataFrame, part: list[str]) -> DataFrame:
+    """Annotation step: per ``part`` partition of the merged stream, each
+    row's nearest other-side (t, p) structs at-or-before (``__prev_r`` /
+    ``__prev_s``) and at-or-after (``__next_r`` / ``__next_s``) it, and
+    the ts of its strict same-side predecessor / successor (``__psame_*_t``
+    / ``__nsame_*_t``). ``last(x, true)`` ignores nulls."""
+    p = ", ".join(map(quote_ident, part))
+    # total order for the same-side neighbor lookups (group-position
+    # tests): ts, side, then the payload structs
     rows_b = (
-        f"OVER (PARTITION BY {kq} ORDER BY __ts ASC, __side ASC, __rp ASC, "
+        f"OVER (PARTITION BY {p} ORDER BY __ts ASC, __side ASC, __rp ASC, "
         "__sp ASC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
     )
     rows_a = (
-        f"OVER (PARTITION BY {kq} ORDER BY __ts DESC, __side DESC, __rp DESC, "
+        f"OVER (PARTITION BY {p} ORDER BY __ts DESC, __side DESC, __rp DESC, "
         "__sp DESC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
     )
+    # ts-only ordering, so RANGE frames treat every equal-ts row (either
+    # side) as a peer of the current row: the cross-side lookups are
+    # ts-INCLUSIVE (the kernel's searchsorted semantics: an equal-ts
+    # other-side row is "at-or-after" AND "at-or-before"), matching
+    # closure_pairs and the reference's `s_j.time >= r_t0.time` joins
+    # (local_stream_buffer.py:302-306). Every frame ends at CURRENT ROW
+    # (one asc, one desc): Spark evaluates unbounded-preceding frames
+    # incrementally (O(n) per key); a frame extending to unboundedFollowing
+    # would re-aggregate per row (O(n²)).
     rng_b = (
-        f"OVER (PARTITION BY {kq} ORDER BY __ts ASC "
+        f"OVER (PARTITION BY {p} ORDER BY __ts ASC "
         "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     rng_a = (
-        f"OVER (PARTITION BY {kq} ORDER BY __ts DESC "
+        f"OVER (PARTITION BY {p} ORDER BY __ts DESC "
         "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     sr = "struct(__ts AS t, __rp AS p)"
     ss = "struct(__ts AS t, __sp AS p)"
-    # all eight annotation windows in ONE select: every window reads only
-    # base columns (none consumes another's output), the analyzer's
-    # ExtractWindowExpressions still groups them into the same four Window
-    # operators over two sort orders (verified: executed plan keeps the
-    # pinned 1-Exchange / 2-Sort / 4-Window shape), and one select means
-    # one parse RPC + one analysis pass instead of four of each
-    ann = merged.selectExpr(
+    # all eight windows in ONE select: none reads another's output, so the
+    # analyzer groups them into four Window operators over two sort orders;
+    # the range windows only need the rows windows' (ts) sort prefix, so
+    # the plan is one exchange + two sorts (asc + desc), and one select is
+    # one parse RPC + one analysis pass
+    return merged.selectExpr(
         "*",
         f"last(CASE WHEN __side = 0 THEN __ts END, true) {rows_b} AS __psame_r_t",
         f"last(CASE WHEN __side = 1 THEN __ts END, true) {rows_b} AS __psame_s_t",
@@ -436,8 +256,22 @@ def _nn_pairs_sql(merged: DataFrame, keys: list[str]) -> DataFrame:
         f"min(CASE WHEN __side = 0 THEN {sr} END) {rng_a} AS __next_r",
         f"min(CASE WHEN __side = 1 THEN {ss} END) {rng_a} AS __next_s",
     )
-    prev_other = "(CASE WHEN __side = 0 THEN __prev_s ELSE __prev_r END)"
-    next_other = "(CASE WHEN __side = 0 THEN __next_s ELSE __next_r END)"
+
+
+def _nn_pairs_sql(
+    ann: DataFrame,
+    keys: list[str],
+    own: str | None = None,
+    in_band: Callable[[str], str] | None = None,
+    lookahead: str = f"{_NEXT_OTHER} IS NOT NULL",
+) -> DataFrame:
+    """Pair step: each annotated row emits up to two pairs, ``alpha``
+    (self, earliest other-side at-or-after self) and ``beta`` (latest
+    other-side at-or-before self, self), as one ``__pair`` struct per row.
+
+    ``own`` and ``in_band(partner_t)`` are extra predicates on both pairs;
+    ``lookahead`` is beta's confirmation that some other-side row exists
+    at-or-after self (default: the annotated next other-side row)."""
     prev_same_t = "(CASE WHEN __side = 0 THEN __psame_r_t ELSE __psame_s_t END)"
     next_same_t = "(CASE WHEN __side = 0 THEN __nsame_r_t ELSE __nsame_s_t END)"
     fo_t = "(CASE WHEN __side = 0 THEN __next_s.t ELSE __next_r.t END)"
@@ -449,34 +283,46 @@ def _nn_pairs_sql(merged: DataFrame, keys: list[str]) -> DataFrame:
         "ELSE __next_r <=> __prev_r END)"
     )
 
-    def pair(r_t: str, r_p: str, s_t: str, s_p: str) -> str:
-        return f"struct({r_t} AS r_t, {r_p} AS r_p, {s_t} AS s_t, {s_p} AS s_p)"
+    # the pair struct keeps the R-side record left (reference's role
+    # normalization, local_stream_buffer.py:369-376)
+    def pair(other: str) -> str:
+        r = f"struct(__ts AS r_t, __rp AS r_p, {other}.t AS s_t, {other}.p AS s_p)"
+        s = f"struct({other}.t AS r_t, {other}.p AS r_p, __ts AS s_t, __sp AS s_p)"
+        return f"CASE WHEN __side = 0 THEN {r} ELSE {s} END"
 
-    pair_alpha = (
-        f"CASE WHEN __side = 0 "
-        f"THEN {pair('__ts', '__rp', next_other + '.t', next_other + '.p')} "
-        f"ELSE {pair(next_other + '.t', next_other + '.p', '__ts', '__sp')} END"
+    def all_of(*preds: str | None) -> str:
+        return " AND ".join(p for p in preds if p)
+
+    band = in_band or (lambda t: None)
+    # Construction-based dedup (no extra shuffle): the emitted bag equals
+    # the kernel's SET of pairs. Derivation (each pair-equality case):
+    #  * two alphas collide only at mutual-first ties — the S row skips;
+    #  * beta(e) == alpha(LO(e)) iff e is the first own-side row at-or-after
+    #    LO(e), i.e. prevSame(e) is absent or strictly before LO(e);
+    #  * beta(e) == alpha(e) iff FO(e) == LO(e) (single equal-ts partner);
+    #  * two betas collide only at mutual-last ties — the S row skips.
+    # Ties are at distance 0, so in the banded form they are bucket-local
+    # and the local FO/LO are exact wherever these predicates can fire.
+    alpha = all_of(
+        own,
+        f"{_NEXT_OTHER} IS NOT NULL",
+        band(f"{_NEXT_OTHER}.t"),
+        f"(__side = 0 OR NOT (({fo_t} = __ts) AND {first_in_group}))",
     )
-    pair_beta = (
-        f"CASE WHEN __side = 0 "
-        f"THEN {pair('__ts', '__rp', prev_other + '.t', prev_other + '.p')} "
-        f"ELSE {pair(prev_other + '.t', prev_other + '.p', '__ts', '__sp')} END"
-    )
-    alpha = (
-        f"CASE WHEN {next_other} IS NOT NULL "
-        f"AND (__side = 0 OR NOT (({fo_t} = __ts) AND {first_in_group})) "
-        f"THEN {pair_alpha} END"
-    )
-    beta = (
-        f"CASE WHEN {prev_other} IS NOT NULL AND {next_other} IS NOT NULL "
-        f"AND {prev_same_t} IS NOT NULL AND ({prev_same_t} >= {lo_t}) "
-        f"AND NOT {dup_self} "
-        f"AND NOT ((__side = 1) AND ({lo_t} = __ts) AND {last_in_group}) "
-        f"THEN {pair_beta} END"
+    beta = all_of(
+        own,
+        f"{_PREV_OTHER} IS NOT NULL",
+        band(f"{_PREV_OTHER}.t"),
+        lookahead,
+        f"{prev_same_t} IS NOT NULL AND ({prev_same_t} >= {lo_t})",
+        f"NOT {dup_self}",
+        f"NOT ((__side = 1) AND ({lo_t} = __ts) AND {last_in_group})",
     )
     return ann.selectExpr(
-        *[f"`{k}`" for k in keys],
-        f"explode(array_compact(array({alpha}, {beta}))) AS __pair",
+        *map(quote_ident, keys),
+        f"explode(array_compact(array("
+        f"CASE WHEN {alpha} THEN {pair(_NEXT_OTHER)} END, "
+        f"CASE WHEN {beta} THEN {pair(_PREV_OTHER)} END))) AS __pair",
     )
 
 
@@ -518,167 +364,42 @@ def nn_join_banded(
     if width < delta:
         raise ValueError("chunk_seconds must be >= delta")
 
-    r_payload = [c for c in df_r.columns if c not in keys]
-    s_payload = [c for c in df_s.columns if c not in keys]
-
-    def secs(c: Column) -> Column:
-        return c.cast("timestamp").cast("double") if str(
-            df_r.schema[ts_col].dataType
-        ).lower().startswith("timestamp") else c.cast("double")
-
-    def tag(df: DataFrame, side: int, own_struct, other_struct_type) -> DataFrame:
-        payload = [c for c in df.columns if c not in keys]
-        base = df.select(
-            *keys,
-            F.col(ts_col).alias("__ts"),
-            F.lit(side).alias("__side"),
-            *( [F.struct(*[F.col(c) for c in payload]).alias("__rp"),
-                F.lit(None).cast(other_struct_type).alias("__sp")]
-               if side == 0 else
-               [F.lit(None).cast(own_struct).alias("__rp"),
-                F.struct(*[F.col(c) for c in payload]).alias("__sp")] ),
-        )
-        bucket = F.floor(secs(F.col("__ts")) / F.lit(width)).cast("long")
-        return base.select(
+    secs = _secs(df_r, ts_col)
+    bucket = f"CAST(floor({secs('__ts')} / {_dbl(width)}) AS BIGINT)"
+    r, s = (
+        side.selectExpr(
             "*",
-            bucket.alias("__own_bucket"),
-            F.explode(
-                F.array(bucket - 1, bucket, bucket + 1)
-            ).alias("__bucket"),
+            f"{bucket} AS __own_bucket",
+            f"explode(array({bucket} - 1, {bucket}, {bucket} + 1)) AS __bucket",
         )
-
-    from pyspark.sql.types import StructType
-
-    # local struct types — no per-side analysis round-trip (see nn_join)
-    r_struct_t = StructType([df_r.schema[c] for c in r_payload])
-    s_struct_t = StructType([df_s.schema[c] for c in s_payload])
-
-    merged = tag(df_r, 0, r_struct_t, s_struct_t).unionByName(
-        tag(df_s, 1, r_struct_t, s_struct_t)
+        for side in _sides(df_r, df_s, keys, ts_col)
     )
-    is_own = F.col("__bucket") == F.col("__own_bucket")
-
+    merged = r.unionByName(s)
+    own = "__bucket = __own_bucket"
     # per-key global other-side max (the unbounded beta lookahead)
     maxes = (
-        merged.filter(is_own)
-        .groupBy(*keys)
+        merged.filter(own)
+        .groupBy(*map(quote_ident, keys))
         .agg(
-            F.max(F.when(F.col("__side") == 0, F.col("__ts"))).alias("__max_r"),
-            F.max(F.when(F.col("__side") == 1, F.col("__ts"))).alias("__max_s"),
+            F.expr("max(CASE WHEN __side = 0 THEN __ts END) AS __max_r"),
+            F.expr("max(CASE WHEN __side = 1 THEN __ts END) AS __max_s"),
         )
     )
-
-    part = [*keys, "__bucket"]
-    # same inclusive-tie semantics as nn_join (see its dedup derivation):
-    # ts-only RANGE frames for the cross-side nearest lookups, a rows-frame
-    # total order for the same-side group-position predicates
-    # O(n) running frames only — see nn_join: asc/desc unbounded-preceding
-    # range frames for the inclusive cross-side lookups, reversed rows
-    # frames for the same-side group-position predicates
-    w_before = Window.partitionBy(*part).orderBy(F.col("__ts").asc()).rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
+    ann = _nn_annotate(merged, [*keys, "__bucket"]).join(F.broadcast(maxes), keys)
+    other_max = "(CASE WHEN __side = 0 THEN __max_s ELSE __max_r END)"
+    pairs = _nn_pairs_sql(
+        ann,
+        keys,
+        own=own,
+        in_band=lambda t: f"abs({secs('__ts')} - {secs(t)}) <= {_dbl(delta)}",
+        lookahead=f"{other_max} IS NOT NULL AND {other_max} >= __ts",
     )
-    w_after = Window.partitionBy(*part).orderBy(F.col("__ts").desc()).rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
+    return _nn_project_out(
+        pairs,
+        keys,
+        ts_col,
+        [c for c in df_r.columns if c not in keys],
+        [c for c in df_s.columns if c not in keys],
+        secs,
+        None,
     )
-    rows_order = [
-        F.col("__ts"), F.col("__side"), F.col("__rp"), F.col("__sp"),
-    ]
-    w_rows_before = Window.partitionBy(*part).orderBy(
-        *[c.asc() for c in rows_order]
-    ).rowsBetween(Window.unboundedPreceding, -1)
-    w_rows_after = Window.partitionBy(*part).orderBy(
-        *[c.desc() for c in rows_order]
-    ).rowsBetween(Window.unboundedPreceding, -1)
-
-    is_r = F.col("__side") == 0
-    self_r = F.struct(F.col("__ts").alias("t"), F.col("__rp").alias("p"))
-    self_s = F.struct(F.col("__ts").alias("t"), F.col("__sp").alias("p"))
-    # chained selects per sort direction — range windows ride the rows
-    # windows' sort via prefix satisfaction (see nn_join)
-    ann = merged.select(
-        *keys, "__ts", "__side", "__rp", "__sp", "__bucket", "__own_bucket",
-        F.last(F.when(is_r, F.col("__ts")), ignorenulls=True)
-        .over(w_rows_before).alias("__psame_r_t"),
-        F.last(F.when(~is_r, F.col("__ts")), ignorenulls=True)
-        .over(w_rows_before).alias("__psame_s_t"),
-    ).select(
-        "*",
-        F.max(F.when(is_r, self_r)).over(w_before).alias("__prev_r"),
-        F.max(F.when(~is_r, self_s)).over(w_before).alias("__prev_s"),
-    ).select(
-        "*",
-        F.last(F.when(is_r, F.col("__ts")), ignorenulls=True)
-        .over(w_rows_after).alias("__nsame_r_t"),
-        F.last(F.when(~is_r, F.col("__ts")), ignorenulls=True)
-        .over(w_rows_after).alias("__nsame_s_t"),
-    ).select(
-        "*",
-        F.min(F.when(is_r, self_r)).over(w_after).alias("__next_r"),
-        F.min(F.when(~is_r, self_s)).over(w_after).alias("__next_s"),
-    ).join(F.broadcast(maxes), keys)
-
-    prev_other = F.when(is_r, F.col("__prev_s")).otherwise(F.col("__prev_r"))
-    next_other = F.when(is_r, F.col("__next_s")).otherwise(F.col("__next_r"))
-    other_max = F.when(is_r, F.col("__max_s")).otherwise(F.col("__max_r"))
-    prev_same_t = F.when(is_r, F.col("__psame_r_t")).otherwise(F.col("__psame_s_t"))
-    next_same_t = F.when(is_r, F.col("__nsame_r_t")).otherwise(F.col("__nsame_s_t"))
-    fo_t = F.when(is_r, F.col("__next_s.t")).otherwise(F.col("__next_r.t"))
-    lo_t = F.when(is_r, F.col("__prev_s.t")).otherwise(F.col("__prev_r.t"))
-    first_in_group = prev_same_t.isNull() | (prev_same_t < F.col("__ts"))
-    last_in_group = next_same_t.isNull() | (next_same_t > F.col("__ts"))
-    # ties are at distance 0, hence always bucket-local: the local FO/LO
-    # are exact wherever these tie predicates can fire
-    dup_self = F.when(
-        is_r, F.col("__next_s").eqNullSafe(F.col("__prev_s"))
-    ).otherwise(F.col("__next_r").eqNullSafe(F.col("__prev_r")))
-
-    def pair(r_t, r_p, s_t, s_p):
-        return F.struct(
-            r_t.alias("r_t"), r_p.alias("r_p"), s_t.alias("s_t"), s_p.alias("s_p")
-        )
-
-    in_band = lambda a, b: F.abs(secs(a) - secs(b)) <= F.lit(delta)  # noqa: E731
-    alpha = F.when(
-        is_own
-        & next_other.isNotNull()
-        & in_band(F.col("__ts"), next_other["t"])
-        & (is_r | ~((fo_t == F.col("__ts")) & first_in_group)),
-        F.when(
-            is_r, pair(F.col("__ts"), F.col("__rp"), next_other["t"], next_other["p"])
-        ).otherwise(
-            pair(next_other["t"], next_other["p"], F.col("__ts"), F.col("__sp"))
-        ),
-    )
-    beta = F.when(
-        is_own
-        & prev_other.isNotNull()
-        & in_band(F.col("__ts"), prev_other["t"])
-        & prev_same_t.isNotNull()
-        & (prev_same_t >= lo_t)
-        & ~dup_self
-        & ~(~is_r & (lo_t == F.col("__ts")) & last_in_group)
-        & other_max.isNotNull()
-        & (other_max >= F.col("__ts")),
-        F.when(
-            is_r, pair(F.col("__ts"), F.col("__rp"), prev_other["t"], prev_other["p"])
-        ).otherwise(
-            pair(prev_other["t"], prev_other["p"], F.col("__ts"), F.col("__sp"))
-        ),
-    )
-    pairs = ann.select(
-        *keys,
-        F.explode(F.array_compact(F.array(alpha, beta))).alias(
-            "__pair"
-        ),
-    )
-    out_cols = (
-        [F.col(k) for k in keys]
-        + [F.col("__pair.r_t").alias(f"{PAIR_LEFT_PREFIX}{ts_col}")]
-        + [F.col(f"__pair.r_p.{c}").alias(f"{PAIR_LEFT_PREFIX}{c}")
-           for c in r_payload if c != ts_col]
-        + [F.col("__pair.s_t").alias(f"{PAIR_RIGHT_PREFIX}{ts_col}")]
-        + [F.col(f"__pair.s_p.{c}").alias(f"{PAIR_RIGHT_PREFIX}{c}")
-           for c in s_payload if c != ts_col]
-    )
-    return pairs.select(*out_cols)

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .sqlident import quote_ident
+
 __all__ = [
     "cosine_sim_col",
     "cosine_sim_fixed_col",
@@ -88,7 +90,8 @@ def cosine_sim_fixed_col(a: Column, b: Column, dim: int) -> Column:
 
 
 def _dot_fixed_sql(a: str, b: str, dim: int) -> str:
-    """SQL-string form of :func:`dot_fixed_col` over plain column names —
+    """SQL-string form of :func:`dot_fixed_col` over SQL column expressions
+    (quote bare names with :func:`quote_ident`) —
     the identical left-associated expression (SQL ``+`` is
     left-associative, ``x[i]`` is ``getItem(i)``), parsed JVM-side in ONE
     RPC. The per-Column construction costs ~6 py4j round-trips per
@@ -394,7 +397,8 @@ def cosine_near_dup_pairs(
     # measured ~30× heavier); the vectors + precomputed norms join back in
     # afterwards for the rescore (broadcast only on request, see above).
     c = df.select(
-        F.col(id_col).alias("id"), signatures(F.col(vec_col)).alias("sigs")
+        F.col(quote_ident(id_col)).alias("id"),
+        signatures(F.col(quote_ident(vec_col))).alias("sigs"),
     ).select("id", F.posexplode("sigs").alias("tbl", "bucket"))
     grouped = c.groupBy("tbl", "bucket").agg(
         F.slice(
@@ -408,15 +412,11 @@ def cosine_near_dup_pairs(
         .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    vq = f"`{vec_col}`" if "`" not in vec_col else None
-    vecs = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        (
-            F.expr(f"SQRT({_dot_fixed_sql(vq, vq, dim)})")
-            if vq is not None
-            else F.sqrt(dot_fixed_col(F.col(vec_col), F.col(vec_col), dim))
-        ).alias("n"),
+    vq = quote_ident(vec_col)
+    vecs = df.selectExpr(
+        f"{quote_ident(id_col)} AS id",
+        f"{vq} AS v",
+        f"SQRT({_dot_fixed_sql(vq, vq, dim)}) AS n",
     )
     va = vecs.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na")

@@ -22,35 +22,11 @@ All are single-shuffle groupBy plans; the latest-pair uses ``max_by``
 from __future__ import annotations
 
 import math
-import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# plain SQL identifier — window tails build as one selectExpr parse RPC
-# when every involved name is plain (guide §1.2 step 2: per-plan driver
-# cost); the Column path remains for anything else
-_PLAIN_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _window_tail(
-    out: DataFrame, keys: list[str], start_alias: str, end_alias: str
-) -> DataFrame:
-    """Shared select tail: __w struct → (start, end, keys..., aggs...)."""
-    rest = [c for c in out.columns if c not in ["__w", *keys]]
-    if all(_PLAIN_IDENT.match(c) for c in [*keys, *rest]):
-        return out.selectExpr(
-            f"__w.start AS {start_alias}",
-            f"__w.end AS {end_alias}",
-            *[f"`{k}`" for k in keys],
-            *[f"`{c}`" for c in rest],
-        )
-    return out.select(
-        F.col("__w.start").alias(start_alias),
-        F.col("__w.end").alias(end_alias),
-        *keys,
-        *[F.col(c) for c in rest],
-    )
+from .sqlident import quote_ident
 
 __all__ = [
     "tumbling_agg",
@@ -60,6 +36,19 @@ __all__ = [
     "windowed_latest_pair",
     "power_level",
 ]
+
+
+def _window_tail(
+    out: DataFrame, keys: list[str], start_alias: str, end_alias: str
+) -> DataFrame:
+    """Shared select tail: __w struct → (start, end, keys..., aggs...)."""
+    rest = [c for c in out.columns if c not in ["__w", *keys]]
+    return out.selectExpr(
+        f"__w.start AS {start_alias}",
+        f"__w.end AS {end_alias}",
+        *map(quote_ident, [*keys, *rest]),
+    )
+
 
 POWER_FACTOR = 2 * math.pi / 60  # reference ts_join_with_kafka_eos.py:88
 POWER_CLAMP = 20000.0  # Flink comparator clamp, StreamJoiner.java:150
@@ -75,7 +64,9 @@ def tumbling_agg(
     """Tumbling event-time window aggregation (dashboard-style rollup)."""
     keys = keys or []
     aggs = aggs or [F.count(F.lit(1)).alias("n")]
-    out = df.groupBy(F.window(ts_col, duration).alias("__w"), *keys).agg(*aggs)
+    out = df.groupBy(
+        F.window(quote_ident(ts_col), duration).alias("__w"), *map(quote_ident, keys)
+    ).agg(*aggs)
     return _window_tail(out, keys, "window_start", "window_end")
 
 
@@ -90,7 +81,10 @@ def sliding_agg(
     """Sliding event-time window aggregation (Flink comparator's shape)."""
     keys = keys or []
     aggs = aggs or [F.count(F.lit(1)).alias("n")]
-    out = df.groupBy(F.window(ts_col, size, slide).alias("__w"), *keys).agg(*aggs)
+    out = df.groupBy(
+        F.window(quote_ident(ts_col), size, slide).alias("__w"),
+        *map(quote_ident, keys),
+    ).agg(*aggs)
     return _window_tail(out, keys, "window_start", "window_end")
 
 
@@ -137,55 +131,30 @@ def sliding_count_agg(
     if size_s % slide_s != 0:
         raise ValueError("sliding_count_agg requires size % slide == 0")
     ratio = size_s // slide_s
-    pre = df.groupBy(F.window(ts_col, slide).alias("__b"), *keys).agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    if all(_PLAIN_IDENT.match(c) for c in [*keys, count_alias]):
-        # SQL-string tail (one parse RPC per select; `size`/`slide` are
-        # _interval_seconds-validated '<n> <unit>' strings, safe inline)
-        kq = [f"`{k}`" for k in keys]
-        ex = pre.selectExpr(
-            *kq,
-            "__n",
-            "__b.start AS __bs",
-            f"explode(sequence(0, {ratio - 1})) AS __i",
-        ).selectExpr(
-            *kq,
-            "__n",
-            f"__bs - __i * INTERVAL {slide} AS window_start",
-        )
-        return (
-            ex.groupBy("window_start", *keys)
-            .agg(F.expr("CAST(sum(__n) AS BIGINT)").alias(count_alias))
-            .selectExpr(
-                "window_start",
-                f"window_start + INTERVAL {size} AS window_end",
-                *kq,
-                f"`{count_alias}`",
-            )
-        )
-    ex = pre.select(
-        *keys,
+    pre = df.groupBy(
+        F.window(quote_ident(ts_col), slide).alias("__b"), *map(quote_ident, keys)
+    ).agg(F.count(F.lit(1)).alias("__n"))
+    # `size`/`slide` are _interval_seconds-validated '<n> <unit>' strings,
+    # safe inline
+    kq = [quote_ident(k) for k in keys]
+    ex = pre.selectExpr(
+        *kq,
         "__n",
-        F.col("__b.start").alias("__bs"),
-        F.explode(F.sequence(F.lit(0), F.lit(ratio - 1))).alias("__i"),
-    ).select(
-        *keys,
+        "__b.start AS __bs",
+        f"explode(sequence(0, {ratio - 1})) AS __i",
+    ).selectExpr(
+        *kq,
         "__n",
-        (
-            F.col("__bs") - F.col("__i") * F.expr(f"INTERVAL {slide}")
-        ).alias("window_start"),
+        f"__bs - __i * INTERVAL {slide} AS window_start",
     )
     return (
-        ex.groupBy("window_start", *keys)
-        .agg(F.sum("__n").cast("long").alias(count_alias))
-        .select(
+        ex.groupBy("window_start", *map(quote_ident, keys))
+        .agg(F.expr("CAST(sum(__n) AS BIGINT)").alias(count_alias))
+        .selectExpr(
             "window_start",
-            (F.col("window_start") + F.expr(f"INTERVAL {size}")).alias(
-                "window_end"
-            ),
-            *keys,
-            count_alias,
+            f"window_start + INTERVAL {size} AS window_end",
+            *kq,
+            quote_ident(count_alias),
         )
     )
 
@@ -213,8 +182,11 @@ def session_agg(
     keys = keys or []
     aggs = aggs or [F.count(F.lit(1)).alias("n")]
     if min_input_partitions is not None and keys:
-        df = df.repartition(min_input_partitions, *keys)
-    g = df.groupBy(F.session_window(ts_col, gap).alias("__w"), *keys)
+        df = df.repartition(min_input_partitions, *map(quote_ident, keys))
+    g = df.groupBy(
+        F.session_window(quote_ident(ts_col), gap).alias("__w"),
+        *map(quote_ident, keys),
+    )
     out = g.agg(*aggs)
     return _window_tail(out, keys, "session_start", "session_end")
 
@@ -260,9 +232,8 @@ def windowed_latest_pair(
     if prefilter:
         # SQL-string construction (one parse RPC per select — see
         # nn_join._nn_pairs_sql for the measured py4j-chatter rationale)
-        kq = ", ".join(f"`{k}`" for k in keys)
-        tq = f"`{ts_col}`"
-        sq = f"`{side_col}`"
+        kq = ", ".join(map(quote_ident, keys))
+        tq, sq = quote_ident(ts_col), quote_ident(side_col)
         rng_asc = (
             f"OVER (PARTITION BY {kq} ORDER BY {tq} ASC "
             "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
@@ -289,13 +260,12 @@ def windowed_latest_pair(
             f"{next_other} <= {tq} + INTERVAL {size})"
         )
         df = ann.filter(keep).drop("__lr", "__ls", "__nr", "__ns")
-    # aggregation + projection as SQL expression strings (same logical
-    # expressions as the previous per-Column form — F.lit(POWER_*) becomes
-    # CAST('<repr>' AS DOUBLE), an exact double round-trip — one parse RPC
-    # each instead of ~90 py4j round-trips per plan construction)
-    tq, sq, vq = f"`{ts_col}`", f"`{side_col}`", f"`{value_col}`"
+    # aggregation + projection as SQL expression strings: one parse RPC
+    # each instead of ~90 py4j round-trips per plan construction; POWER_*
+    # go in as CAST('<repr>' AS DOUBLE), an exact double round-trip
+    tq, sq, vq = map(quote_ident, (ts_col, side_col, value_col))
     side_struct = f"struct({tq} AS t, {vq} AS v)"
-    g = df.groupBy(F.window(ts_col, size, slide).alias("__w"), *keys)
+    g = df.groupBy(F.window(tq, size, slide).alias("__w"), *map(quote_ident, keys))
     paired = g.agg(
         F.expr(
             f"max_by(CASE WHEN {sq} = 'r' THEN {side_struct} END, "
@@ -314,7 +284,7 @@ def windowed_latest_pair(
     return paired.selectExpr(
         "__w.start AS window_start",
         "__w.end AS window_end",
-        *[f"`{k}`" for k in keys],
+        *map(quote_ident, keys),
         "__r.t AS r_ts",
         "__r.v AS r_value",
         "__s.t AS s_ts",

@@ -34,6 +34,7 @@ and reads the sink back; :func:`drain_foreach_batch` runs one into a
 
 from __future__ import annotations
 
+import atexit
 import datetime
 import glob
 import os
@@ -53,11 +54,20 @@ __all__ = [
     "drain_foreach_batch",
     "drain_to_parquet",
     "replay_stream",
+    "staging_dir",
     "write_time_ordered_chunks",
 ]
 
 _MTIME_STEP = 10.0  # seconds between stamped chunk mtimes
 PUNCTUATION_OFFSET = datetime.timedelta(hours=2)
+
+
+def staging_dir(prefix: str) -> str:
+    """A fresh temp dir, removed at interpreter exit. Frames read from it
+    stay lazy until then, so no caller can remove it any earlier."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _stamp_mtimes(out_dir: str, start_index: int = 0) -> int:
@@ -150,14 +160,14 @@ def replay_stream(
     n_files: int = 3,
     tiebreak_cols: list[str] | None = None,
 ) -> Replay:
-    """Stage ``df`` in a fresh temp dir as ``n_files`` chunks ordered by
-    ``order_col`` and replay them one file per trigger.
+    """Stage ``df`` in a fresh :func:`staging_dir` as ``n_files`` chunks
+    ordered by ``order_col`` and replay them one file per trigger.
 
     ``punctuation`` gives every other column's value for the punctuation
     row; its ``order_col`` is the staged max + :data:`PUNCTUATION_OFFSET`.
     """
     spark = df.sparkSession
-    tmp = tempfile.mkdtemp(prefix="ssp_replay_")
+    tmp = staging_dir("ssp_replay_")
     in_dir = os.path.join(tmp, "input")
     idx = write_time_ordered_chunks(df, in_dir, n_files, order_col, tiebreak_cols)
     max_ts = _footer_max(in_dir, order_col)

@@ -328,20 +328,26 @@ def test_nn_join_banded_tie_groups_match_kernel(spark):
         assert got == want, (rt, st_, got, want)
 
 
-def test_nn_join_tiebreak_deterministic(spark):
-    """Equal timestamps: the tiebreak column makes the total order — and
-    therefore the pair set — deterministic across runs/partitionings."""
-    rows_r = [("k", 10.0, 1, 1.0), ("k", 10.0, 2, 2.0)]
-    rows_s = [("k", 10.0, 3, 3.0), ("k", 20.0, 4, 4.0)]
-    df_r = spark.createDataFrame(rows_r, ["key", "ts", "seq", "val"])
-    df_s = spark.createDataFrame(rows_s, ["key", "ts", "seq", "val"])
+def test_nn_join_ties_deterministic_across_partitionings(spark):
+    """Equal timestamps within and across sides: the payload structs
+    totally order the ties, so the pair set is the same for inputs in 1
+    and 7 partitions and equals the closure kernel's (whose index order
+    within a tie group is the ``seq`` order)."""
+    import numpy as np
+
+    rt = [10.0, 10.0, 10.0, 15.0, 20.0, 20.0]
+    st_ = [10.0, 10.0, 20.0, 25.0]
+    rows_r = [("k", t, i, 1.0) for i, t in enumerate(rt)]
+    rows_s = [("k", t, i, 2.0) for i, t in enumerate(st_)]
+    cols = ["key", "ts", "seq", "val"]
     outs = set()
-    for _ in range(3):
-        out = nn_join(df_r, df_s, "key", "ts", tiebreak="seq")
-        outs.add(
-            frozenset((r["r_seq"], r["s_seq"]) for r in out.collect())
-        )
-    assert len(outs) == 1
+    for n_parts in (1, 7):
+        df_r = spark.createDataFrame(rows_r, cols).repartition(n_parts)
+        df_s = spark.createDataFrame(rows_s, cols).repartition(n_parts)
+        out = nn_join(df_r, df_s, "key", "ts")
+        outs.add(frozenset((r["r_seq"], r["s_seq"]) for r in out.collect()))
+    ci, cj = closure_pairs(np.array(rt), np.array(st_))
+    assert outs == {frozenset(zip(ci.tolist(), cj.tolist()))}
 
 
 def test_nn_join_banded_equals_plain(spark):

@@ -8,6 +8,7 @@ short documents, sparse and dense key timelines).
 
 from __future__ import annotations
 
+import datetime as dt
 import random
 
 import pytest
@@ -275,32 +276,74 @@ def test_nn_join_one_source_matches_two_frame(rand_events):
         )
 
 
-def test_asof_sql_fast_path_matches_column_core(rand_events):
-    """The SQL-string as-of fast path == the per-Column window core, both
-    directions, with exact cross-side ties present in the fixture."""
-    from statefulstreamprocessor_spark.operators import asof as asof_mod
+def _asof_brute(left, right, direction, tolerance_us=None):
+    """Pure-Python as-of: per left row, the nearest right row of its key
+    in ``direction`` (inclusive at equal ts); equal right ts resolve to
+    the MAX (backward) / MIN (forward) right payload (ts, value); a
+    partner more than ``tolerance_us`` away is no partner."""
+    out = []
+    for k, t, v in left:
+        if direction == "backward":
+            cands = [(rt, rv) for rk, rt, rv in right if rk == k and rt <= t]
+            best = max(cands, default=None)
+        else:
+            cands = [(rt, rv) for rk, rt, rv in right if rk == k and rt >= t]
+            best = min(cands, default=None)
+        if best is not None and tolerance_us is not None:
+            if abs((best[0] - t) // dt.timedelta(microseconds=1)) > tolerance_us:
+                best = None
+        out.append((k, t, v, *(best or (None, None))))
+    return sorted(out, key=repr)
 
-    left = rand_events.filter(F.col("side") == "r").select(
-        "user_id", "ts", "value"
+
+def test_asof_matches_brute_force_reference(spark):
+    """asof_join and both asof_join_banded forms == a pure-Python as-of:
+    both directions, right-ts ties broken by the payload struct, and a
+    tolerance met with |dt| exactly equal to it (and missed by 1 µs)."""
+    from statefulstreamprocessor_spark.operators.asof import (
+        asof_join,
+        asof_join_banded,
     )
-    right = rand_events.filter(F.col("side") == "s").select(
-        "user_id", "ts", "value"
-    )
+
+    rng = random.Random(13)
+    t0 = dt.datetime(2024, 3, 1)
+    tol_s = 600.0
+    tol = dt.timedelta(seconds=tol_s)
+    us = dt.timedelta(microseconds=1)
+    left, right = [], []
+    for k in range(8):
+        for _ in range(25):
+            t = t0 + dt.timedelta(seconds=rng.randrange(0, 4 * 3600, 30))
+            side = right if rng.random() < 0.5 else left
+            side.append((k, t, float(rng.randint(0, 9))))
+    # equal-ts right rows with different payloads, and an equal-ts left row
+    left.append((8, t0, 0.5))
+    right += [(8, t0, 1.0), (8, t0, 7.0), (8, t0, 3.0)]
+    # partners exactly at the tolerance (kept) and 1 µs beyond it (dropped)
+    left += [(9, t0 + tol, 0.0), (10, t0 + tol + us, 0.0)]
+    right += [(9, t0, 1.0), (9, t0 + 2 * tol, 2.0)]
+    right += [(10, t0, 1.0), (10, t0 + 2 * tol + 2 * us, 2.0)]
+    schema = "user_id int, ts timestamp_ntz, value double"
+    ldf = spark.createDataFrame(left, schema)
+    rdf = spark.createDataFrame(right, schema)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
     for direction in ("backward", "forward"):
-        fast = asof_mod.asof_join(
-            left, right, "user_id", "ts", direction=direction
+        free = _asof_brute(left, right, direction)
+        cut = _asof_brute(left, right, direction, int(tol_s * 1_000_000))
+        assert any(r[3] is not None for r in cut)
+        assert free != cut
+        kw = dict(keys="user_id", ts_col="ts", direction=direction)
+        assert rows(asof_join(ldf, rdf, **kw)) == free
+        assert rows(asof_join(ldf, rdf, tolerance=tol_s, **kw)) == cut
+        assert rows(asof_join_banded(ldf, rdf, tolerance=tol_s, **kw)) == cut
+        assert (
+            rows(asof_join_banded(ldf, rdf, tolerance=tol_s, band_seconds=1800.0, **kw))
+            == cut
         )
-        merged, lp, rp = asof_mod._merge_sides(
-            left, right, ["user_id"], "ts"
-        )
-        ref = asof_mod._asof_core(
-            merged, ["user_id"], ["user_id"], "ts", direction, None,
-            "timestamp_ntz", lp, rp, "right_",
-        )
-        assert fast.schema == ref.schema
-        assert sorted(map(tuple, fast.collect())) == sorted(
-            map(tuple, ref.collect())
-        )
+        assert rows(asof_join_banded(ldf, rdf, band_seconds=1800.0, **kw)) == free
 
 
 def test_windowed_latest_pair_sql_tail_matches_column_reference(rand_events):

@@ -56,6 +56,35 @@ def test_nn_join_plan_shape(spark, events):
     assert len(sorts) == 2, plan
 
 
+def test_nn_join_banded_plan_shape(spark, events):
+    """The hot-series banded join: one hash exchange of the data on
+    (key, __bucket) plus one for the tiny per-key max pre-aggregation,
+    which joins back as the plan's only join, a broadcast; the windows
+    keep nn_join's two sorts / four Window operators and have no O(n²)
+    frames."""
+    from statefulstreamprocessor_spark.operators.nn_join import nn_join_banded
+
+    r = events.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", "event_id"
+    )
+    s = events.filter(F.col("event_type") == "view").select(
+        "user_id", "ts", "event_id"
+    )
+    plan = _plan(nn_join_banded(r, s, "user_id", "ts", delta=7200.0))
+
+    def count(op):
+        return len(re.findall(rf"^\(\d+\) {op}\b", plan, re.M))
+
+    assert count("Exchange") == 2, plan
+    assert re.search(r"hashpartitioning\(user_id[^\)]*__bucket", plan), plan
+    assert count("Sort") == 2, plan
+    assert count("Window") == 4, plan
+    assert count("BroadcastHashJoin") == 1, plan
+    assert count("BroadcastExchange") == 1, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "unboundedfollowing" not in plan.lower()
+
+
 def test_asof_plan_no_join_node(spark, events):
     left = events.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value"

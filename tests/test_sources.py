@@ -171,6 +171,31 @@ def test_replay_stream_needs_footer_statistics(spark):
         staging.replay_stream(df, "ts", punctuation={"v": 0})
 
 
+def test_staging_dir_removed_at_interpreter_exit():
+    """A child interpreter makes a staging dir, fills it and exits; the
+    dir must be gone afterwards (replays and gate queries leak none)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from statefulstreamprocessor_spark.sources.staging import staging_dir\n"
+        "d = staging_dir('ssp_test_')\n"
+        "os.makedirs(os.path.join(d, 'out'))\n"
+        "open(os.path.join(d, 'out', 'part.parquet'), 'w').close()\n"
+        "print(d)\n"
+    )
+    child = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+        check=True,
+    )
+    path = child.stdout.strip()
+    assert os.path.basename(path).startswith("ssp_test_")
+    assert not os.path.exists(path)
+
+
 def test_machine_code_and_prefilter(spark):
     from statefulstreamprocessor_spark.functions.records import (
         machine_code,
