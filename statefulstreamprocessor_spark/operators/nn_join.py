@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .asof import _time_units_fn, _units_sql
 from .sqlident import null_struct_sql, quote_ident, struct_sql
 
 __all__ = [
@@ -47,16 +48,12 @@ _PREV_OTHER = "(CASE WHEN __side = 0 THEN __prev_s ELSE __prev_r END)"
 _NEXT_OTHER = "(CASE WHEN __side = 0 THEN __next_s ELSE __next_r END)"
 
 
-def _dbl(x: float) -> str:
-    return f"CAST({float(x)!r} AS DOUBLE)"
-
-
-def _secs(df: DataFrame, ts_col: str) -> Callable[[str], str]:
-    """SQL for a ``ts_col`` value in double seconds. TIMESTAMP_NTZ has no
-    direct double cast, so timestamps go via TIMESTAMP (session tz)."""
-    if df.schema[ts_col].dataType.simpleString().startswith("timestamp"):
-        return lambda c: f"CAST(CAST({c} AS TIMESTAMP) AS DOUBLE)"
-    return lambda c: f"CAST({c} AS DOUBLE)"
+def _time_units(df: DataFrame, ts_col: str) -> tuple[Callable[[str], str], int]:
+    """(to_units SQL, units per second) for ``ts_col``'s Δ-band and bucket
+    math: exact µs from the epoch for TIMESTAMP_NTZ — no session-tz cast,
+    so a DST change does not stretch or shrink NTZ time — else double
+    seconds (see :func:`.asof._time_units_fn`)."""
+    return _time_units_fn(df.schema[ts_col].dataType.simpleString())
 
 
 def _sides(
@@ -119,7 +116,7 @@ def nn_join(
         ts_col,
         [c for c in df_r.columns if c not in keys],
         [c for c in df_s.columns if c not in keys],
-        _secs(df_r, ts_col),
+        _time_units(df_r, ts_col),
         delta,
     )
 
@@ -168,7 +165,7 @@ def nn_join_one_source(
     )
     pairs = _nn_pairs_sql(_nn_annotate(merged, keys), keys)
     return _nn_project_out(
-        pairs, keys, ts_col, payload, payload, _secs(df, ts_col), delta
+        pairs, keys, ts_col, payload, payload, _time_units(df, ts_col), delta
     )
 
 
@@ -178,13 +175,15 @@ def _nn_project_out(
     ts_col: str,
     r_payload: list[str],
     s_payload: list[str],
-    secs: Callable[[str], str],
+    units: tuple[Callable[[str], str], int],
     delta: float | None,
 ) -> DataFrame:
     """Shared tail: optional Δ-band filter + r_/s_-prefixed projection."""
     if delta is not None:
+        to_units, ups = units
         pairs = pairs.filter(
-            f"abs({secs('__pair.r_t')} - {secs('__pair.s_t')}) <= {_dbl(delta)}"
+            f"abs({to_units('__pair.r_t')} - {to_units('__pair.s_t')}) "
+            f"<= {_units_sql(delta, ups)}"
         )
 
     def side_out(slot: str, prefix: str, payload: list[str]) -> list[str]:
@@ -364,8 +363,8 @@ def nn_join_banded(
     if width < delta:
         raise ValueError("chunk_seconds must be >= delta")
 
-    secs = _secs(df_r, ts_col)
-    bucket = f"CAST(floor({secs('__ts')} / {_dbl(width)}) AS BIGINT)"
+    to_units, ups = _time_units(df_r, ts_col)
+    bucket = f"CAST(floor({to_units('__ts')} / {_units_sql(width, ups)}) AS BIGINT)"
     r, s = (
         side.selectExpr(
             "*",
@@ -391,7 +390,9 @@ def nn_join_banded(
         ann,
         keys,
         own=own,
-        in_band=lambda t: f"abs({secs('__ts')} - {secs(t)}) <= {_dbl(delta)}",
+        in_band=lambda t: (
+            f"abs({to_units('__ts')} - {to_units(t)}) <= {_units_sql(delta, ups)}"
+        ),
         lookahead=f"{other_max} IS NOT NULL AND {other_max} >= __ts",
     )
     return _nn_project_out(
@@ -400,6 +401,6 @@ def nn_join_banded(
         ts_col,
         [c for c in df_r.columns if c not in keys],
         [c for c in df_s.columns if c not in keys],
-        secs,
+        (to_units, ups),
         None,
     )

@@ -28,7 +28,8 @@ Contract, per trigger and state group (:func:`group_fn`):
 * **pruning** — summary rows with ``expires_at(summ) <= wm`` are dropped;
 * **state** — one ``(buf, summ)`` pair of Arrow IPC stream bytes per
   group (``b''`` = no frame). A group holding neither calls
-  ``state.remove()``, so idle groups keep no state rows;
+  ``state.remove()``, so idle groups keep no state rows. Each frame's
+  schema metadata records the ``n_buckets`` it was written under;
 * **timeouts** (event time) — a group with buffered rows re-fires at
   ``wm + 1`` ms; one holding only summaries re-fires at the earliest
   expiry, converted back to epoch with the offset seen at the current
@@ -38,6 +39,10 @@ Contract, per trigger and state group (:func:`group_fn`):
 * **groups** — ``pmod(xxhash64(keys), n_buckets)`` hash buckets, so one
   Arrow + state-store round trip per trigger covers many keys. Only the
   keys, the event time and the buffered columns are shipped to Python.
+  ``n_buckets`` is part of the checkpoint: resumed under another value
+  (its default follows ``defaultParallelism``), keys would hash to other
+  state groups and silently restart, so a restored group written under
+  another value raises instead. State written without the record loads.
 """
 
 from __future__ import annotations
@@ -55,8 +60,8 @@ from pyspark.sql.types import BinaryType, StructField, StructType
 from .timebase import session_tz, watermark_to_naive_us
 
 __all__ = [
-    "Sealed", "arm_expiry", "bucketed_apply", "de_frame", "group_fn", "resolve",
-    "sealed_stream", "ser_frame", "upsert",
+    "Sealed", "arm_expiry", "bucketed_apply", "de_frame", "group_fn", "load_state",
+    "resolve", "sealed_stream", "ser_frame", "store_state", "upsert",
 ]
 
 STATE_SCHEMA = StructType(
@@ -64,29 +69,58 @@ STATE_SCHEMA = StructType(
 )
 
 
-def ser_frame(pdf: pd.DataFrame | None) -> bytes:
-    """pandas frame → Arrow IPC stream bytes (b'' encodes None/empty)."""
+_N_BUCKETS = b"ssp.n_buckets"
+
+
+def ser_frame(pdf: pd.DataFrame | None, n_buckets: int) -> bytes:
+    """pandas frame → Arrow IPC stream bytes (b'' encodes None/empty),
+    recording the ``n_buckets`` the state group belongs to."""
     if pdf is None or len(pdf) == 0:
         return b""
     table = pa.Table.from_pandas(pdf, preserve_index=False)
+    table = table.replace_schema_metadata(
+        {**table.schema.metadata, _N_BUCKETS: str(n_buckets).encode()}
+    )
     sink = pa.BufferOutputStream()
     with pa.ipc.new_stream(sink, table.schema) as w:
         w.write_table(table)
     return sink.getvalue().to_pybytes()
 
 
-def de_frame(b: bytes | None) -> pd.DataFrame | None:
+def de_frame(b: bytes | None, n_buckets: int) -> pd.DataFrame | None:
     """Arrow IPC bytes → pandas frame (None for b'').
 
     ``integer_object_nulls=True``: an integer column that acquired nulls
     comes back as an OBJECT column of python ints / None instead of
     float64-with-NaN, so bigints ≥ 2⁵³ survive the state round trip
-    exactly. Null-free integer columns still deserialize as int64."""
+    exactly. Null-free integer columns still deserialize as int64.
+
+    Raises ValueError when the frame was written under another
+    ``n_buckets`` (a frame without the record is accepted)."""
     if not b:
         return None
-    return (
-        pa.ipc.open_stream(pa.py_buffer(b)).read_all().to_pandas(integer_object_nulls=True)
-    )
+    table = pa.ipc.open_stream(pa.py_buffer(b)).read_all()
+    written = (table.schema.metadata or {}).get(_N_BUCKETS)
+    if written is not None and int(written) != n_buckets:
+        raise ValueError(
+            f"state checkpoint written with n_buckets={int(written)} cannot resume "
+            f"with n_buckets={n_buckets}: keys would hash to other state groups; "
+            f"pass n_buckets={int(written)} or start a new checkpoint"
+        )
+    return table.to_pandas(integer_object_nulls=True)
+
+
+def load_state(state: GroupState, n_buckets: int) -> tuple:
+    """The group's stored ``(buf, summ)`` frames, (None, None) if none."""
+    if not state.exists:
+        return None, None
+    return tuple(de_frame(b, n_buckets) for b in state.get)
+
+
+def store_state(
+    state: GroupState, buf: pd.DataFrame | None, summ: pd.DataFrame | None, n_buckets: int
+) -> None:
+    state.update((ser_frame(buf, n_buckets), ser_frame(summ, n_buckets)))
 
 
 def empty(pdf: pd.DataFrame | None) -> bool:
@@ -197,15 +231,16 @@ def _append(buf: pd.DataFrame | None, add: pd.DataFrame) -> pd.DataFrame:
     return pd.concat([buf, add], ignore_index=True)
 
 
-def group_fn(spec: Sealed, tz_name: str) -> Callable:
-    """The ``applyInPandasWithState`` function for ``spec`` (pure python:
-    tests drive it with hand-built ``GroupState`` objects)."""
+def group_fn(spec: Sealed, tz_name: str, n_buckets: int) -> Callable:
+    """The ``applyInPandasWithState`` function for ``spec`` over
+    ``n_buckets`` state groups (pure python: tests drive it with
+    hand-built ``GroupState`` objects)."""
     keys, sort_cols = spec.keys, ["__ts", *spec.ties]
 
     def fn(
         key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        buf, summ = map(de_frame, state.get) if state.exists else (None, None)
+        buf, summ = load_state(state, n_buckets)
         wm_us = watermark_to_naive_us(int(state.getCurrentWatermarkMs()), tz_name)
         new = [p for p in pdf_iter if len(p)]
         if new:
@@ -241,7 +276,7 @@ def group_fn(spec: Sealed, tz_name: str) -> Callable:
             if state.exists:
                 state.remove()
         else:
-            state.update((ser_frame(buf), ser_frame(summ)))
+            store_state(state, buf, summ, n_buckets)
             if not empty(buf):
                 # unsealed rows wait on the watermark, not on data
                 state.setTimeoutTimestamp(max(int(state.getCurrentWatermarkMs()) + 1, 1))
@@ -257,5 +292,5 @@ def sealed_stream(
     df: DataFrame, spec: Sealed, n_buckets: int, out_schema: StructType
 ) -> DataFrame:
     """Run ``spec`` over the streaming ``df`` (append mode)."""
-    fn = group_fn(spec, session_tz(df.sparkSession))
+    fn = group_fn(spec, session_tz(df.sparkSession), n_buckets)
     return bucketed_apply(df, spec.keys, [spec.ts_col, *spec.cols], n_buckets, fn, out_schema)

@@ -46,10 +46,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import StructField, StructType
 
-from .sealed import arm_expiry, bucketed_apply, de_frame, empty, resolve, ser_frame
+from .sealed import arm_expiry, bucketed_apply, empty, load_state, resolve, store_state
 from .timebase import session_tz, watermark_to_naive_us
 
-__all__ = ["streaming_nn_join"]
+__all__ = ["join_group_fn", "streaming_nn_join"]
 
 _NEG = np.int64(np.iinfo(np.int64).min)
 
@@ -368,9 +368,9 @@ def _decide(
                 )
                 .groupby([*keys, "__side"], sort=False)["__ts"]
                 .max()
-                .unstack("__side")
-                .reindex(columns=[0, 1])
-                .fillna(_NEG)
+                .astype(np.int64)  # __ts may hold python ints (object): cast, then fill
+                .unstack("__side", fill_value=_NEG)
+                .reindex(columns=[0, 1], fill_value=_NEG)
                 .reset_index()
                 .rename(columns={0: "__mr", 1: "__ms"})
             ) if len(buf) else None
@@ -426,7 +426,10 @@ def streaming_nn_join(
     ``ts_col`` (TimestampType), a ``side_col`` with values 'r'/'s', and any
     payload columns. Output: keys + r_/s_-prefixed ts and payload columns,
     append mode, exactly-once per pair. ``n_buckets`` controls state-group
-    fan-out (default 8 × defaultParallelism). Size it to the per-trigger
+    fan-out (default 8 × defaultParallelism) and is recorded in the state:
+    resuming a checkpoint under another value raises ValueError, because
+    series would hash to other groups and miss their buffered partners,
+    so pin it when the cluster size may change. Size it to the per-trigger
     BATCH, not just cores: every group costs one Arrow + state-store round
     trip per trigger, so low-rate latency-sensitive queries want few
     buckets (8 buckets measured p95 2.1 s vs 64 buckets 6.5 s at
@@ -464,24 +467,50 @@ def streaming_nn_join(
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
     payload_cols = [c for c in df.columns if c not in [*keys_l, ts_col, side_col]]
-    proj = [
-        (f"{p}_{c}", c, p) for p in ("r", "s") for c in [ts_col, *payload_cols]
-    ]
+    proj = _projection(ts_col, payload_cols)
     keys_l, n_buckets, ttl_us = resolve(
         df, keys_l, n_buckets, state_ttl, [name for name, _, _ in proj]
     )
-    tz_name = session_tz(df.sparkSession)
     out_schema = StructType(
         [df.schema[k] for k in keys_l]
         + [StructField(name, df.schema[c].dataType, True) for name, c, _ in proj]
     )
-    delta_us = None if delta is None else float(delta) * 1e6
-    out_cols = [f.name for f in out_schema.fields]
+    fn = join_group_fn(
+        keys_l, ts_col, side_col, payload_cols,
+        None if delta is None else float(delta) * 1e6,
+        ttl_us, n_buckets, session_tz(df.sparkSession), assume_in_order,
+    )
+    return bucketed_apply(
+        df, keys_l, [ts_col, side_col, *payload_cols], n_buckets, fn, out_schema
+    )
+
+
+def _projection(ts_col: str, payload_cols: list[str]) -> list[tuple[str, str, str]]:
+    """(output name, source column, 'r'|'s') for each pair output column."""
+    return [(f"{p}_{c}", c, p) for p in ("r", "s") for c in [ts_col, *payload_cols]]
+
+
+def join_group_fn(
+    keys_l: list[str],
+    ts_col: str,
+    side_col: str,
+    payload_cols: list[str],
+    delta_us: float | None,
+    ttl_us: int | None,
+    n_buckets: int,
+    tz_name: str,
+    assume_in_order: bool,
+):
+    """The ``applyInPandasWithState`` function of :func:`streaming_nn_join`
+    over ``n_buckets`` state groups (pure python: tests drive it with
+    hand-built ``GroupState`` objects)."""
+    proj = _projection(ts_col, payload_cols)
+    out_cols = [*keys_l, *(name for name, _, _ in proj)]
 
     def fn(
         key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        buf, pend = map(de_frame, state.get) if state.exists else (None, None)
+        buf, pend = load_state(state, n_buckets)
 
         # watermark in the delivered rows' naive basis: pandas receives
         # session-LOCAL naive event times while getCurrentWatermarkMs is
@@ -561,7 +590,7 @@ def streaming_nn_join(
             if state.exists:
                 state.remove()
         else:
-            state.update((ser_frame(buf), ser_frame(pend)))
+            store_state(state, buf, pend, n_buckets)
             if wm_blocked:
                 state.setTimeoutTimestamp(max(int(state.getCurrentWatermarkMs()) + 1, 1))
             elif ttl_us is not None:
@@ -573,6 +602,4 @@ def streaming_nn_join(
         if out is not None and len(out):
             yield out[out_cols]
 
-    return bucketed_apply(
-        df, keys_l, [ts_col, side_col, *payload_cols], n_buckets, fn, out_schema
-    )
+    return fn

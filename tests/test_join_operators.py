@@ -114,6 +114,42 @@ def test_nn_join_empty_side(spark):
     ).count() == 0
 
 
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_nn_join_ntz_band_measures_wall_time(spark, tz):
+    """TIMESTAMP_NTZ Δ bands (and nn_join_banded's buckets) measure NTZ
+    time exactly, whatever the session time zone. A behaviour change: they
+    used to go through a session-zone TIMESTAMP cast, so under New York
+    01:30 → 03:10 on 2024-03-10 (1 h 40 min of NTZ time, 40 min of real
+    time across the spring-forward gap) paired within a 1 h band."""
+    import datetime as dt
+
+    from statefulstreamprocessor_spark.operators.nn_join import (
+        nn_join_banded,
+        nn_join_one_source,
+    )
+
+    rows = spark.createDataFrame(
+        [("k", "r", dt.datetime(2024, 3, 10, 1, 30), 1.0),
+         ("k", "s", dt.datetime(2024, 3, 10, 3, 10), 2.0)],
+        "key string, side string, ts timestamp_ntz, val double",
+    )
+    r = rows.filter("side = 'r'").drop("side")
+    s = rows.filter("side = 's'").drop("side")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        # 6000 s is the pair's exact NTZ distance: inclusive, so it pairs
+        for delta, want in ((3600.0, 0), (5999.0, 0), (6000.0, 1)):
+            got = [
+                nn_join(r, s, "key", "ts", delta=delta).count(),
+                nn_join_one_source(rows, "key", "ts", "side", "r", "s", delta=delta).count(),
+                nn_join_banded(r, s, "key", "ts", delta=delta).count(),
+            ]
+            assert got == [want] * 3, (delta, got)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
 def test_asof_equal_ts_semantics(spark):
     """Documented inclusive semantics at equal timestamps: backward picks
     the equal-ts right row (latest right.ts <= left.ts), forward picks it

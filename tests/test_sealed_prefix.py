@@ -101,13 +101,13 @@ def _canon(out: list[pd.DataFrame]) -> list[tuple]:
 
 
 def _drive(make_spec, tz: str, triggers: list[tuple[pd.DataFrame, int]], restart_at: int):
-    fn = sealed.group_fn(make_spec(), tz)
+    fn = sealed.group_fn(make_spec(), tz, N_GROUPS)
     stored: dict[int, tuple] = {}
     timeouts: dict[int, int] = {}
     out: list[pd.DataFrame] = []
     for i, (rows, wm_ms) in enumerate(triggers):
         if i == restart_at:
-            fn = sealed.group_fn(make_spec(), tz)
+            fn = sealed.group_fn(make_spec(), tz, N_GROUPS)
         g_of = rows["user"].to_numpy() % N_GROUPS
         due = {g for g, t in timeouts.items() if wm_ms > t}
         for g in sorted(set(g_of.tolist()) | due):
@@ -127,7 +127,7 @@ def _drive(make_spec, tz: str, triggers: list[tuple[pd.DataFrame, int]], restart
         spec = make_spec()
         wm_us = watermark_to_naive_us(wm_ms, tz)
         for g, (_, summ_b) in stored.items():
-            summ = sealed.de_frame(summ_b)
+            summ = sealed.de_frame(summ_b, N_GROUPS)
             if spec.expires_at is not None and summ is not None and g not in timeouts:
                 # a group left without a timeout must hold no expirable row
                 raise AssertionError(f"group {g} holds summaries but no timeout")
