@@ -19,6 +19,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from statefulstreamprocessor_spark.functions.timeutils import ntz_epoch_sql
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -55,27 +57,6 @@ def _event_sides(spark: SparkSession, sf_dir: str, left: str = "click",
     r = ev.filter(F.col("event_type") == left).drop("event_type")
     s = ev.filter(F.col("event_type") == right).drop("event_type")
     return r, s
-
-
-_NTZ_EPOCH = "1970-01-01 00:00:00"
-
-
-def _us(c) -> F.Column:
-    """TIMESTAMP_NTZ → epoch micros (bigint), independent of the session
-    timezone (a plain cast to TIMESTAMP would shift with it)."""
-    if isinstance(c, str):
-        c = F.col(c)
-    return F.timestamp_diff(
-        "MICROSECOND", F.lit(_NTZ_EPOCH).cast("timestamp_ntz"), c
-    )
-
-
-def _us_sql(expr: str) -> str:
-    """SQL-string form of :func:`_us` — identical expression
-    (``timestampdiff`` is ``F.timestamp_diff``; the NTZ epoch literal is
-    timezone-independent), for ``selectExpr`` projections that build with
-    one parse RPC instead of ~5 py4j round-trips per column."""
-    return f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '{_NTZ_EPOCH}', {expr})"
 
 
 def _event_time(stream: DataFrame, ts: str = "ts") -> DataFrame:
@@ -115,10 +96,10 @@ def q_nn_pair_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = nn_join_one_source(ev, "user_id", "ts", "event_type", "click", "view")
     return out.selectExpr(
         "user_id",
-        f"{_us_sql('r_ts')} AS r_ts_us",
+        f"{ntz_epoch_sql('r_ts')} AS r_ts_us",
         "r_event_id",
         "r_value",
-        f"{_us_sql('s_ts')} AS s_ts_us",
+        f"{ntz_epoch_sql('s_ts')} AS s_ts_us",
         "s_event_id",
         "s_value",
     )
@@ -136,9 +117,9 @@ def q_nn_pair_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.selectExpr(
         "user_id",
-        f"{_us_sql('r_ts')} AS r_ts_us",
+        f"{ntz_epoch_sql('r_ts')} AS r_ts_us",
         "r_event_id",
-        f"{_us_sql('s_ts')} AS s_ts_us",
+        f"{ntz_epoch_sql('s_ts')} AS s_ts_us",
         "s_event_id",
     )
 
@@ -150,12 +131,12 @@ def q_nn_pair_join_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r, s = _event_sides(spark, sf_dir)
     out = nn_join_banded(r, s, "user_id", "ts", delta=7200.0)
-    return out.select(
+    return out.selectExpr(
         "user_id",
-        _us("r_ts").alias("r_ts_us"),
-        F.col("r_event_id"),
-        _us("s_ts").alias("s_ts_us"),
-        F.col("s_event_id"),
+        f"{ntz_epoch_sql('r_ts')} AS r_ts_us",
+        "r_event_id",
+        f"{ntz_epoch_sql('s_ts')} AS s_ts_us",
+        "s_event_id",
     )
 
 
@@ -173,10 +154,10 @@ def q_asof_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = asof_join(left, right, "user_id", "ts", direction="backward")
     return out.selectExpr(
         "user_id",
-        f"{_us_sql('ts')} AS ts_us",
+        f"{ntz_epoch_sql('ts')} AS ts_us",
         "event_id",
         "value",
-        f"{_us_sql('right_ts')} AS click_ts_us",
+        f"{ntz_epoch_sql('right_ts')} AS click_ts_us",
         "right_event_id AS click_event_id",
     )
 
@@ -199,13 +180,13 @@ def q_asof_backward_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = asof_join_banded(
         left, right, "user_id", "ts", direction="backward", tolerance=3600.0
     )
-    return out.select(
+    return out.selectExpr(
         "user_id",
-        _us("ts").alias("ts_us"),
+        f"{ntz_epoch_sql('ts')} AS ts_us",
         "event_id",
         "value",
-        _us("right_ts").alias("click_ts_us"),
-        F.col("right_event_id").alias("click_event_id"),
+        f"{ntz_epoch_sql('right_ts')} AS click_ts_us",
+        "right_event_id AS click_event_id",
     )
 
 
@@ -229,13 +210,13 @@ def q_asof_backward_banded_nt(spark: SparkSession, sf_dir: str) -> DataFrame:
         left, right, "user_id", "ts", direction="backward",
         tolerance=None, band_seconds=3600.0,
     )
-    return out.select(
+    return out.selectExpr(
         "user_id",
-        _us("ts").alias("ts_us"),
+        f"{ntz_epoch_sql('ts')} AS ts_us",
         "event_id",
         "value",
-        _us("right_ts").alias("click_ts_us"),
-        F.col("right_event_id").alias("click_event_id"),
+        f"{ntz_epoch_sql('right_ts')} AS click_ts_us",
+        "right_event_id AS click_event_id",
     )
 
 
@@ -252,12 +233,12 @@ def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id"
     )
     out = asof_join(left, right, "user_id", "ts", direction="forward")
-    return out.select(
+    return out.selectExpr(
         "user_id",
-        _us("ts").alias("ts_us"),
+        f"{ntz_epoch_sql('ts')} AS ts_us",
         "event_id",
-        _us("right_ts").alias("click_ts_us"),
-        F.col("right_event_id").alias("click_event_id"),
+        f"{ntz_epoch_sql('right_ts')} AS click_ts_us",
+        "right_event_id AS click_event_id",
     )
 
 
@@ -279,7 +260,7 @@ def q_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     return out.selectExpr(
-        f"{_us_sql('window_start')} AS ws_us",
+        f"{ntz_epoch_sql('window_start')} AS ws_us",
         "event_type", "n", "sum_value",
     )
 
@@ -296,7 +277,7 @@ def q_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_alias="n",
     )
     return out.selectExpr(
-        f"{_us_sql('window_start')} AS ws_us",
+        f"{ntz_epoch_sql('window_start')} AS ws_us",
         "event_type", "n",
     )
 
@@ -313,8 +294,8 @@ def q_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.selectExpr(
         "user_id",
-        f"{_us_sql('session_start')} AS ss_us",
-        f"{_us_sql('session_end')} AS se_us",
+        f"{ntz_epoch_sql('session_start')} AS ss_us",
+        f"{ntz_epoch_sql('session_end')} AS se_us",
         "n",
     )
 
@@ -325,7 +306,7 @@ def q_normalize_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from statefulstreamprocessor_spark.functions import normalize_epoch_seconds
 
     ev = _load(spark, sf_dir, "events")
-    base_us = _us("ts")
+    base_us = F.expr(ntz_epoch_sql("ts"))
     return ev.select(
         "event_id",
         F.round(normalize_epoch_seconds(F.floor(base_us / 1_000_000)), 6).alias("from_s"),
@@ -991,9 +972,9 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dups = ev.filter(F.col("event_id") % 10 == 0)
     r = staging.replay_stream(ev.unionByName(dups), "ts")
     deduped = _event_time(r.stream).dropDuplicatesWithinWatermark(["event_id"])
-    return staging.drain_to_parquet(deduped, r.tmp).select(
+    return staging.drain_to_parquet(deduped, r.tmp).selectExpr(
         "event_id",
-        _us(F.col("ts").cast("timestamp_ntz")).alias("ts_us"),
+        f"{ntz_epoch_sql('CAST(ts AS TIMESTAMP_NTZ)')} AS ts_us",
         "event_type",
         "value",
     )
@@ -1024,8 +1005,8 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"), "c_mktsegment")
         .agg(*_count_and_sum("value", "n", "sum_value"))
     )
-    return staging.drain_to_parquet(agg, r.tmp).select(
-        _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
+    return staging.drain_to_parquet(agg, r.tmp).selectExpr(
+        f"{ntz_epoch_sql('CAST(window.start AS TIMESTAMP_NTZ)')} AS ws_us",
         "c_mktsegment",
         "n",
         "sum_value",
@@ -1065,8 +1046,8 @@ def q_stream_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(*_count_and_sum("value", "n", "sum_value"))
     )
     res = staging.drain_to_parquet(agg, r.tmp)
-    return res.filter(F.col("event_type") != "__punctuation__").select(
-        _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
+    return res.filter(F.col("event_type") != "__punctuation__").selectExpr(
+        f"{ntz_epoch_sql('CAST(window.start AS TIMESTAMP_NTZ)')} AS ws_us",
         "event_type",
         "n",
         "sum_value",
@@ -1680,14 +1661,11 @@ def q_compact_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t.append(ev)
     t.compact_latest_by_key(["user_id", "event_type"], "ts")
-    epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
-    return t.read().select(
+    return t.read().selectExpr(
         "user_id",
         "event_type",
-        F.timestamp_diff("MICROSECOND", epoch, F.col("ts")).alias(
-            "last_ts_us"
-        ),
-        F.col("value").alias("last_value"),
+        f"{ntz_epoch_sql('ts')} AS last_ts_us",
+        "value AS last_value",
     )
 
 
@@ -1956,14 +1934,14 @@ def q_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
         left2, side("view"), "user_id", "ts",
         direction="backward", tolerance=86400.0, right_prefix="v_",
     ).filter(F.col("v_ts").isNotNull())
-    return s2.select(
+    return s2.selectExpr(
         "user_id",
-        _us("p_ts").alias("p_ts_us"),
+        f"{ntz_epoch_sql('p_ts')} AS p_ts_us",
         "p_id",
-        _us("ts").alias("c_ts_us"),
+        f"{ntz_epoch_sql('ts')} AS c_ts_us",
         "c_id",
-        _us("v_ts").alias("v_ts_us"),
-        F.col("v_event_id").alias("v_id"),
+        f"{ntz_epoch_sql('v_ts')} AS v_ts_us",
+        "v_event_id AS v_id",
     )
 
 
@@ -2074,14 +2052,14 @@ def q_windowed_latest_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
         tagged, ["user_id"], "ts", "side", "value", "1 hour", "15 minutes"
     )
     return out.selectExpr(
-        f"{_us_sql('window_start')} AS ws_us",
+        f"{ntz_epoch_sql('window_start')} AS ws_us",
         "user_id",
-        f"{_us_sql('r_ts')} AS r_ts_us",
+        f"{ntz_epoch_sql('r_ts')} AS r_ts_us",
         "r_value",
-        f"{_us_sql('s_ts')} AS s_ts_us",
+        f"{ntz_epoch_sql('s_ts')} AS s_ts_us",
         "s_value",
         "round(result, 6) AS result",
-        f"{_us_sql('out_ts')} AS out_ts_us",
+        f"{ntz_epoch_sql('out_ts')} AS out_ts_us",
         "level",
     )
 
@@ -2099,12 +2077,12 @@ def q_replay_pair_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "arrival",
     )
-    return out.select(
+    return out.selectExpr(
         "user_id",
-        _us("r_ts").alias("r_ts_us"),
-        F.col("r_arrival"),
-        _us("s_ts").alias("s_ts_us"),
-        F.col("s_arrival"),
+        f"{ntz_epoch_sql('r_ts')} AS r_ts_us",
+        "r_arrival",
+        f"{ntz_epoch_sql('s_ts')} AS s_ts_us",
+        "s_arrival",
     )
 
 
@@ -2335,12 +2313,12 @@ def q_nn_pair_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see :func:`_run_streaming_nn_join` for the replay plumbing)."""
     sink = _run_streaming_nn_join(spark, sf_dir)
     out = sink.read(spark)
-    return out.select(
+    return out.selectExpr(
         "user_id",
-        _us(F.col("r_ts").cast("timestamp_ntz")).alias("r_ts_us"),
+        f"{ntz_epoch_sql('CAST(r_ts AS TIMESTAMP_NTZ)')} AS r_ts_us",
         "r_event_id",
         "r_value",
-        _us(F.col("s_ts").cast("timestamp_ntz")).alias("s_ts_us"),
+        f"{ntz_epoch_sql('CAST(s_ts AS TIMESTAMP_NTZ)')} AS s_ts_us",
         "s_event_id",
         "s_value",
     )
@@ -2376,8 +2354,8 @@ def q_stream_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = staging.drain_to_parquet(agg, r.tmp)
     # every real window starts at or before the max pair timestamp; the
     # punctuation's window starts ≥ 1 h past it
-    return res.filter(_window_starts_by(r.max_ts)).select(
-        _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
+    return res.filter(_window_starts_by(r.max_ts)).selectExpr(
+        f"{ntz_epoch_sql('CAST(window.start AS TIMESTAMP_NTZ)')} AS ws_us",
         "n_pairs",
         "sum_r_value",
     )
@@ -2430,7 +2408,6 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional file-level copy-on-write merge, epoch ledger."""
     import os
 
-    from statefulstreamprocessor_spark.operators.sessions import _us
     from statefulstreamprocessor_spark.sources import staging
     from statefulstreamprocessor_spark.sources.tables import create_table
     from statefulstreamprocessor_spark.streaming.sink import UpsertTableSink
@@ -2452,9 +2429,9 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = UpsertTableSink(
         table, keys=["user_id"], order_cols=["ts_us", "event_id"]
     )
-    shaped = r.stream.select(
+    shaped = r.stream.selectExpr(
         "user_id",
-        _us(F.col("ts")).alias("ts_us"),
+        f"{ntz_epoch_sql('ts')} AS ts_us",
         "event_id",
         "event_type",
         "value",
@@ -2503,8 +2480,8 @@ def q_tumbling_hourly_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(*_count_and_sum("value", "n", "sum_value"))
     )
     res = staging.drain_to_parquet(agg, r.tmp)
-    return res.filter(F.col("event_type") != "__punctuation__").select(
-        _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
+    return res.filter(F.col("event_type") != "__punctuation__").selectExpr(
+        f"{ntz_epoch_sql('CAST(window.start AS TIMESTAMP_NTZ)')} AS ws_us",
         "event_type",
         "n",
         "sum_value",
@@ -2536,9 +2513,9 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_ttl=90 * 86400.0,
     )
     res = staging.drain_to_parquet(out, r.tmp)
-    return res.filter(F.col("user_id") >= 0).select(
+    return res.filter(F.col("user_id") >= 0).selectExpr(
         "user_id",
-        _us(F.col("ts").cast("timestamp_ntz")).alias("ts_us"),
+        f"{ntz_epoch_sql('CAST(ts AS TIMESTAMP_NTZ)')} AS ts_us",
         "event_id",
         "session_idx",
     )
@@ -2579,13 +2556,13 @@ def q_streaming_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=32, state_ttl=90 * 86400.0,
     )
     res = staging.drain_to_parquet(out, r.tmp)
-    return res.filter(F.col("user_id") >= 0).select(
+    return res.filter(F.col("user_id") >= 0).selectExpr(
         "user_id",
-        _us(F.col("ts").cast("timestamp_ntz")).alias("ts_us"),
+        f"{ntz_epoch_sql('CAST(ts AS TIMESTAMP_NTZ)')} AS ts_us",
         "event_id",
         "value",
-        _us(F.col("right_ts").cast("timestamp_ntz")).alias("click_ts_us"),
-        F.col("right_event_id").alias("click_event_id"),
+        f"{ntz_epoch_sql('CAST(right_ts AS TIMESTAMP_NTZ)')} AS click_ts_us",
+        "right_event_id AS click_event_id",
     )
 
 
@@ -2612,8 +2589,8 @@ def q_sliding_1h_15m_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.filter(
         (F.col("event_type") != "__punctuation__")
         & _window_starts_by(r.max_ts)
-    ).select(
-        _us(F.col("window.start").cast("timestamp_ntz")).alias("ws_us"),
+    ).selectExpr(
+        f"{ntz_epoch_sql('CAST(window.start AS TIMESTAMP_NTZ)')} AS ws_us",
         "event_type",
         "n",
     )
@@ -2634,10 +2611,10 @@ def q_session_30m_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     res = staging.drain_to_parquet(agg, r.tmp)
-    return res.filter(F.col("user_id") >= 0).select(
+    return res.filter(F.col("user_id") >= 0).selectExpr(
         "user_id",
-        _us(F.col("session_window.start").cast("timestamp_ntz")).alias("ss_us"),
-        _us(F.col("session_window.end").cast("timestamp_ntz")).alias("se_us"),
+        f"{ntz_epoch_sql('CAST(session_window.start AS TIMESTAMP_NTZ)')} AS ss_us",
+        f"{ntz_epoch_sql('CAST(session_window.end AS TIMESTAMP_NTZ)')} AS se_us",
         "n",
     )
 

@@ -8,16 +8,19 @@ right partner — join case JR2's last gap record / JS2 respectively
 Implemented with the union + running-``last`` window technique rather than a
 join: one hash exchange on the key, one sort, O(n) window pass — no
 broadcast, no range explosion, skew-tolerant (per-key cost linear).
+
+Tolerances and bands are measured in the timestamp's own basis
+(``functions.timeutils.time_units_sql``): exact integer µs from the NTZ
+epoch for TIMESTAMP_NTZ, double seconds for every other type.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..functions.timeutils import time_units_sql, units_sql
 from .sqlident import null_struct_sql, quote_ident, struct_sql
 
 __all__ = ["asof_join", "asof_join_banded"]
@@ -92,29 +95,6 @@ class _Merged:
         )
 
 
-def _time_units_fn(ts_dtype: str) -> tuple[Callable[[str], str], int]:
-    """(to_units SQL, units_per_second) for tolerance/band math.
-
-    TIMESTAMP_NTZ stays in EXACT integer microseconds via timestamp_diff
-    from the NTZ epoch — session-tz-proof (no DST-shifted cast) AND free
-    of the double rounding that ``µs/1e6`` would introduce: a |dt| of
-    exactly the tolerance must compare equal, never 1 ulp over (the
-    integer-µs discipline the oracles use). Every other type (tz-aware
-    timestamp, numeric seconds) compares in double seconds."""
-    if ts_dtype == "timestamp_ntz":
-        epoch = "CAST('1970-01-01 00:00:00' AS TIMESTAMP_NTZ)"
-        return (lambda c: f"timestampdiff(MICROSECOND, {epoch}, {c})"), 1_000_000
-    return (lambda c: f"CAST({c} AS DOUBLE)"), 1
-
-
-def _units_sql(seconds: float, ups: int) -> str:
-    """``seconds`` as a literal in the units of :func:`_time_units_fn`:
-    exact integer µs, or a double."""
-    if ups != 1:
-        return str(int(round(float(seconds) * ups)))
-    return f"CAST('{float(seconds)!r}' AS DOUBLE)"
-
-
 def _asof_core(
     m: _Merged,
     merged: DataFrame,
@@ -158,12 +138,12 @@ def _asof_core(
         f"true) {w} AS {cand}",
     ).filter("__side = 1")
     if tolerance is not None:
-        to_units, ups = _time_units_fn(m.ts_dtype)
+        to_units, ups = time_units_sql(m.ts_dtype)
         dt = f"abs({to_units(cand + '.t')} - {to_units('__ts')})"
         ann = ann.withColumn(
             cand,
             F.expr(
-                f"CASE WHEN {dt} <= {_units_sql(tolerance, ups)} THEN {cand} END"
+                f"CASE WHEN {dt} <= {units_sql(tolerance, ups)} THEN {cand} END"
             ),
         )
     return ann
@@ -220,10 +200,10 @@ def _asof_banded_carry(
     pick is deterministic — which requires the right payload struct to
     be orderable (atomic columns; same caveat as any struct sort key).
     """
-    to_units, ups = _time_units_fn(m.ts_dtype)
+    to_units, ups = time_units_sql(m.ts_dtype)
     banded = m.df.selectExpr(
         "*",
-        f"CAST(floor({to_units('__ts')} / {_units_sql(width, ups)}) AS BIGINT) "
+        f"CAST(floor({to_units('__ts')} / {units_sql(width, ups)}) AS BIGINT) "
         "AS __bucket",
     )
     ann = _asof_core(m, banded, [*m.keys, "__bucket"], direction, cand="__cand0")
@@ -319,8 +299,8 @@ def asof_join_banded(
         raise ValueError("band_seconds must be >= tolerance")
 
     m = _Merged(df_left, df_right, keys, ts_col)
-    to_units, ups = _time_units_fn(m.ts_dtype)
-    bucket = f"CAST(floor({to_units('__ts')} / {_units_sql(width, ups)}) AS BIGINT)"
+    to_units, ups = time_units_sql(m.ts_dtype)
+    bucket = f"CAST(floor({to_units('__ts')} / {units_sql(width, ups)}) AS BIGINT)"
     neighbor = f"{bucket} {'+' if direction == 'backward' else '-'} 1"
     banded = m.df.selectExpr(
         "*",

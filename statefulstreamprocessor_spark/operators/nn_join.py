@@ -25,11 +25,12 @@ from __future__ import annotations
 
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .asof import _time_units_fn, _units_sql
+from ..functions.timeutils import time_units_sql, units_sql
 from .sqlident import null_struct_sql, quote_ident, struct_sql
 
 __all__ = [
@@ -52,8 +53,8 @@ def _time_units(df: DataFrame, ts_col: str) -> tuple[Callable[[str], str], int]:
     """(to_units SQL, units per second) for ``ts_col``'s Δ-band and bucket
     math: exact µs from the epoch for TIMESTAMP_NTZ — no session-tz cast,
     so a DST change does not stretch or shrink NTZ time — else double
-    seconds (see :func:`.asof._time_units_fn`)."""
-    return _time_units_fn(df.schema[ts_col].dataType.simpleString())
+    seconds (``functions.timeutils.time_units_sql``)."""
+    return time_units_sql(df.schema[ts_col].dataType.simpleString())
 
 
 def _sides(
@@ -64,13 +65,33 @@ def _sides(
     a typed NULL in the other's. The NULL types come from the input
     schemas directly: a ``df.select(struct(...)).schema`` probe costs a
     full analysis round-trip per side on the driver (~0.1 s each on deep
-    inputs), paid at every plan construction."""
+    inputs), paid at every plan construction.
 
-    def tag(df: DataFrame, side: int, other: DataFrame) -> DataFrame:
+    The pair step picks a row's other-side struct from either slot, so the
+    two payload structs need a common type (Spark's CASE coercion: same
+    field count and names, each field type widenable); sides without one
+    raise ValueError here instead of an analysis error on an internal
+    CASE."""
+    r_type, s_type = (
+        StructType([df.schema[c] for c in df.columns if c not in keys])
+        for df in (df_r, df_s)
+    )
+    if r_type.simpleString() != s_type.simpleString():
+        try:
+            df_r.sparkSession.range(0).selectExpr(
+                f"CASE WHEN true THEN {null_struct_sql(r_type)} "
+                f"ELSE {null_struct_sql(s_type)} END"
+            )
+        except AnalysisException:
+            raise ValueError(
+                "nn_join: both sides need the same non-key columns in the same "
+                "order, of types Spark can widen to one; R has "
+                f"{r_type.simpleString()}, S has {s_type.simpleString()}"
+            ) from None
+
+    def tag(df: DataFrame, side: int, other_type: StructType) -> DataFrame:
         own = struct_sql([c for c in df.columns if c not in keys])
-        null = null_struct_sql(
-            StructType([other.schema[c] for c in other.columns if c not in keys])
-        )
+        null = null_struct_sql(other_type)
         return df.selectExpr(
             *map(quote_ident, keys),
             f"{quote_ident(ts_col)} AS __ts",
@@ -79,7 +100,7 @@ def _sides(
             f"{own if side else null} AS __sp",
         )
 
-    return tag(df_r, 0, df_s), tag(df_s, 1, df_r)
+    return tag(df_r, 0, s_type), tag(df_s, 1, r_type)
 
 
 def nn_join(
@@ -93,8 +114,10 @@ def nn_join(
 
     Parameters
     ----------
-    df_r, df_s : inputs; must both contain ``keys`` and ``ts_col``. ``ts_col``
-        may be TimestampType or numeric (epoch seconds).
+    df_r, df_s : inputs; must both contain ``keys`` and ``ts_col``, and the
+        same non-key columns in the same order, of types Spark can widen to
+        one (else ValueError). ``ts_col`` may be TIMESTAMP_NTZ, TimestampType or
+        numeric (epoch seconds).
     keys : equality join key column(s) — the per-series identity (the
         reference's ``thing.quantity`` Kafka key, simulatorToKafka.py:66).
     delta : optional max |t_r - t_s| in seconds (reference's delta_time band,
@@ -103,8 +126,8 @@ def nn_join(
     Records with equal (ts, side) are totally ordered by their payload
     structs, so the pair set does not depend on partitioning or arrival.
 
-    Returns columns: keys + ``r_<col>`` for every non-key column of df_r +
-    ``s_<col>`` for every non-key column of df_s.
+    Returns columns: keys + ``r_<col>`` then ``s_<col>`` for every non-key
+    column (the R and S record of each pair).
     """
     if isinstance(keys, str):
         keys = [keys]
@@ -183,7 +206,7 @@ def _nn_project_out(
         to_units, ups = units
         pairs = pairs.filter(
             f"abs({to_units('__pair.r_t')} - {to_units('__pair.s_t')}) "
-            f"<= {_units_sql(delta, ups)}"
+            f"<= {units_sql(delta, ups)}"
         )
 
     def side_out(slot: str, prefix: str, payload: list[str]) -> list[str]:
@@ -364,7 +387,7 @@ def nn_join_banded(
         raise ValueError("chunk_seconds must be >= delta")
 
     to_units, ups = _time_units(df_r, ts_col)
-    bucket = f"CAST(floor({to_units('__ts')} / {_units_sql(width, ups)}) AS BIGINT)"
+    bucket = f"CAST(floor({to_units('__ts')} / {units_sql(width, ups)}) AS BIGINT)"
     r, s = (
         side.selectExpr(
             "*",
@@ -391,7 +414,7 @@ def nn_join_banded(
         keys,
         own=own,
         in_band=lambda t: (
-            f"abs({to_units('__ts')} - {to_units(t)}) <= {_units_sql(delta, ups)}"
+            f"abs({to_units('__ts')} - {to_units(t)}) <= {units_sql(delta, ups)}"
         ),
         lookahead=f"{other_max} IS NOT NULL AND {other_max} >= __ts",
     )

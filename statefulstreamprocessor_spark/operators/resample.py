@@ -11,12 +11,17 @@ Both are pure Catalyst: a `sequence()` explode builds the grid (one row
 per slot, generated map-side from each series' bounds — no driver work),
 one hash exchange on the series key co-locates grid and observations,
 and O(n) running window frames do the fill. No Python, no self-joins.
+Event times enter as whole seconds from the NTZ epoch
+(``functions.timeutils.ntz_epoch_sql`` at SECOND), session-timezone-proof.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.timeutils import ntz_epoch_sql, units_sql
+from .sqlident import quote_ident
 
 
 def resample_ffill(
@@ -48,13 +53,13 @@ def resample_ffill(
     slot) via a right-grouped join, and the forward fill is a running
     ``last(ignorenulls)`` frame — O(n) per series, no point self-joins.
     """
-    step = F.lit(step_seconds)
-    key, ts, val = F.col(key_col), F.col(ts_col), F.col(value_col)
-    obs = df.select(
-        key.alias("key"),
-        (F.floor(_epoch(ts) / step) * step).cast("bigint").alias("slot_ts"),
-        _epoch(ts).alias("ts_s"),
-        val.alias("v"),
+    step, n = F.lit(step_seconds), int(step_seconds)
+    ts_s = ntz_epoch_sql(quote_ident(ts_col), "SECOND")
+    obs = df.selectExpr(
+        f"{quote_ident(key_col)} AS key",
+        f"CAST(floor({ts_s} / {n}) * {n} AS BIGINT) AS slot_ts",
+        f"{ts_s} AS ts_s",
+        f"{quote_ident(value_col)} AS v",
     )
     # latest observation per slot (by time, ties by value for determinism)
     per_slot = obs.groupBy("key", "slot_ts").agg(
@@ -112,10 +117,10 @@ def series_derivative(
     The first observation of each series has no predecessor and is
     dropped. One exchange on the key, O(n) lag frames."""
     w = Window.partitionBy("key").orderBy("ts_s", "v")
-    obs = df.select(
-        F.col(key_col).alias("key"),
-        _epoch(F.col(ts_col)).alias("ts_s"),
-        F.col(value_col).alias("v"),
+    obs = df.selectExpr(
+        f"{quote_ident(key_col)} AS key",
+        f"{ntz_epoch_sql(quote_ident(ts_col), 'SECOND')} AS ts_s",
+        f"{quote_ident(value_col)} AS v",
     )
     out = obs.select(
         "key",
@@ -157,13 +162,12 @@ def series_derivative_banded(
     width = float(band_seconds)
     if width <= 0:
         raise ValueError("band_seconds must be positive")
-    obs = df.select(
-        F.col(key_col).alias("key"),
-        _epoch(F.col(ts_col)).alias("ts_s"),
-        F.col(value_col).alias("v"),
-        F.floor(_epoch(F.col(ts_col)) / F.lit(width)).cast("long").alias(
-            "band"
-        ),
+    ts_s = ntz_epoch_sql(quote_ident(ts_col), "SECOND")
+    obs = df.selectExpr(
+        f"{quote_ident(key_col)} AS key",
+        f"{ts_s} AS ts_s",
+        f"{quote_ident(value_col)} AS v",
+        f"CAST(floor({ts_s} / {units_sql(width, 1)}) AS BIGINT) AS band",
     )
     wb = Window.partitionBy("key", "band").orderBy("ts_s", "v")
     intra = obs.select(
@@ -201,15 +205,3 @@ def series_derivative_banded(
             + F.lit(0.0)
         ).alias("dv_dt"),
     )
-
-
-def _epoch(ts) -> F.Column:
-    """TIMESTAMP_NTZ → epoch seconds (bigint), session-timezone-proof
-    (mirrors __spark_entry__._us at second granularity)."""
-    return (
-        F.timestamp_diff(
-            "SECOND",
-            F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"),
-            ts,
-        )
-    ).cast("bigint")

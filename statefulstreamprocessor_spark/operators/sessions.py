@@ -27,24 +27,20 @@ the band-level lag, not by the width, so the identity
 ``sessionize_banded == sessionize`` holds for every width
 (equality-tested on randomized hot-key fixtures).
 
-Timestamps compare in MICROSECONDS via ``timestamp_diff`` — exact and
-session-timezone-proof (never a cast through the session zone).
+Timestamps compare in exact integer MICROSECONDS from the NTZ epoch
+(``functions.timeutils.ntz_epoch_sql``) — session-timezone-proof, never a
+cast through the session zone.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.timeutils import ntz_epoch_sql
+from .sqlident import quote_ident
+
 __all__ = ["sessionize", "sessionize_banded"]
-
-_EPOCH = "1970-01-01 00:00:00"
-
-
-def _us(c) -> Column:
-    return F.timestamp_diff(
-        "MICROSECOND", F.lit(_EPOCH).cast("timestamp_ntz"), c
-    )
 
 
 def sessionize(
@@ -54,10 +50,10 @@ def sessionize(
     than ``gap_seconds``. Total order inside a key: (ts, id). Output:
     ``key`` | ``ts_us`` | ``id`` | ``session_idx`` (0-based)."""
     gap_us = int(gap_seconds * 1_000_000)
-    ev = df.select(
-        F.col(key_col).alias("key"),
-        _us(F.col(ts_col)).alias("ts_us"),
-        F.col(id_col).alias("id"),
+    ev = df.selectExpr(
+        f"{quote_ident(key_col)} AS key",
+        f"{ntz_epoch_sql(quote_ident(ts_col))} AS ts_us",
+        f"{quote_ident(id_col)} AS id",
     )
     wo = Window.partitionBy("key").orderBy("ts_us", "id")
     wc = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -85,11 +81,12 @@ def sessionize_banded(
     width_us = int(width * 1_000_000)
     if width_us <= 0:
         raise ValueError("band_seconds must be positive")
-    ev = df.select(
-        F.col(key_col).alias("key"),
-        _us(F.col(ts_col)).alias("ts_us"),
-        F.col(id_col).alias("id"),
-        F.floor(_us(F.col(ts_col)) / F.lit(width_us)).alias("band"),
+    ts_us = ntz_epoch_sql(quote_ident(ts_col))
+    ev = df.selectExpr(
+        f"{quote_ident(key_col)} AS key",
+        f"{ts_us} AS ts_us",
+        f"{quote_ident(id_col)} AS id",
+        f"floor({ts_us} / {width_us}) AS band",
     )
 
     # 1. intra-band flags (band-sized partitions — the hot key shards)

@@ -28,13 +28,10 @@ from .sqlident import quote_ident
 
 __all__ = [
     "cosine_sim_col",
-    "cosine_sim_fixed_col",
-    "dot_fixed_col",
     "cosine_topk",
     "cosine_topk_lsh",
     "cosine_topk_ivf",
     "cosine_near_dup_pairs",
-    "hyperplane_signature_col",
     "train_ivf_centroids",
 ]
 
@@ -63,40 +60,23 @@ def cosine_sim_col(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def dot_fixed_col(a: Column, b: Column, dim: int) -> Column:
-    """Dot product UNROLLED for a known dimension — a plain left-associated
-    expression tree with identical summation order to the higher-order
-    ``aggregate``/``zip_with`` fold, so results are bit-equal to it.
+def _dot_fixed_sql(a: str, b: str, dim: int) -> str:
+    """Dot product UNROLLED for a known dimension, as SQL over SQL column
+    expressions (quote bare names with :func:`quote_ident`): a plain
+    left-associated sum (SQL ``+`` is left-associative) in index order —
+    the summation order of the ``aggregate``/``zip_with`` fold in
+    :func:`cosine_sim_col`, so results are bit-equal to it. Parsed
+    JVM-side in ONE RPC; a Column-built tree costs ~6 py4j round-trips per
+    dimension — ~0.4 s of driver time per cosine at dim 64, paid on every
+    plan build (optimization round 7, guide §1.2 step 2).
 
     Performance note (re-measured in optimization round 7 on Spark
     4.1): at dim 64 the unrolled tree is NOT faster than the fold on a
     hot path — the ~450-node generated method exceeds the JIT's method
     budget and measured ~1.8× SLOWER than the interpreted fold over 8M
-    pairs. Both forms are only appropriate for small candidate sets
-    (the LSH/IVF/near-dup rescores); bulk scoring lives in
-    ``cosine_topk``'s vectorized fold-order numpy pass."""
-    out = a.getItem(0).cast("double") * b.getItem(0).cast("double")
-    for i in range(1, dim):
-        out = out + a.getItem(i).cast("double") * b.getItem(i).cast("double")
-    return out
-
-
-def cosine_sim_fixed_col(a: Column, b: Column, dim: int) -> Column:
-    """Codegen'd cosine similarity for a known dimension (see dot_fixed_col);
-    bit-equal to :func:`cosine_sim_col`."""
-    return dot_fixed_col(a, b, dim) / (
-        F.sqrt(dot_fixed_col(a, a, dim)) * F.sqrt(dot_fixed_col(b, b, dim))
-    )
-
-
-def _dot_fixed_sql(a: str, b: str, dim: int) -> str:
-    """SQL-string form of :func:`dot_fixed_col` over SQL column expressions
-    (quote bare names with :func:`quote_ident`) —
-    the identical left-associated expression (SQL ``+`` is
-    left-associative, ``x[i]`` is ``getItem(i)``), parsed JVM-side in ONE
-    RPC. The per-Column construction costs ~6 py4j round-trips per
-    dimension — ~0.4 s of driver time per cosine at dim 64, paid on every
-    plan build (optimization round 7, guide §1.2 step 2)."""
+    pairs. It is only appropriate for small candidate sets (the
+    LSH/IVF/near-dup rescores); bulk scoring lives in ``cosine_topk``'s
+    vectorized fold-order numpy pass."""
     return " + ".join(
         f"(CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE))"
         for i in range(dim)
@@ -104,7 +84,8 @@ def _dot_fixed_sql(a: str, b: str, dim: int) -> str:
 
 
 def _cosine_sim_fixed_sql(a: str, b: str, dim: int) -> str:
-    """SQL-string form of :func:`cosine_sim_fixed_col` (bit-equal)."""
+    """Cosine similarity for a known dimension over :func:`_dot_fixed_sql`;
+    bit-equal to :func:`cosine_sim_col`."""
     return (
         f"({_dot_fixed_sql(a, b, dim)}) / (SQRT({_dot_fixed_sql(a, a, dim)})"
         f" * SQRT({_dot_fixed_sql(b, b, dim)}))"
@@ -299,42 +280,13 @@ def cosine_topk(
     )
 
 
-def hyperplane_signature_col(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-pattern LSH signature: bit i = (vec · plane_i) >= 0.
-
-    Pure-Catalyst reference form (useful where Python workers are
-    unavailable); the hot paths use :func:`_matmul_signatures_udf` instead —
-    the per-plane higher-order folds here run interpreted
-    (CodegenFallback), ~100× slower at many hyperplanes."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(float(v)) for v in planes[i]]),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            >= 0,
-            F.lit(1 << i),
-        ).otherwise(F.lit(0))
-        for i in range(len(planes))
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
-
-
 def _matmul_signatures_udf(n_planes: int, n_tables: int, dim: int, seed: int):
     """All n_tables × n_planes random hyperplanes as ONE (dim, tables·planes)
     matrix: per-row LSH signatures become a single vectorized numpy matmul
     in an Arrow-batched pandas UDF returning array<long> of bucket values.
-    (The pure-Catalyst fold form — hyperplane_signature_col — evaluates
-    every hyperplane as an interpreted higher-order fold per row: measured
-    ~15 s serial on 5.5k×64 at 160 hyperplanes vs milliseconds here.)"""
+    (A pure-Catalyst form — one interpreted higher-order fold per
+    hyperplane per row — measured ~15 s serial on 5.5k×64 at 160
+    hyperplanes vs milliseconds here.)"""
     rng = np.random.Generator(np.random.PCG64(seed))
     tables = [rng.standard_normal((n_planes, dim)) for _ in range(n_tables)]
     planes_all = np.concatenate(tables, axis=0).T.astype(np.float64)

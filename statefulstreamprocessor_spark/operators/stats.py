@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.timeutils import ntz_epoch_sql
+from .sqlident import quote_ident
+
 
 def group_trend(
     df: DataFrame, key_col: str, ts_col: str, value_col: str
@@ -30,12 +33,10 @@ def group_trend(
     Output: ``key`` | ``n`` | ``slope`` (units/second, 6 dp, NULL-free —
     groups with a degenerate x variance are dropped).
     """
-    from statefulstreamprocessor_spark.operators.resample import _epoch
-
-    obs = df.select(
-        F.col(key_col).alias("key"),
-        _epoch(F.col(ts_col)).alias("x0"),
-        F.round(F.col(value_col) * 1e6).cast("bigint").alias("yi"),
+    obs = df.selectExpr(
+        f"{quote_ident(key_col)} AS key",
+        f"{ntz_epoch_sql(quote_ident(ts_col), 'SECOND')} AS x0",
+        f"CAST(round({quote_ident(value_col)} * 1e6) AS BIGINT) AS yi",
     )
     w = Window.partitionBy("key")
     centered = obs.select(
@@ -221,19 +222,17 @@ def rolling_zscore_banded(
     width_us = int(float(band_seconds) * 1_000_000)
     if width_us <= 0:
         raise ValueError("band_seconds must be positive")
-    from .sessions import _us
-
     d = "decimal(38,0)"
     w = int(window_rows)
-    yi = F.round(F.col(value_col) * 1e6).cast("bigint")
-    base = df.select(
-        F.col(key_col).alias("key"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).alias("id"),
-        F.col(value_col).alias("value"),
-        yi.alias("__y"),
-        _us(F.col(ts_col)).alias("__tsu"),
-        F.floor(_us(F.col(ts_col)) / F.lit(width_us)).alias("__band"),
+    q, tsu = quote_ident, ntz_epoch_sql(quote_ident(ts_col))
+    base = df.selectExpr(
+        f"{q(key_col)} AS key",
+        f"{q(ts_col)} AS ts",
+        f"{q(id_col)} AS id",
+        f"{q(value_col)} AS value",
+        f"CAST(round({q(value_col)} * 1e6) AS BIGINT) AS __y",
+        f"{tsu} AS __tsu",
+        f"floor({tsu} / {width_us}) AS __band",
     )
     yd = F.col("__y").cast(d)
     wloc = Window.partitionBy("key", "__band").orderBy("__tsu", "id")

@@ -521,17 +521,16 @@ def join_group_fn(
         new = [p for p in pdf_iter if len(p)]
         if new:
             np_new = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
+            ts_new = np_new[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
             # late-row discipline: arbitrary stateful ops must drop rows at
             # or below the watermark themselves (Spark only does this for
             # built-in aggregations); decisions already finalized assumed
             # no further arrivals in that region
             if wm_us > 0:
-                ts_new = (
-                    np_new[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
-                )
                 keep_new = ts_new > wm_us
                 if not keep_new.all():
                     np_new = np_new.loc[keep_new].reset_index(drop=True)
+                    ts_new = ts_new[keep_new]
             if len(np_new) == 0:
                 new = []
         if new:
@@ -546,10 +545,7 @@ def join_group_fn(
                 )
             add = pd.DataFrame(
                 {
-                    "__ts": np_new[ts_col]
-                    .to_numpy()
-                    .astype("datetime64[us]")
-                    .astype(np.int64),
+                    "__ts": ts_new,
                     "__side": np.where(side_vals == "r", 0, 1).astype(np.int8),
                     "__alpha": np.zeros(len(np_new), dtype=bool),
                     "__beta": np.zeros(len(np_new), dtype=bool),

@@ -150,6 +150,33 @@ def test_nn_join_ntz_band_measures_wall_time(spark, tz):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
+def test_nn_join_rejects_sides_with_other_columns(spark):
+    """A contract change: sides whose non-key columns differ (the pair step
+    picks a row's other-side struct from either side's slot) raise a
+    ValueError naming both sides' columns at build time, instead of an
+    analysis error on an internal CASE. Types Spark widens to one still
+    join."""
+    import datetime as dt
+
+    from statefulstreamprocessor_spark.operators.nn_join import nn_join_banded
+
+    t = dt.datetime(2024, 1, 1)
+    r = spark.createDataFrame([(1, t, 1.0)], "k long, ts timestamp_ntz, a double")
+    s = spark.createDataFrame([(1, t, "x")], "k long, ts timestamp_ntz, b string")
+    for build in (
+        lambda: nn_join(r, s, "k", "ts"),
+        lambda: nn_join_banded(r, s, "k", "ts", delta=60.0),
+    ):
+        with pytest.raises(ValueError) as err:
+            build()
+        assert "R has struct<ts:timestamp_ntz,a:double>" in str(err.value)
+        assert "S has struct<ts:timestamp_ntz,b:string>" in str(err.value)
+    s_float = spark.createDataFrame(
+        [(1, t + dt.timedelta(seconds=5), 2.0)], "k long, ts timestamp_ntz, a float"
+    )
+    assert nn_join(r, s_float, "k", "ts").count() == 1
+
+
 def test_asof_equal_ts_semantics(spark):
     """Documented inclusive semantics at equal timestamps: backward picks
     the equal-ts right row (latest right.ts <= left.ts), forward picks it

@@ -480,16 +480,27 @@ def test_minhash_pair_explode_matches_nested_transform(messy_docs):
     assert len(got) > 0  # near-dup clusters must collide
 
 
-def test_dot_fixed_sql_is_bit_equal_to_column_form(spark):
-    """Round-7: the unrolled dot/cosine now parse as ONE SQL expression;
-    the doubles must be bit-identical to the Column-built tree (same
-    left-associated summation)."""
+def test_dot_fixed_sql_is_bit_equal_to_python_fold(spark):
+    """Round-7: the unrolled dot/cosine parse as ONE SQL expression; the
+    doubles must be bit-identical to an independent left fold in index
+    order (IEEE doubles in Python and on the JVM), which pins the
+    summation order."""
+    import math
+    import struct
+
     from statefulstreamprocessor_spark.operators.similarity import (
         _cosine_sim_fixed_sql,
         _dot_fixed_sql,
-        cosine_sim_fixed_col,
-        dot_fixed_col,
     )
+
+    def fold_dot(a, b):
+        acc = a[0] * b[0]
+        for i in range(1, len(a)):
+            acc = acc + a[i] * b[i]
+        return acc
+
+    def bits(x):
+        return struct.pack("<d", x)
 
     rng = random.Random(11)
     dim = 64
@@ -499,24 +510,21 @@ def test_dot_fixed_sql_is_bit_equal_to_column_form(spark):
         for i in range(200)
     ]
     df = spark.createDataFrame(
-        rows, f"id long, a array<double>, b array<double>"
+        rows, "id long, a array<double>, b array<double>"
     )
-    out = df.select(
+    out = df.selectExpr(
         "id",
-        F.expr(_dot_fixed_sql("a", "b", dim)).alias("dot_sql"),
-        dot_fixed_col(F.col("a"), F.col("b"), dim).alias("dot_col"),
-        F.expr(_cosine_sim_fixed_sql("a", "b", dim)).alias("cos_sql"),
-        cosine_sim_fixed_col(F.col("a"), F.col("b"), dim).alias("cos_col"),
+        f"{_dot_fixed_sql('a', 'b', dim)} AS dot_sql",
+        f"{_cosine_sim_fixed_sql('a', 'b', dim)} AS cos_sql",
     ).collect()
-    import struct as _struct
-
+    assert len(out) == len(rows)
     for r in out:
-        assert _struct.pack("<d", r["dot_sql"]) == _struct.pack(
-            "<d", r["dot_col"]
+        _, a, b = rows[r["id"]]
+        assert bits(r["dot_sql"]) == bits(fold_dot(a, b))
+        cos = fold_dot(a, b) / (
+            math.sqrt(fold_dot(a, a)) * math.sqrt(fold_dot(b, b))
         )
-        assert _struct.pack("<d", r["cos_sql"]) == _struct.pack(
-            "<d", r["cos_col"]
-        )
+        assert bits(r["cos_sql"]) == bits(cos)
 
 
 def test_hashed_char_gram_rescore_matches_string_reference(spark, request):

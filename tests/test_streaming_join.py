@@ -1559,3 +1559,60 @@ def test_streaming_minhash_bucket_saturation_matches_batch(spark, tmp_path):
         .collect()
     }
     assert got == {(0, 1)}
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_streaming_join_equals_batch_across_dst(spark, tz):
+    """One series straddling the 2024-03-10 02:00 spring-forward change (in
+    New York), with only local times that exist there: a pair 30 min apart
+    before it, 01:30 / 03:10 across it (6000 s of NTZ time, 40 min of real
+    time in New York), and a pair 30 min apart after it. The streaming
+    join's Δ band must measure the same time basis as the batch nn_join's
+    in either session time zone."""
+    import datetime as dt
+
+    from statefulstreamprocessor_spark.sources import staging
+    from statefulstreamprocessor_spark.streaming.stateful_join import (
+        streaming_nn_join,
+    )
+
+    at = [(0, 30, "r"), (1, 0, "s"), (1, 30, "r"), (3, 10, "s"),
+          (3, 40, "r"), (4, 10, "s")]
+    ev = spark.createDataFrame(
+        [(1, dt.datetime(2024, 3, 10, h, m), side, i)
+         for i, (h, m, side) in enumerate(at)],
+        "k long, ts timestamp_ntz, side string, v long",
+    )
+    r = ev.filter("side = 'r'").drop("side")
+    s = ev.filter("side = 's'").drop("side")
+    cross = (dt.datetime(2024, 3, 10, 1, 30), dt.datetime(2024, 3, 10, 3, 10))
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        for delta in (3600.0, 6000.0):
+            batch = {
+                (x["r_ts"], x["s_ts"], x["r_v"], x["s_v"])
+                for x in nn_join(r, s, "k", "ts", delta=delta).collect()
+            }
+            rep = staging.replay_stream(
+                ev, "ts", punctuation={"k": -1, "side": "r", "v": -1},
+                tiebreak_cols=["side"],
+            )
+            joined = streaming_nn_join(
+                rep.stream.withColumn("ts", F.col("ts").cast("timestamp"))
+                .withWatermark("ts", "0 seconds"),
+                ["k"], "ts", "side", delta=delta, n_buckets=2,
+            )
+            out = staging.drain_to_parquet(joined, rep.tmp)
+            streamed = {
+                (x["r_ts"], x["s_ts"], x["r_v"], x["s_v"])
+                for x in out.filter("k >= 0").selectExpr(
+                    "CAST(r_ts AS TIMESTAMP_NTZ) AS r_ts",
+                    "CAST(s_ts AS TIMESTAMP_NTZ) AS s_ts", "r_v", "s_v",
+                ).collect()
+            }
+            assert streamed == batch, (delta, streamed, batch)
+            # the cross-change pair is 6000 s apart: inside only the wider band
+            assert (cross in {p[:2] for p in batch}) == (delta == 6000.0), batch
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
