@@ -44,10 +44,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .sealed import Sealed, resolve, sealed_stream, upsert
+from .sealed import Sealed, resolve, sealed_stream, side_codes, upsert
 
 __all__ = ["streaming_asof_enrich"]
 
@@ -181,15 +180,6 @@ def streaming_asof_enrich(
             for name, c in zip(right_out[1:], right_cols)
         ]
     )
-    side = F.col(side_col)
-    with_side = df.withColumn(
-        "__side",
-        F.when(side == "r", F.lit(0).cast("tinyint"))
-        .when(side == "l", F.lit(1).cast("tinyint"))
-        .otherwise(F.raise_error(F.concat(
-            F.lit(f"streaming_asof_enrich: {side_col!r} must be 'l'/'r'; got "),
-            F.coalesce(side.cast("string"), F.lit("NULL")),
-        ))),
-    )
+    with_side = side_codes(df, side_col, ("r", "l"), "streaming_asof_enrich")
     spec = asof_spec(keys, ts_col, list(left_cols), list(right_cols), right_prefix, ttl_us)
     return sealed_stream(with_side, spec, n_buckets, out_schema)

@@ -1,15 +1,21 @@
-"""Sealed-prefix skeleton shared by the custom stateful streaming operators.
+"""One stateful contract for the five custom streaming operators.
 
 The reference's LocalStreamBuffer discipline — buffer records, decide
 what is final, strip what can never matter again (``local_stream_buffer
-.py:317-350``) — written once. :func:`~.sessionize.streaming_sessionize`,
-:func:`~.quota.streaming_quota`, :func:`~.zscore.streaming_rolling_zscore`
-and :func:`~.asof.streaming_asof_enrich` each supply only a :class:`Sealed`
-spec: their buffered columns, their sort tie columns, a pure pandas/numpy
-``step(sealed, summ, wm_us) -> (out, summ)`` and an optional
-``expires_at(summ)``. :func:`~.stateful_join.streaming_nn_join` keeps its
-own decision kernel and late boundary but shares the codec, the
-``n_buckets``/``state_ttl`` resolution, the expiry timeout and the wiring.
+.py:317-350``) — written once: :func:`group_fn` is the package's only
+event-time ``applyInPandasWithState`` function. An operator supplies its
+keys, event time and buffered columns and one pure pandas/numpy
+``advance(buf, summ, wm_us) -> (out, buf, summ, refire_us)``:
+
+* :func:`~.sessionize.streaming_sessionize`, :func:`~.quota.streaming_quota`,
+  :func:`~.zscore.streaming_rolling_zscore` and
+  :func:`~.asof.streaming_asof_enrich` are :class:`Sealed` specs: their
+  sort tie columns, a ``step(sealed, summ, wm_us) -> (out, summ)`` and an
+  optional ``expires_at(summ)``; :meth:`Sealed.advance` seals, steps and
+  prunes;
+* :func:`~.stateful_join.streaming_nn_join` is an :class:`Operator` whose
+  ``advance`` runs the closure decision kernel and the ``state_ttl`` cut
+  (``summ`` holds its pending pairs).
 
 Contract, per trigger and state group (:func:`group_fn`):
 
@@ -18,31 +24,45 @@ Contract, per trigger and state group (:func:`group_fn`):
   watermark alone is converted (:func:`.timebase.watermark_to_naive_us`)
   and all row math stays in integer naive microseconds (``__ts``);
 * **late boundary** — arriving rows strictly below the watermark are
-  dropped, Spark's own late-event boundary; a row AT the watermark is kept;
-* **seal boundary** — buffered rows strictly below the watermark are final
-  (no earlier row can still arrive) and reach ``step`` in (keys, ``__ts``,
-  ties) order, NULL ties first as in Spark's ascending sort. Sealing is
-  monotone: every newly sealed row of a key is at or above every row
-  sealed before, so a per-key summary carries all the history ``step``
-  needs;
-* **pruning** — summary rows with ``expires_at(summ) <= wm`` are dropped;
+  dropped, Spark's own late-event boundary; a row AT the watermark is
+  kept, except by the join (``drop_at_wm``), whose decisions already
+  treat the at-or-below region as final;
+* **intake** — new rows are appended to the buffer; a column whose dtype
+  differs between buffer and batch (a bigint carrying NULLs arrives as
+  float64) is merged in object space, so bigints ≥ 2⁵³ stay exact;
+* **seal boundary** (:class:`Sealed`) — buffered rows strictly below the
+  watermark are final (no earlier row can still arrive) and reach
+  ``step`` in (keys, ``__ts``, ties) order, NULL ties first as in Spark's
+  ascending sort. Sealing is monotone: every newly sealed row of a key is
+  at or above every row sealed before, so a per-key summary carries all
+  the history ``step`` needs; summary rows with ``expires_at(summ) <= wm``
+  are pruned;
 * **state** — one ``(buf, summ)`` pair of Arrow IPC stream bytes per
-  group (``b''`` = no frame). A group holding neither calls
-  ``state.remove()``, so idle groups keep no state rows. Each frame's
-  schema metadata records the ``n_buckets`` it was written under;
-* **timeouts** (event time) — a group with buffered rows re-fires at
-  ``wm + 1`` ms; one holding only summaries re-fires at the earliest
-  expiry, converted back to epoch with the offset seen at the current
-  watermark (off by at most a DST shift across a transition, which only
-  moves the re-fire — pruning re-checks against the then-current
-  watermark);
+  group (``b''`` = no frame), decoded by column name. A group holding
+  neither calls ``state.remove()``, so idle groups keep no state rows.
+  Each frame's schema metadata records the ``n_buckets`` it was written
+  under;
+* **timeouts** (event time) — ``refire_us`` is the naive instant at which
+  the group must run again without data (None: only data wakes it),
+  converted back to epoch with the offset seen at the current watermark
+  (off by at most a DST shift across a transition, which only moves the
+  re-fire — pruning re-checks against the then-current watermark).
+  ``wm_us + 1`` re-fires on the next watermark advance: a sealed group
+  with buffered rows, a join group with work that waits on the
+  watermark. A sealed group holding only summaries re-fires at the
+  earliest expiry, a join group under ``state_ttl`` at its earliest
+  eviction. Join work blocked on missing data (an absent partner or
+  forward proof) asks for no re-fire: the arrival of that data runs the
+  group;
 * **groups** — ``pmod(xxhash64(keys), n_buckets)`` hash buckets, so one
   Arrow + state-store round trip per trigger covers many keys. Only the
-  keys, the event time and the buffered columns are shipped to Python.
-  ``n_buckets`` is part of the checkpoint: resumed under another value
-  (its default follows ``defaultParallelism``), keys would hash to other
-  state groups and silently restart, so a restored group written under
-  another value raises instead. State written without the record loads.
+  keys, the event time and the buffered columns are shipped to Python;
+  a side column ships as a tinyint code built in Spark
+  (:func:`side_codes`). ``n_buckets`` is part of the checkpoint: resumed
+  under another value (its default follows ``defaultParallelism``), keys
+  would hash to other state groups and silently restart, so a restored
+  group written under another value raises instead. State written
+  without the record loads.
 """
 
 from __future__ import annotations
@@ -60,8 +80,9 @@ from pyspark.sql.types import BinaryType, StructField, StructType
 from .timebase import session_tz, watermark_to_naive_us
 
 __all__ = [
-    "Sealed", "arm_expiry", "bucketed_apply", "de_frame", "group_fn", "load_state",
-    "resolve", "sealed_stream", "ser_frame", "store_state", "upsert",
+    "Operator", "Sealed", "arm_expiry", "bucketed_apply", "de_frame", "group_fn",
+    "load_state", "resolve", "sealed_stream", "ser_frame", "side_codes", "store_state",
+    "upsert",
 ]
 
 STATE_SCHEMA = StructType(
@@ -201,6 +222,20 @@ def bucketed_apply(
     )
 
 
+class Operator(NamedTuple):
+    """What :func:`group_fn` drives (see the module docstring): rows are
+    buffered as ``__ts`` + ``keys`` + ``cols``; ``advance`` maps the
+    buffer, the summary and the watermark to (output frame in output
+    column order or None, buffer, summary, ``refire_us`` or None);
+    ``drop_at_wm`` drops an arriving row AT the watermark too."""
+
+    keys: list[str]
+    ts_col: str
+    cols: list[str]
+    advance: Callable[[pd.DataFrame | None, pd.DataFrame | None, int], tuple]
+    drop_at_wm: bool = False
+
+
 class Sealed(NamedTuple):
     """What a sealed-prefix operator supplies (see the module docstring).
 
@@ -216,6 +251,33 @@ class Sealed(NamedTuple):
     ties: list[str]
     step: Callable[[pd.DataFrame, pd.DataFrame | None, int], tuple]
     expires_at: Callable[[pd.DataFrame], np.ndarray] | None = None
+    drop_at_wm = False  # a class constant, not a field: a row AT the watermark is kept
+
+    def advance(self, buf: pd.DataFrame | None, summ: pd.DataFrame | None, wm_us: int):
+        """Seal → ``step`` → prune: :attr:`Operator.advance` of a sealed spec."""
+        out = None
+        if not empty(buf):
+            sealed_mask = buf["__ts"].to_numpy() < wm_us
+            if sealed_mask.any():
+                sealed = (
+                    buf.loc[sealed_mask]
+                    .sort_values(["__ts", *self.ties], kind="mergesort", na_position="first")
+                    .sort_values(self.keys, kind="mergesort")
+                    .reset_index(drop=True)
+                )
+                buf = buf.loc[~sealed_mask].reset_index(drop=True)
+                out, summ = self.step(sealed, summ, wm_us)
+
+        expiry = None
+        if self.expires_at is not None and not empty(summ):
+            expiry = self.expires_at(summ)
+            if wm_us > 0 and (expiry <= wm_us).any():
+                summ = summ.loc[expiry > wm_us].reset_index(drop=True)
+                expiry = expiry[expiry > wm_us]
+        if not empty(buf):
+            # unsealed rows wait on the watermark, not on data
+            return out, buf, summ, wm_us + 1
+        return out, buf, summ, None if empty(summ) or expiry is None else expiry.min()
 
 
 def _append(buf: pd.DataFrame | None, add: pd.DataFrame) -> pd.DataFrame:
@@ -231,11 +293,11 @@ def _append(buf: pd.DataFrame | None, add: pd.DataFrame) -> pd.DataFrame:
     return pd.concat([buf, add], ignore_index=True)
 
 
-def group_fn(spec: Sealed, tz_name: str, n_buckets: int) -> Callable:
+def group_fn(spec: Operator | Sealed, tz_name: str, n_buckets: int) -> Callable:
     """The ``applyInPandasWithState`` function for ``spec`` over
     ``n_buckets`` state groups (pure python: tests drive it with
     hand-built ``GroupState`` objects)."""
-    keys, sort_cols = spec.keys, ["__ts", *spec.ties]
+    keep_cols = [*spec.keys, *spec.cols]
 
     def fn(
         key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
@@ -246,50 +308,46 @@ def group_fn(spec: Sealed, tz_name: str, n_buckets: int) -> Callable:
         if new:
             p = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
             ts = p[spec.ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
-            add = pd.DataFrame({"__ts": ts, **{c: p[c].to_numpy() for c in [*keys, *spec.cols]}})
+            add = pd.DataFrame({"__ts": ts, **{c: p[c].to_numpy() for c in keep_cols}})
             if wm_us > 0:
-                add = add.loc[ts >= wm_us].reset_index(drop=True)
+                add = add.loc[ts > wm_us if spec.drop_at_wm else ts >= wm_us]
+                add = add.reset_index(drop=True)
             if len(add):
                 buf = _append(buf, add)
 
-        out = None
-        if not empty(buf):
-            sealed_mask = buf["__ts"].to_numpy() < wm_us
-            if sealed_mask.any():
-                sealed = (
-                    buf.loc[sealed_mask]
-                    .sort_values(sort_cols, kind="mergesort", na_position="first")
-                    .sort_values(keys, kind="mergesort")
-                    .reset_index(drop=True)
-                )
-                buf = buf.loc[~sealed_mask].reset_index(drop=True)
-                out, summ = spec.step(sealed, summ, wm_us)
-
-        expiry = None
-        if spec.expires_at is not None and not empty(summ):
-            expiry = spec.expires_at(summ)
-            if wm_us > 0 and (expiry <= wm_us).any():
-                summ = summ.loc[expiry > wm_us].reset_index(drop=True)
-                expiry = expiry[expiry > wm_us]
-
+        out, buf, summ, refire_us = spec.advance(buf, summ, wm_us)
         if empty(buf) and empty(summ):
             if state.exists:
                 state.remove()
         else:
             store_state(state, buf, summ, n_buckets)
-            if not empty(buf):
-                # unsealed rows wait on the watermark, not on data
-                state.setTimeoutTimestamp(max(int(state.getCurrentWatermarkMs()) + 1, 1))
-            elif expiry is not None:
-                arm_expiry(state, wm_us, expiry.min())
+            if refire_us is not None:
+                arm_expiry(state, wm_us, refire_us)
         if not empty(out):
             yield out
 
     return fn
 
 
+def side_codes(df: DataFrame, side_col: str, codes: tuple[str, str], op: str) -> DataFrame:
+    """``df`` with a tinyint ``__side``: 0 where ``side_col`` is
+    ``codes[0]``, 1 where it is ``codes[1]``. Any other value, NULL
+    included, fails the query on that row, before the late boundary."""
+    side = F.col(side_col)
+    allowed = "/".join(repr(c) for c in sorted(codes))
+    return df.withColumn(
+        "__side",
+        F.when(side == codes[0], F.lit(0).cast("tinyint"))
+        .when(side == codes[1], F.lit(1).cast("tinyint"))
+        .otherwise(F.raise_error(F.concat(
+            F.lit(f"{op}: {side_col!r} must be {allowed}; got "),
+            F.coalesce(side.cast("string"), F.lit("NULL")),
+        ))),
+    )
+
+
 def sealed_stream(
-    df: DataFrame, spec: Sealed, n_buckets: int, out_schema: StructType
+    df: DataFrame, spec: Operator | Sealed, n_buckets: int, out_schema: StructType
 ) -> DataFrame:
     """Run ``spec`` over the streaming ``df`` (append mode)."""
     fn = group_fn(spec, session_tz(df.sparkSession), n_buckets)

@@ -38,18 +38,15 @@ event time ≤ watermark — every lookup a future decision needs survives.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .sealed import arm_expiry, bucketed_apply, empty, load_state, resolve, store_state
-from .timebase import session_tz, watermark_to_naive_us
+from .sealed import Operator, empty, resolve, sealed_stream, side_codes
 
-__all__ = ["join_group_fn", "streaming_nn_join"]
+__all__ = ["join_spec", "streaming_nn_join"]
 
 _NEG = np.int64(np.iinfo(np.int64).min)
 
@@ -410,6 +407,53 @@ def _decide(
     return buf, pend, out, wm_blocked
 
 
+def _projection(ts_col: str, payload_cols: list[str]) -> list[tuple[str, str, str]]:
+    """(output name, source column, 'r'|'s') for each pair output column."""
+    return [(f"{p}_{c}", c, p) for p in ("r", "s") for c in [ts_col, *payload_cols]]
+
+
+def join_spec(
+    keys: list[str],
+    ts_col: str,
+    payload_cols: list[str],
+    delta_us: float | None,
+    ttl_us: int | None,
+    in_order: bool,
+) -> Operator:
+    """The :class:`~.sealed.Operator` of :func:`streaming_nn_join`: rows
+    arrive with ``__side`` (int8, 0 = r) and unset ``__alpha`` /
+    ``__beta`` decision flags, and are buffered with their event time and
+    payload; the summary holds the pending pairs."""
+    proj = _projection(ts_col, payload_cols)
+    out_cols = [*keys, *(name for name, _, _ in proj)]
+
+    def advance(buf: pd.DataFrame | None, pend: pd.DataFrame | None, wm_us: int):
+        out, wm_blocked = None, False
+        if not empty(buf):
+            buf, pend, out, wm_blocked = _decide(
+                _sort_buffer(buf, keys), pend, wm_us, delta_us, keys, proj, in_order=in_order
+            )
+        if ttl_us is not None and wm_us > 0:
+            # rows and pending pairs expire once the watermark is more than
+            # the TTL past them, decided or not: a row still waiting for a
+            # partner could only pair across that long a silence
+            cut = wm_us - ttl_us
+            if not empty(buf):
+                buf = buf.loc[buf["__ts"].to_numpy() >= cut].reset_index(drop=True)
+            if not empty(pend):
+                pend = pend.loc[pend["__thresh"].to_numpy() >= cut].reset_index(drop=True)
+        if out is not None:
+            out = out[out_cols]
+        if wm_blocked:
+            return out, buf, pend, wm_us + 1
+        # re-fire at the earliest eviction even if no data arrives
+        oldest = [f[c].min() for f, c in ((buf, "__ts"), (pend, "__thresh")) if not empty(f)]
+        return out, buf, pend, None if ttl_us is None or not oldest else min(oldest) + ttl_us + 1
+
+    flags = ["__side", "__alpha", "__beta"]
+    return Operator(keys, ts_col, [*flags, ts_col, *payload_cols], advance, drop_at_wm=True)
+
+
 def streaming_nn_join(
     df: DataFrame,
     keys: list[str] | str,
@@ -423,8 +467,9 @@ def streaming_nn_join(
     """Streaming closure join over a single merged stream.
 
     ``df`` must be a streaming DataFrame with an event-time watermark on
-    ``ts_col`` (TimestampType), a ``side_col`` with values 'r'/'s', and any
-    payload columns. Output: keys + r_/s_-prefixed ts and payload columns,
+    ``ts_col`` (TimestampType), a ``side_col`` with values 'r'/'s' (any
+    other value, NULL included, fails the query), and any payload
+    columns. Output: keys + r_/s_-prefixed ts and payload columns,
     append mode, exactly-once per pair. ``n_buckets`` controls state-group
     fan-out (default 8 × defaultParallelism) and is recorded in the state:
     resuming a checkpoint under another value raises ValueError, because
@@ -447,15 +492,12 @@ def streaming_nn_join(
     longer than the TTL) is not emitted. Without it, state holds O(1) rows
     per ever-seen series.
 
-    Watermark boundary contract: arrivals with event time strictly below
-    the current watermark are dropped, and decisions treat the at-or-below
-    region as final — so a row whose event time EQUALS the watermark must
-    arrive in the same micro-batch that advanced it (the staging writers
-    guarantee this with µs-unique timestamps per chunk; see
-    ``streaming/sealed.py`` for the keep-at-watermark variant of the
-    boundary the other stateful operators use). State shares their
-    ``(buf, summ)`` Arrow IPC codec (``summ`` holds the pending pairs),
-    bucketing and wiring.
+    Watermark boundary contract: decisions treat the at-or-below region
+    as final, so an arriving row at or below the current watermark is
+    dropped, and a row whose event time EQUALS the watermark must arrive
+    in the same micro-batch that advanced it (the staging writers
+    guarantee this with µs-unique timestamps per chunk). The join runs on
+    the :mod:`.sealed` skeleton.
 
     ``assume_in_order``: adopt the reference's per-stream in-order arrival
     contract (README:220-230) — decisions finalize on data arrival instead
@@ -475,127 +517,11 @@ def streaming_nn_join(
         [df.schema[k] for k in keys_l]
         + [StructField(name, df.schema[c].dataType, True) for name, c, _ in proj]
     )
-    fn = join_group_fn(
-        keys_l, ts_col, side_col, payload_cols,
-        None if delta is None else float(delta) * 1e6,
-        ttl_us, n_buckets, session_tz(df.sparkSession), assume_in_order,
+    spec = join_spec(
+        keys_l, ts_col, payload_cols, None if delta is None else float(delta) * 1e6,
+        ttl_us, assume_in_order,
     )
-    return bucketed_apply(
-        df, keys_l, [ts_col, side_col, *payload_cols], n_buckets, fn, out_schema
+    shipped = side_codes(df, side_col, ("r", "s"), "streaming_nn_join").withColumns(
+        {"__alpha": F.lit(False), "__beta": F.lit(False)}
     )
-
-
-def _projection(ts_col: str, payload_cols: list[str]) -> list[tuple[str, str, str]]:
-    """(output name, source column, 'r'|'s') for each pair output column."""
-    return [(f"{p}_{c}", c, p) for p in ("r", "s") for c in [ts_col, *payload_cols]]
-
-
-def join_group_fn(
-    keys_l: list[str],
-    ts_col: str,
-    side_col: str,
-    payload_cols: list[str],
-    delta_us: float | None,
-    ttl_us: int | None,
-    n_buckets: int,
-    tz_name: str,
-    assume_in_order: bool,
-):
-    """The ``applyInPandasWithState`` function of :func:`streaming_nn_join`
-    over ``n_buckets`` state groups (pure python: tests drive it with
-    hand-built ``GroupState`` objects)."""
-    proj = _projection(ts_col, payload_cols)
-    out_cols = [*keys_l, *(name for name, _, _ in proj)]
-
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        buf, pend = load_state(state, n_buckets)
-
-        # watermark in the delivered rows' naive basis: pandas receives
-        # session-LOCAL naive event times while getCurrentWatermarkMs is
-        # epoch — identical under UTC, offset otherwise (timebase module)
-        wm_us = watermark_to_naive_us(
-            int(state.getCurrentWatermarkMs()), tz_name
-        )
-        new = [p for p in pdf_iter if len(p)]
-        if new:
-            np_new = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
-            ts_new = np_new[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
-            # late-row discipline: arbitrary stateful ops must drop rows at
-            # or below the watermark themselves (Spark only does this for
-            # built-in aggregations); decisions already finalized assumed
-            # no further arrivals in that region
-            if wm_us > 0:
-                keep_new = ts_new > wm_us
-                if not keep_new.all():
-                    np_new = np_new.loc[keep_new].reset_index(drop=True)
-                    ts_new = ts_new[keep_new]
-            if len(np_new) == 0:
-                new = []
-        if new:
-            side_vals = np_new[side_col].to_numpy()
-            bad = ~np.isin(side_vals, ("r", "s"))
-            if bad.any():
-                # fail fast: a null/unknown side (e.g. an unrouted quantity
-                # from route_side) would silently corrupt the pair set
-                raise ValueError(
-                    f"streaming_nn_join: {side_col!r} must be 'r'/'s'; got "
-                    f"{sorted(set(map(str, side_vals[bad])))[:5]}"
-                )
-            add = pd.DataFrame(
-                {
-                    "__ts": ts_new,
-                    "__side": np.where(side_vals == "r", 0, 1).astype(np.int8),
-                    "__alpha": np.zeros(len(np_new), dtype=bool),
-                    "__beta": np.zeros(len(np_new), dtype=bool),
-                    ts_col: np_new[ts_col].to_numpy(),
-                }
-            )
-            for k in keys_l:
-                add[k] = np_new[k].to_numpy()
-            for c in payload_cols:
-                add[c] = np_new[c].to_numpy()
-            buf = add if buf is None else pd.concat([buf, add], ignore_index=True)
-            buf = _sort_buffer(buf, keys_l)
-        if buf is None:
-            buf = pd.DataFrame(
-                {
-                    "__ts": np.empty(0, dtype=np.int64),
-                    "__side": np.empty(0, dtype=np.int8),
-                    "__alpha": np.empty(0, dtype=bool),
-                    "__beta": np.empty(0, dtype=bool),
-                }
-            )
-            for c in [ts_col, *keys_l, *payload_cols]:
-                buf[c] = []
-
-        buf, pend, out, wm_blocked = _decide(
-            buf, pend, wm_us, delta_us, keys_l, proj, in_order=assume_in_order
-        )
-        if ttl_us is not None and wm_us > 0:
-            # rows and pending pairs expire once the watermark is more than
-            # the TTL past them, decided or not: a row still waiting for a
-            # partner could only pair across that long a silence
-            cut = wm_us - ttl_us
-            buf = buf.loc[buf["__ts"].to_numpy() >= cut].reset_index(drop=True)
-            if not empty(pend):
-                pend = pend.loc[pend["__thresh"].to_numpy() >= cut].reset_index(drop=True)
-        if not len(buf) and empty(pend):
-            # drained (everything TTL-evicted): idle groups keep no state rows
-            if state.exists:
-                state.remove()
-        else:
-            store_state(state, buf, pend, n_buckets)
-            if wm_blocked:
-                state.setTimeoutTimestamp(max(int(state.getCurrentWatermarkMs()) + 1, 1))
-            elif ttl_us is not None:
-                # re-fire at the earliest eviction even if no data arrives
-                oldest = [buf["__ts"].min()] if len(buf) else []
-                if not empty(pend):
-                    oldest.append(pend["__thresh"].min())
-                arm_expiry(state, wm_us, min(oldest) + ttl_us + 1)
-        if out is not None and len(out):
-            yield out[out_cols]
-
-    return fn
+    return sealed_stream(shipped, spec, n_buckets, out_schema)

@@ -16,7 +16,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from statefulstreamprocessor_spark.streaming import sealed
 from statefulstreamprocessor_spark.streaming.sessionize import sessionize_spec
-from statefulstreamprocessor_spark.streaming.stateful_join import join_group_fn
+from statefulstreamprocessor_spark.streaming.stateful_join import join_spec
 
 ROWS = pd.DataFrame({
     "user": [1, 1, 2],
@@ -33,7 +33,10 @@ def _sessionize(n_buckets: int):
 
 
 def _join(n_buckets: int):
-    return join_group_fn(["user"], "ts", "side", ["v"], None, None, n_buckets, "UTC", False)
+    fn = sealed.group_fn(join_spec(["user"], "ts", ["v"], None, None, False), "UTC", n_buckets)
+    # Spark ships the side as a tinyint code and the decision flags unset
+    ship = lambda p: p.assign(__side=(p["side"] == "s").astype("int8"), __alpha=False, __beta=False)  # noqa: E731
+    return lambda key, pdfs, state: fn(key, map(ship, pdfs), state)
 
 
 OPS = {"sessionize": (_sessionize, ["user", "ts", "id"]), "join": (_join, ["user", "ts", "side", "v"])}

@@ -1616,3 +1616,75 @@ def test_streaming_join_equals_batch_across_dst(spark, tz):
             assert (cross in {p[:2] for p in batch}) == (delta == 6000.0), batch
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def _join_files_run(spark, tmp_path, files):
+    """Replay ``files`` (lists of (user_id, ts, side, v) rows) one file
+    per trigger through ``streaming_nn_join`` (watermark 0 s, one state
+    group) into parquet; returns the output rows."""
+    from statefulstreamprocessor_spark.streaming.stateful_join import (
+        streaming_nn_join,
+    )
+
+    in_dir = str(tmp_path / "input")
+    os.makedirs(in_dir)
+    for i, rows in enumerate(files):
+        pd.DataFrame(rows, columns=["user_id", "ts", "side", "v"]).astype(
+            {"side": "string", "v": "Int64"}
+        ).to_parquet(
+            os.path.join(in_dir, f"part-{i:03d}.parquet"),
+            index=False, coerce_timestamps="us",
+        )
+    raw = (
+        spark.readStream.schema("user_id bigint, ts timestamp_ntz, side string, v bigint")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    stream = raw.select(
+        "user_id", F.col("ts").cast("timestamp").alias("ts"), "side", "v"
+    ).withWatermark("ts", "0 seconds")
+    q = (
+        streaming_nn_join(stream, ["user_id"], "ts", "side", n_buckets=1)
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.read.parquet(str(tmp_path / "out")).collect()
+
+
+@pytest.mark.parametrize("bad", ["x", None], ids=["unknown", "null"])
+def test_streaming_join_bad_side_fails_even_when_late(spark, tmp_path, bad):
+    """Behaviour change: the side code is built in Spark before the late
+    boundary, so a NULL or unknown side fails the query even on a row
+    below the watermark, where it used to vanish with the late rows."""
+    import datetime
+
+    t0 = datetime.datetime(2024, 7, 1)
+    files = [
+        [(1, t0, "r", 1), (1, t0 + datetime.timedelta(seconds=100), "s", 2)],
+        [(2, t0, bad, 3)],  # below the watermark t0 + 100 s
+    ]
+    got = "x" if bad else "NULL"
+    with pytest.raises(Exception, match=f"streaming_nn_join: 'side' must be 'r'/'s'; got {got}"):
+        _join_files_run(spark, tmp_path, files)
+
+
+def test_streaming_join_bigint_payload_exact(spark, tmp_path):
+    """A buffered bigint payload ≥ 2⁵³ stays exact when a later trigger's
+    batch carries a NULL in that column (it reaches pandas as float64),
+    through the buffer and the output batches alike."""
+    import datetime
+
+    big = (1 << 53) + 1  # not representable in float64
+    t0 = datetime.datetime(2024, 7, 1)
+    files = [
+        [(7, t0, "r", big)],
+        [(7, t0 + datetime.timedelta(seconds=10), "s", None)],
+        # flush: the watermark passes the pair
+        [(-1, t0 + datetime.timedelta(hours=2), "r", 0)],
+    ]
+    got = [(r["r_v"], r["s_v"]) for r in _join_files_run(spark, tmp_path, files)]
+    assert got == [(big, None)], got
